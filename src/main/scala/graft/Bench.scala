@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Driver-run benchmark: one JSON line with per-query wall times at
-  * `SPARK_GRAFT_SF_DIR`.
+/** Driver-run benchmark: per-query wall times at `SPARK_GRAFT_SF_DIR`
+  * on `SPARK_GRAFT_CPUS` local cores, printed as a full-precision
+  * `queries_full` JSON line followed by the compact tail of
+  * [[renderTail]].
   *
   * A first untimed warm-up pass runs every query so the measured
   * numbers report steady-state engine throughput rather than one-off
@@ -61,33 +61,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0"
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt.max(1)
     val peersAtStart = liveGraftPeers()
-    // scale-aware initial fan-out (r15): shuffle.partitions stays the
-    // static core count (streaming state stores and any non-adaptive
-    // path keep their round-over-round layout), but the AQE initial
-    // partition number derives from the input dir's bytes so pinned
-    // shuffle_hash builds fit execution memory at ANY SF — see
-    // EngineDefaults.initialShufflePartitions
-    val spark = graft.core.EngineDefaults.scaled(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus), sfDir, cpus.toInt)
-      .config("spark.sql.session.timeZone", "UTC")
-      // default 100-entry codegen class cache evicts between the
-      // warm-up and measured passes with ~90 queries in flight,
-      // re-paying multi-second janino compiles for the widest plans
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.EngineDefaults.session(sfDir,
+      graft.core.EngineDefaults.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k=v": ad-hoc optimizer-conf A/B runs
-    // (same contract as graft.Explain; protocol legs leave it unset)
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k.trim, v.trim)
-    })
     // SPARK_GRAFT_EXCLUDE: comma-separated prefixes to leave out of a
     // run (e.g. "c_" to skip the engine WRITE gates at a scale factor
     // whose transient write+shuffle footprint exceeds the local disk —
@@ -143,6 +122,7 @@ object Bench {
         (System.nanoTime() - t0) / 1e9
       }
       graft.queries.Q.cleanScratch(spark)
+      graft.queries.GateCache.release(spark)
       // Shuffle files are reaped by ContextCleaner only when the
       // driver GCs — a 64 GB heap can go many corpus-scale queries
       // without one, stacking tens of GB of dead shuffle data (the
@@ -195,54 +175,53 @@ object Bench {
       .replace("\"", "\\\"") + "\"").mkString("[", ",", "]")
     val fullLine = s"""{"metric":"queries_full","value":$total,"unit":"sec","queries":$qs,"qspreads":$qspreads,"sf":"$sfDir","runs":$runs,"spread":$spread,"total_ok":$totalOk,"n_failed":${failed.size},"failed":$failedJson,"contended":${peers.size},"peers":$peersJson}"""
     println(fullLine)
-    // Headline line LAST and compact (≤ ~1.5 KB): aggregates plus the
-    // 25 slowest queries at 3 decimals — everything a regression read
-    // needs, sized to survive the driver's tail capture intact. The
-    // truncated per-query map is named "slowest" (r10; was "queries"),
-    // so a parser of the old single-line format fails loudly instead of
-    // silently reading a 25-key subset as the full map.
-    def r3(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
-    val slow = ok.sortBy(n => -med(n)).take(25)
-      .map(n => "\"" + n + "\":" + r3(med(n))).mkString("{", ",", "}")
-    val headline = s"""{"metric":"total","value":$total,"unit":"sec","slowest":$slow,"n_queries":${names.size},"queries_shown":"25 slowest of ${names.size}; full map on queries_full line and in bench_full.json","sf":"$sfDir","runs":$runs,"spread":${r3(spread)},"total_ok":${r3(totalOk)},"n_failed":${failed.size},"failed":$failedJson,"contended":${peers.size}}"""
+    val tail = renderTail(names, med, failed.toSeq, sfDir, runs, spread,
+      peers.size)
     // Machine-parseable artifacts: stdout framing (sbt's [info]/[success]
     // wrappers) defeated tail-parsing for nine straight rounds, so the
     // same two JSON documents are also written as files in the CWD the
     // driver launches from (the repo root).
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("bench_headline.json"), headline + "\n")
+      java.nio.file.Paths.get("bench_headline.json"), tail.last + "\n")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_full.json"), fullLine + "\n")
-    // Driver-visible per-query map (r16, PERF_r15 postmortem): the
-    // full-precision map lives on the queries_full line (~5 KB) and in
-    // bench_full.json, but the driver's regression comparator only sees
-    // a 2000-char stdout TAIL — r15's PERF came back with n_common: 0
-    // because no line that fits the window carried the map. The map
-    // itself (137 keys × ~23 chars at 3 decimals) can never fit one
-    // window together with the headline, so it is chunked into ≤900-char
-    // {"metric":"queries_part","i":I,"k":K,...} lines printed right
-    // before the final headline: a tail reader always gets the last
-    // chunk(s) intact, and a whole-stdout reader reconstructs all K.
-    val partLines = {
-      val pairs = names.map(n =>
-        "\"" + n + "\":" + med.get(n).map(r3).getOrElse("null"))
-      val chunks = scala.collection.mutable.ArrayBuffer(
-        scala.collection.mutable.ArrayBuffer[String]())
-      pairs.foreach { p =>
-        if (chunks.last.map(_.length + 1).sum + p.length > 900)
-          chunks += scala.collection.mutable.ArrayBuffer[String]()
-        chunks.last += p
-      }
-      val k = chunks.size
-      chunks.zipWithIndex.map { case (c, i) =>
-        s"""{"metric":"queries_part","i":$i,"k":$k,"queries":${
-          c.mkString("{", ",", "}")},"sf":"$sfDir","runs":$runs}"""
-      }.toSeq
-    }
     spark.stop()
     // Printed after SparkSession teardown so no late Spark/log4j writer
     // can interleave; the compact headline stays the ABSOLUTE last line.
-    partLines.foreach(println)
-    println(headline)
+    tail.foreach(println)
+  }
+
+  /** The driver-visible stdout tail: the per-key medians (`null` for a
+    * failed key) in `queries_part` lines, then the compact headline,
+    * which must stay the LAST line.
+    *
+    * The full-precision map lives on the queries_full line and in
+    * bench_full.json, but the driver's regression comparator only sees
+    * a ~3.5 KB stdout TAIL. So seconds print at 2 decimals, the
+    * headline names only the 5 slowest keys, and the map is chunked
+    * into ≤1200-char `{"metric":"queries_part","i":I,"k":K,...}` lines:
+    * a whole-tail reader reconstructs all K, and a narrower one still
+    * gets the last chunks intact.
+    */
+  def renderTail(names: Seq[String], med: Map[String, Double],
+      failed: Seq[String], sfDir: String, runs: Int, spread: Double,
+      contended: Int): Seq[String] = {
+    def r2(d: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, d)
+    def obj(keys: Seq[String]): String = keys.map(n =>
+      "\"" + n + "\":" + med.get(n).map(r2).getOrElse("null"))
+      .mkString("{", ",", "}")
+    val chunks = names.foldLeft(Vector(Vector.empty[String])) { (cs, n) =>
+      if (obj(cs.last :+ n).length > 1200) cs :+ Vector(n)
+      else cs.init :+ (cs.last :+ n)
+    }
+    val parts = chunks.zipWithIndex.map { case (c, i) =>
+      s"""{"metric":"queries_part","i":$i,"k":${chunks.size},"queries":${obj(c)}}"""
+    }
+    val totalOk = med.values.sum
+    val total = if (failed.isEmpty) r2(totalOk) else "null"
+    val slowest = obj(med.keys.toSeq.sortBy(n => (-med(n), n)).take(5))
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val headline = s"""{"metric":"total","value":$total,"unit":"sec","slowest":$slowest,"n_queries":${names.size},"sf":"$sfDir","runs":$runs,"spread":${r2(spread)},"total_ok":${r2(totalOk)},"n_failed":${failed.size},"failed":$failedJson,"contended":$contended}"""
+    parts :+ headline
   }
 }

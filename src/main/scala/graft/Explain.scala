@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time (3-run median after warm-up) and print the plan of
   * selected queries at a given SF dir. Usage:
   * `runMain graft.Explain <sfDir> [query ...]` — no args = all.
@@ -13,32 +11,11 @@ object Explain {
     val names =
       if (args.length > 1) args.tail.toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_SHUFFLE: decouple shuffle partition count from the
-    // thread count (spill experiments at big SFs)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    // scale-aware AQE initial fan-out (r15) — same derivation as Bench,
-    // so isolated rows measure the same plans the protocol legs ran.
-    // An EXPLICIT SPARK_GRAFT_SHUFFLE pins both knobs instead (the
-    // spill/fan-out A/B contract: one number, no hidden override).
-    val base = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (sys.env.contains("SPARK_GRAFT_SHUFFLE"))
-        graft.core.EngineDefaults(base.config(
-          "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-          shuffle))
-      else graft.core.EngineDefaults.scaled(base, sfDir, cpus.toInt))
-      .getOrCreate()
+    // the same session as graft.Bench, so isolated rows measure the
+    // plans the bench ran
+    val spark = graft.core.EngineDefaults.session(sfDir,
+      graft.core.EngineDefaults.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k=v": ad-hoc optimizer-conf A/B runs
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k.trim, v.trim)
-    })
     // Same action as graft.Bench since r10: the FULL physical plan
     // (count() lets Catalyst prune pure-projection work, so numbers
     // here would not be comparable with bench/protocol rows).
@@ -58,6 +35,8 @@ object Explain {
         df.collect()
         println(df.queryExecution.executedPlan.toString)
       }
+      graft.queries.Q.cleanScratch(spark)
+      graft.queries.GateCache.release(spark)
     }
     spark.stop()
   }

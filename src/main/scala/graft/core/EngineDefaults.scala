@@ -2,8 +2,9 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Session defaults every graft entry point (Bench / Verify / Explain /
-  * tests) applies on top of its own master/parallelism settings.
+/** The one place graft builds a SparkSession: [[session]] is what
+  * Bench, Verify, Explain and the test suites call, and [[scaled]]
+  * holds the engine conf it applies.
   *
   * The join policy encodes the library's scale stance: no query may
   * FORCE a broadcast of a corpus-proportional side (`broadcast()`
@@ -42,7 +43,7 @@ object EngineDefaults {
     * partitions from data size, so every pinned-build query silently
     * carried an SF ceiling.
     *
-    * Fix: entry points derive the ADAPTIVE INITIAL fan-out
+    * Fix: [[session]] derives the ADAPTIVE INITIAL fan-out
     * (`spark.sql.adaptive.coalescePartitions.initialPartitionNum`)
     * from the input dataset's on-disk bytes — one initial partition
     * per 64 MB of input, floored at the core count and capped at 4096.
@@ -88,14 +89,29 @@ object EngineDefaults {
     }
   }
 
-  /** [[apply]] plus the scale-aware fan-out for a known input dir. */
-  def scaled(b: SparkSession.Builder, sfDir: String,
-      cpus: Int): SparkSession.Builder =
-    apply(b).config(
-      "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-      initialShufflePartitions(dataDirBytes(sfDir), cpus).toString)
+  /** Default local parallelism: `SPARK_GRAFT_CPUS`, else 4. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)
 
-  def apply(b: SparkSession.Builder): SparkSession.Builder = b
+  /** A `local[cpus]` session over the inputs under `sfDir`: static
+    * shuffle partitions = cpus (streaming state stores and any
+    * non-adaptive path keep that layout), the scale-aware AQE initial
+    * fan-out, UTC, a codegen class cache big enough that a warm-up
+    * pass over every key is not evicted before the measured passes
+    * (the 100-entry default re-paid multi-second janino compiles for
+    * the widest plans), and no UI.
+    */
+  def session(sfDir: String, cpus: Int): SparkSession =
+    scaled(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString), sfDir, cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+
+  /** The engine conf plus the scale-aware fan-out for a known input dir. */
+  def scaled(b: SparkSession.Builder, sfDir: String,
+      cpus: Int): SparkSession.Builder = b
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
     // testdata timestamps are naive (no isAdjustedToUTC); read them as
@@ -110,4 +126,6 @@ object EngineDefaults {
     // of GB of dead shuffle files between natural GCs (observed at
     // sf100: ~31 GB). The periodic-GC floor bounds that lag.
     .config("spark.cleaner.periodicGC.interval", "2min")
+    .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+      initialShufflePartitions(dataDirBytes(sfDir), cpus).toString)
 }

@@ -84,8 +84,8 @@ object LlmPipeline extends QueryModule {
         // r15 change was killing still executes exactly once. The
         // GateCache registration recomputes per invocation (the
         // s4.reps pattern — no cross-run reuse).
-        val qualified = GateCache.swap("d8.batch",
-          batch.select(col("doc_id"), col("lang"), col("sig")).persist())
+        val qualified = GateCache.persist("d8.batch",
+          batch.select(col("doc_id"), col("lang"), col("sig")))
         val batchKeep = qualified
           .groupBy(col("sig")).agg(min(col("doc_id")).as("doc_id"))
         batchKeep
@@ -165,8 +165,8 @@ object LlmPipeline extends QueryModule {
         // (r12 stage attribution: 88.8 → 36.8 s at sf100, ~0.94x vs
         // DuckDB). A bench outgrowing the threshold degrades back to
         // the shuffle semi — size-checked, never forced.
-        val bench = sh.filter(col("doc_id") % 97 === 0)
-          .select(col("g")).distinct().cache()
+        val bench = GateCache.persist("d9.bench",
+          sh.filter(col("doc_id") % 97 === 0).select(col("g")).distinct())
         bench.count() // materialize: the probe below plans on true size
         val cnt = sh.filter(col("doc_id") % 97 =!= 0)
           .join(bench, Seq("g"), "left_semi")
@@ -366,7 +366,8 @@ object LlmPipeline extends QueryModule {
         // A/B: 27.3/28.1 → 24.7/23.5 s medians), degrading back to
         // the shuffle join at the corpus scale where the vocab
         // outgrows the threshold.
-        val wf = toks.groupBy(col("w")).agg(count(lit(1)).as("wf")).cache()
+        val wf = GateCache.persist("t10.wf",
+          toks.groupBy(col("w")).agg(count(lit(1)).as("wf")))
         wf.count()
         // r15: the corpus token total is Σwf BY DEFINITION, and wf is
         // already cached — the old `toks.count()` re-ran the full

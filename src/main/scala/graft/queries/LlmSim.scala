@@ -353,7 +353,7 @@ object LlmSim extends QueryModule {
     // (guide §1.2 step 1, §5 caching-when-reused). GateCache
     // registration recomputes per invocation and releases the previous
     // handle (the adjudicated s4.reps pattern — no cross-run reuse).
-    val tri = GateCache.swap(cacheKey, tri0.persist())
+    val tri = GateCache.persist(cacheKey, tri0)
     // All-inner shape (r15; D4Prof-adjudicated across three arms at
     // sf0.1/sf10/sf100). thresh > 0 (required below) means a pair
     // with ZERO shared shingles can never reach the output, so the
@@ -440,11 +440,10 @@ object LlmSim extends QueryModule {
         // materializes it in-flight, no extra action wave — and the
         // GateCache registration means the next s4/s4b invocation
         // releases this copy (the d6 working-set pattern).
-        val reps = graft.queries.GateCache.swap("s4.reps",
+        val reps = GateCache.persist("s4.reps",
           e.groupBy(col("embedding"))
             .agg(min(col("vec_id")).as("vec_id"))
-            .select(col("vec_id"), col("embedding"))
-            .persist())
+            .select(col("vec_id"), col("embedding")))
         val centroids = trainCentroids(s,
           e.filter(col("vec_id") < 5000)
             .select(col("vec_id"), col("embedding")), k = 16, iters = 3)
@@ -461,10 +460,10 @@ object LlmSim extends QueryModule {
             lead(col("vec_id"), i).over(wCell)): _*))
           .select(col("vec_id"), explode(col("nbrs")).as("nbr_id"))
           .filter(col("nbr_id").isNotNull)
-        val candIds = graft.queries.GateCache.swap("s4_cand", fwd
+        val candIds = GateCache.persist("s4.cand", fwd
           .union(fwd.select(col("nbr_id").as("vec_id"),
             col("vec_id").as("nbr_id")))
-          .distinct().cache())
+          .distinct())
         def scorePairs(cand: DataFrame): DataFrame = cand
           .join(reps.select(col("vec_id"), col("embedding").as("xv")),
             Seq("vec_id"))
@@ -496,8 +495,7 @@ object LlmSim extends QueryModule {
         // anti-join and jointly cover candIds ∪ expanded exactly once —
         // identical input to the final rank window, cosine is a pure
         // function of the pair.
-        val score1 = graft.queries.GateCache.swap("s4.score1",
-          scorePairs(candIds).persist())
+        val score1 = GateCache.persist("s4.score1", scorePairs(candIds))
         val g0 = score1
           .withColumn("rank", row_number().over(w))
           .filter(col("rank") <= 8)
@@ -548,11 +546,10 @@ object LlmSim extends QueryModule {
         // expansion — two executions of the corpus exact-collapse
         // groupBy. Persist once per invocation (GateCache — the
         // s4.reps pattern, released on the next s3/s3b invocation).
-        val grouped = GateCache.swap("s3.grouped",
+        val grouped = GateCache.persist("s3.grouped",
           cand0.groupBy(col("embedding"))
             .agg(min(col("vec_id")).as("rep_id"),
-              collect_list(col("vec_id")).as("member_ids"))
-            .persist())
+              collect_list(col("vec_id")).as("member_ids")))
         val memberMap = grouped.select(col("rep_id"),
           explode(col("member_ids")).as("cand_id"))
         val cands = assign(
@@ -618,9 +615,8 @@ object LlmSim extends QueryModule {
         // 16-way minhash aggregate over the shingle stream. Persist the
         // narrow (doc_id, 16-long array) rows once per invocation
         // (GateCache — the s4.reps pattern, no cross-run reuse).
-        val mhArr = GateCache.swap("d2.mh", mh.select(col("doc_id"),
-          array((0 until 16).map(i => col(s"mh_$i")): _*).as("sig"))
-          .persist())
+        val mhArr = GateCache.persist("d2.mh", mh.select(col("doc_id"),
+          array((0 until 16).map(i => col(s"mh_$i")): _*).as("sig")))
         val cands = minhashCandidates(mhArr)
         // Pre-filter floor = 2 matching minhashes of 16. With r=2
         // banding every candidate pair already shares both minhashes
@@ -664,13 +660,12 @@ object LlmSim extends QueryModule {
         // verify side's shingle stream — two executions of the corpus
         // scan + md5 collapse. Persist once per invocation (GateCache
         // releases the previous handle; same pattern as s4.reps).
-        val reps = GateCache.swap("d4.reps", t(s, dir, "documents")
+        val reps = GateCache.persist("d4.reps", t(s, dir, "documents")
           .groupBy(md5(lower(trim(regexp_replace(col("text"), "\\s+", " "))))
             .as("fp"))
           .agg(min(col("doc_id")).as("doc_id"),
             min_by(col("text"), col("doc_id")).as("text"))
-          .select(col("doc_id"), col("text"))
-          .persist())
+          .select(col("doc_id"), col("text")))
         val sim = simhash64(reps)
           .select(col("doc_id"), col("simhash"))
         val chunks = sim.select(col("doc_id"), col("simhash"),
@@ -698,11 +693,10 @@ object LlmSim extends QueryModule {
         // and this window from the corpus. Persist the one window pass
         // (narrow rows: ids, 4 hash chunks, 8-struct lead array) and
         // read it thrice instead (guide §1.2 step 1).
-        val ranked = GateCache.swap("d4.ranked", chunks
+        val ranked = GateCache.persist("d4.ranked", chunks
           .withColumn("rn", row_number().over(wb))
           .withColumn("nbrs", array((1 to 8).map(i =>
-            lead(struct(col("doc_id"), col("simhash")), i).over(wb)): _*))
-          .persist())
+            lead(struct(col("doc_id"), col("simhash")), i).over(wb)): _*)))
         val exactBucket = ranked
           .select(col("doc_id").as("a"), col("simhash").as("sim_a"),
             explode(col("nbrs")).as("nb"))
@@ -1104,11 +1098,10 @@ object LlmSim extends QueryModule {
         // final keep-list anti-join — two executions of the corpus
         // union + exact-collapse groupBy. Persist once per invocation
         // (GateCache releases the previous handle; the s4.reps pattern).
-        val reps = graft.queries.GateCache.swap("d11.reps",
+        val reps = GateCache.persist("d11.reps",
           corpus.groupBy(col("embedding"))
             .agg(min(col("vec_id")).as("vec_id"))
-            .select(col("vec_id"), col("embedding"))
-            .persist())
+            .select(col("vec_id"), col("embedding")))
         // 2. bounded-sample quantizer (shared machinery with s3)
         val centroids = trainCentroids(s,
           e0.filter(col("vec_id") < 5000)

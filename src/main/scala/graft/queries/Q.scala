@@ -93,33 +93,44 @@ trait QueryModule {
   def queries: Map[String, Q]
 }
 
-/** Per-session registry for the few persisted handles a gate must keep
-  * alive across its own build/first-action boundary (a lazily-returned
-  * DataFrame cannot unpersist its working set before the caller's
-  * action runs). Registering a handle under a stable key releases the
-  * PREVIOUS handle for that key, so a long-lived session (bench loops,
-  * repeated driver invocations) holds at most one cached copy per key
-  * instead of accumulating dead cached RDDs forever.
+/** Owner of every working set a gate persists. A gate cannot unpersist
+  * its own working set (the lazily-returned DataFrame still needs it
+  * when the caller's action runs), so it hands the set to [[persist]]
+  * under a stable key and the harness calls [[release]] once the key's
+  * actions are done.
+  *
+  * Release-before-persist: [[persist]] unpersists the handle this
+  * session registered under `key` BEFORE persisting the new one. The
+  * shared CacheManager matches cache entries by plan equality, so a
+  * re-run gate's `persist()` of an equal plan is a no-op that aliases
+  * the previous entry — unpersisting the previous handle afterwards
+  * would drop the entry both share, and the new handle would run
+  * uncached. Each call therefore pays its own cache fill and a session
+  * holds at most one cached copy per key.
   */
 object GateCache {
-  private val handles =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val Level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-  def swap(key: String, df: DataFrame): DataFrame = {
-    // identityHashCode, not hashCode: two live sessions must never
-    // share a key (a collision would unpersist the other session's
-    // working set); stopped sessions are evicted below so the map
-    // cannot strongly reference dead plans for the JVM lifetime
-    val session = df.sparkSession
-    val k = System.identityHashCode(session) + ":" + key
-    val prev = handles.put(k, df)
-    if (prev != null && (prev ne df)) prev.unpersist(false)
-    handles.forEach { (key, h) =>
-      if (h.sparkSession.sparkContext.isStopped) handles.remove(key, h)
-    }
+  // keyed by session identity (SparkSession has reference equality):
+  // the same gate key from two live sessions must never collide
+  private val handles =
+    scala.collection.mutable.Map[(SparkSession, String), DataFrame]()
+
+  /** Register `df` as this session's working set for `key` and persist
+    * it, after releasing the previous handle for `key`. */
+  def persist(key: String, df: DataFrame): DataFrame = synchronized {
+    handles.remove((df.sparkSession, key)).foreach(_.unpersist(false))
+    // stopped sessions' handles are dropped so the map cannot strongly
+    // reference dead plans for the JVM lifetime
+    handles.filterInPlace { case ((owner, _), _) =>
+      !owner.sparkContext.isStopped }
+    handles((df.sparkSession, key)) = df.persist(Level)
     df
   }
 
-  /** Number of live registered handles (for specs). */
-  def size: Int = handles.size
+  /** Unpersist every handle `session` registered. */
+  def release(session: SparkSession): Unit = synchronized {
+    handles.keys.filter(_._1 eq session).toList
+      .foreach(k => handles.remove(k).foreach(_.unpersist(false)))
+  }
 }

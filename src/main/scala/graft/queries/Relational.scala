@@ -116,7 +116,8 @@ object Relational extends QueryModule {
         // its semi shuffle entirely, degrading back to the shuffle
         // semi at the corpus scale where the key set outgrows the
         // threshold.
-        val custKeys = cust.select(col("c_custkey")).cache()
+        val custKeys = GateCache.persist("q3.custKeys",
+          cust.select(col("c_custkey")))
         custKeys.count() // materialize: the semi below plans on true size
         val ordF = ord
           .join(custKeys, col("o_custkey") === col("c_custkey"), "left_semi")
@@ -218,10 +219,9 @@ object Relational extends QueryModule {
         val asiaN = nation
           .join(broadcast(region), col("n_regionkey") === col("r_regionkey"))
           .select(col("n_nationkey"), col("n_name"))
-        val custA = cust
+        val custA = GateCache.persist("q5.custA", cust
           .join(broadcast(asiaN), col("c_nationkey") === col("n_nationkey"))
-          .select(col("c_custkey"), col("n_nationkey"))
-          .cache()
+          .select(col("c_custkey"), col("n_nationkey")))
         custA.count() // materialize: joins below plan on true size
         // r13 bloom-prefilter A/B, REJECTED with numbers: ordA is ~10%
         // selective over the 600M-row lineitem exchange, and Catalyst's
@@ -470,7 +470,8 @@ object Relational extends QueryModule {
         // groups.
         val counts = a.union(b).groupBy(col("key"))
           .agg(count(lit(1)).as("c"))
-        counts.agg(sum(col("c")).as("n_all"),
+        // coalesce: sum over zero groups is NULL, count(*) is 0
+        counts.agg(coalesce(sum(col("c")), lit(0L)).as("n_all"),
           count(lit(1)).as("n_distinct"))
       },
       Some("""SELECT
@@ -516,10 +517,10 @@ object Relational extends QueryModule {
           .groupBy(col("o_custkey"))
           .agg(max(col("in95")).as("a95"), max(col("in96")).as("a96"))
         flags.agg(
-            sum(when(col("a95") === 1 && col("a96") === 1, 1L)
-              .otherwise(0L)).as("n_inter"),
-            sum(when(col("a95") === 1 && col("a96") === 0, 1L)
-              .otherwise(0L)).as("n_exc"))
+            coalesce(sum(when(col("a95") === 1 && col("a96") === 1, 1L)
+              .otherwise(0L)), lit(0L)).as("n_inter"),
+            coalesce(sum(when(col("a95") === 1 && col("a96") === 0, 1L)
+              .otherwise(0L)), lit(0L)).as("n_exc"))
           .select(explode(map(
             lit("intersect"), col("n_inter"),
             lit("except"), col("n_exc"))).as(Seq("op", "n")))

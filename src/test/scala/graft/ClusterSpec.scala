@@ -46,7 +46,10 @@ class ClusterSpec extends AnyFunSuite {
   test("repeated d6 invocations do not accumulate cached RDDs") {
     // the working set persists across the build/action boundary, so a
     // single live handle is expected — but re-running the gate must
-    // REPLACE it (GateCache), not pile up a new copy per invocation
+    // REPLACE it (GateCache), not pile up a new copy per invocation.
+    // RDDs persisted before this test (e.g. the components test's
+    // localCheckpoints, reaped only on GC) are not d6's.
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     SparkEntry.queries("d6_dup_clusters")(spark, TestSpark.SF).collect()
     val after1 = spark.sparkContext.getPersistentRDDs.size
     SparkEntry.queries("d6_dup_clusters")(spark, TestSpark.SF).collect()
@@ -54,6 +57,9 @@ class ClusterSpec extends AnyFunSuite {
     val after3 = spark.sparkContext.getPersistentRDDs.size
     assert(after3 <= after1,
       s"cached RDDs grew across invocations: $after1 -> $after3")
+    graft.queries.GateCache.release(spark)
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"d6 left persisted RDDs after release: $left")
   }
 
   test("components converge on a long chain (pointer jumping)") {

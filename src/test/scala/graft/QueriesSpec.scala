@@ -45,6 +45,19 @@ class QueriesSmokeSpec extends AnyFunSuite {
     val sevens = rows.find(r => !r.isNullAt(0) && r.getLong(0) == 7).get
     assert(sevens.getLong(1) == 1 && sevens.getLong(2) == 7L)
   }
+
+  test("q14/q15 count 0 on an empty orders table, as count(*) does") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_q14").toString
+    spark.read.parquet(s"${TestSpark.SF}/orders.parquet").limit(0)
+      .write.parquet(s"$dir/orders.parquet")
+    val q14 = SparkEntry.queries("q14_union")(spark, dir).collect()
+    assert(q14.map(r => (r.get(0), r.get(1))).toSeq == Seq((0L, 0L)),
+      s"q14 on empty orders: ${q14.toSeq}")
+    val q15 = SparkEntry.queries("q15_setops")(spark, dir).collect()
+    assert(q15.map(r => (r.getString(0), r.get(1))).toSeq ==
+      Seq(("except", 0L), ("intersect", 0L)),
+      s"q15 on empty orders: ${q15.toSeq}")
+  }
 }
 
 /** s2's LSH candidates must be a subset of the exact ranking and

@@ -103,4 +103,19 @@ class ShuffleSizingSpec extends AnyFunSuite {
         .forEach(p => Files.delete(p))
     }
   }
+
+  test("session() applies the factory settings") {
+    // TestSpark's session comes from the factory with 4 cpus over
+    // sf0.001, whose few MB leave the fan-out at the core-count floor
+    val spark = TestSpark.spark
+    val sc = spark.sparkContext.getConf
+    assert(spark.sparkContext.master === "local[4]")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
+    assert(spark.conf.get(
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum") === "4")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
+    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(sc.get("spark.sql.codegen.cache.maxEntries") === "10000")
+    assert(sc.get("spark.ui.enabled") === "false")
+  }
 }

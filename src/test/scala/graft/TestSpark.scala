@@ -1,22 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One shared local session for all suites. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = graft.core.EngineDefaults(SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   // overridable so the suite can run against any data root (the sf
   // dirs referenced by specs all derive from this pin)
   val SF = sys.env.getOrElse("GRAFT_TESTDATA_SF", "/root/testdata/sf0.001")
+
+  lazy val spark = {
+    val s = graft.core.EngineDefaults.session(SF, 4)
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }
