@@ -280,8 +280,6 @@ final class Catalog(val spark: SparkSession, val database: String) {
     * uniqueness guard is one map-side-combined aggregate over the
     * increment, LIMIT 1 — aggregates reach the driver, never rows);
     * nothing quadratic, nothing driver-side.
-    */
-  /** Merge (upsert) `df` into the relation on `uniqueKey`.
     *
     * `updateCondition` (optional) is a SQL boolean over aliases `t`
     * (target row) and `i` (incoming row) gating the UPDATE branch —
@@ -545,8 +543,8 @@ final class Catalog(val spark: SparkSession, val database: String) {
   /** Compact a relation to `numFiles` part files — the maintenance op
     * a 100 TB deployment runs after many small incremental writes (the
     * small-files problem). Same atomic tmp+rename swap as CTAS.
-    */
-  /** `clusterCols` (r16, guide §6 "partitioning on write determines
+    *
+    * `clusterCols` (r16, guide §6 "partitioning on write determines
     * how well readers can skip data"): compaction already pays one
     * full shuffle of the table; range-partitioning that same shuffle
     * on the given columns (instead of round-robin) costs one extra
@@ -621,19 +619,15 @@ final class Catalog(val spark: SparkSession, val database: String) {
     // dynamic-overwrite job stages under its own .spark-staging-<UUID>
     // dir — but running them strictly sequentially left most cores
     // idle through every job's range-exchange tail (each job only has
-    // numFilesPerPart output tasks). 3 jobs in flight back-fill the
-    // tails; transient scratch is now bounded by THREE partitions'
-    // footprint instead of one — still O(1) in table size, and the
-    // crash property is unchanged (completed partitions stay in
-    // place; a re-run overwrites only what it recomputes). Measured
-    // same-window at sf0.1 (c_compact_cluster gate, 3-run median):
-    // 10.04 s → 6.43 s.
-    // pool width (r16): GRAFT_CLUSTER_POOL overrides for sweeps; the
-    // default stays the r15-measured 3. Transient scratch is bounded
-    // by POOL partitions' footprint — still O(1) in table size.
-    val poolSize = sys.env.get("GRAFT_CLUSTER_POOL").map(_.toInt).getOrElse(3)
+    // numFilesPerPart output tasks). The pool width is 3 because r15
+    // measured it (c_compact_cluster gate at sf0.1, same-window 3-run
+    // median: 10.04 s sequential → 6.43 s with 3 jobs in flight), and
+    // 3 keeps transient scratch bounded by three partitions' footprint
+    // — still O(1) in table size. The crash property is unchanged:
+    // completed partitions stay in place and a re-run overwrites only
+    // what it recomputes.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      poolSize.min(jobs.size.max(1)).max(1))
+      3.min(jobs.size.max(1)))
     try {
       val ec = scala.concurrent.ExecutionContext.fromExecutor(pool)
       val writes = jobs.map { pred =>

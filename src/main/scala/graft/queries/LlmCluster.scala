@@ -156,12 +156,9 @@ object LlmCluster extends QueryModule {
         // this matters: 100x-replicated docs add zero root nodes.)
         val wp = Window.partitionBy(col("pfx"))
         val wb = Window.partitionBy(col("bag"))
-        // persisted for the solve + output double-read; GateCache owns
-        // the copy, so repeated bench/driver runs hold one working set,
-        // not an ever-growing pile of dead cached RDDs
-        val rooted = GateCache.persist("d6.rooted", keyed.select(col("doc_id"),
+        val rooted = keyed.select(col("doc_id"),
           min(col("doc_id")).over(wp).as("pr"),
-          min(col("doc_id")).over(wb).as("br")))
+          min(col("doc_id")).over(wb).as("br"))
         val redges = rooted.select(col("pr").as("src"), col("br").as("dst"))
           .filter(col("src") =!= col("dst")).distinct()
         val sym = redges

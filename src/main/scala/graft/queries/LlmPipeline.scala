@@ -78,14 +78,9 @@ object LlmPipeline extends QueryModule {
         // reaches 5M at sf100): a novel id 3M+s can equal a dupe id
         // (s+1M)+2M, and the oracle's join-back on doc_id then emits
         // TWO rows where the aggregate emits one. The join-back is
-        // therefore semantics, not plumbing — restored, but on a
-        // narrow persisted projection of the batch (doc_id, lang,
-        // sig — never the text) so the corpus-filter+md5 subtree the
-        // r15 change was killing still executes exactly once. The
-        // GateCache registration recomputes per invocation (the
-        // s4.reps pattern — no cross-run reuse).
-        val qualified = GateCache.persist("d8.batch",
-          batch.select(col("doc_id"), col("lang"), col("sig")))
+        // therefore semantics, not plumbing — restored, on a narrow
+        // projection of the batch (doc_id, lang, sig — never the text).
+        val qualified = batch.select(col("doc_id"), col("lang"), col("sig"))
         val batchKeep = qualified
           .groupBy(col("sig")).agg(min(col("doc_id")).as("doc_id"))
         batchKeep
@@ -165,9 +160,8 @@ object LlmPipeline extends QueryModule {
         // (r12 stage attribution: 88.8 → 36.8 s at sf100, ~0.94x vs
         // DuckDB). A bench outgrowing the threshold degrades back to
         // the shuffle semi — size-checked, never forced.
-        val bench = GateCache.persist("d9.bench",
+        val bench = GateCache.materialize("d9.bench",
           sh.filter(col("doc_id") % 97 === 0).select(col("g")).distinct())
-        bench.count() // materialize: the probe below plans on true size
         val cnt = sh.filter(col("doc_id") % 97 =!= 0)
           .join(bench, Seq("g"), "left_semi")
           .groupBy(col("doc_id")).agg(count(lit(1)).as("n_cont"))
@@ -366,9 +360,8 @@ object LlmPipeline extends QueryModule {
         // A/B: 27.3/28.1 → 24.7/23.5 s medians), degrading back to
         // the shuffle join at the corpus scale where the vocab
         // outgrows the threshold.
-        val wf = GateCache.persist("t10.wf",
+        val wf = GateCache.materialize("t10.wf",
           toks.groupBy(col("w")).agg(count(lit(1)).as("wf")))
-        wf.count()
         // r15: the corpus token total is Σwf BY DEFINITION, and wf is
         // already cached — the old `toks.count()` re-ran the full
         // corpus scan + explode for a number the vocab table has.

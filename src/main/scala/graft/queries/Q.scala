@@ -93,13 +93,19 @@ trait QueryModule {
   def queries: Map[String, Q]
 }
 
-/** Owner of every working set a gate persists. A gate cannot unpersist
-  * its own working set (the lazily-returned DataFrame still needs it
-  * when the caller's action runs), so it hands the set to [[persist]]
-  * under a stable key and the harness calls [[release]] once the key's
-  * actions are done.
+/** Eager size materialization, released by the harness. A gate whose
+  * next join must plan on a dimension's TRUE size (Catalyst's no-CBO
+  * estimate of a filter, distinct or aggregate is its input's size)
+  * hands that dimension to [[materialize]]: it is persisted and counted
+  * before the gate builds the join, so the size check sees the cached
+  * bytes and can plan a static broadcast. The gate cannot unpersist it
+  * (the returned DataFrame still reads the cache when the caller's
+  * action runs), so it is registered under a stable key and the harness
+  * calls [[release]] once the key's actions are done. This is the one
+  * materialization rule: a subtree that is merely read more than once
+  * is recomputed, not persisted.
   *
-  * Release-before-persist: [[persist]] unpersists the handle this
+  * Release-before-persist: [[materialize]] unpersists the handle this
   * session registered under `key` BEFORE persisting the new one. The
   * shared CacheManager matches cache entries by plan equality, so a
   * re-run gate's `persist()` of an equal plan is a no-op that aliases
@@ -116,15 +122,20 @@ object GateCache {
   private val handles =
     scala.collection.mutable.Map[(SparkSession, String), DataFrame]()
 
-  /** Register `df` as this session's working set for `key` and persist
-    * it, after releasing the previous handle for `key`. */
-  def persist(key: String, df: DataFrame): DataFrame = synchronized {
-    handles.remove((df.sparkSession, key)).foreach(_.unpersist(false))
-    // stopped sessions' handles are dropped so the map cannot strongly
-    // reference dead plans for the JVM lifetime
-    handles.filterInPlace { case ((owner, _), _) =>
-      !owner.sparkContext.isStopped }
-    handles((df.sparkSession, key)) = df.persist(Level)
+  /** Register `df` as this session's working set for `key`, persist it
+    * after releasing the previous handle for `key`, and fill the cache
+    * with a count. The count runs outside the lock, so two sessions
+    * never serialize their Spark jobs here. */
+  def materialize(key: String, df: DataFrame): DataFrame = {
+    synchronized {
+      handles.remove((df.sparkSession, key)).foreach(_.unpersist(false))
+      // stopped sessions' handles are dropped so the map cannot strongly
+      // reference dead plans for the JVM lifetime
+      handles.filterInPlace { case ((owner, _), _) =>
+        !owner.sparkContext.isStopped }
+      handles((df.sparkSession, key)) = df.persist(Level)
+    }
+    df.count()
     df
   }
 

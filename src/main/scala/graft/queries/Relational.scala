@@ -116,9 +116,8 @@ object Relational extends QueryModule {
         // its semi shuffle entirely, degrading back to the shuffle
         // semi at the corpus scale where the key set outgrows the
         // threshold.
-        val custKeys = GateCache.persist("q3.custKeys",
+        val custKeys = GateCache.materialize("q3.custKeys",
           cust.select(col("c_custkey")))
-        custKeys.count() // materialize: the semi below plans on true size
         val ordF = ord
           .join(custKeys, col("o_custkey") === col("c_custkey"), "left_semi")
           .select(col("o_orderkey"), col("o_orderdate"))
@@ -219,10 +218,9 @@ object Relational extends QueryModule {
         val asiaN = nation
           .join(broadcast(region), col("n_regionkey") === col("r_regionkey"))
           .select(col("n_nationkey"), col("n_name"))
-        val custA = GateCache.persist("q5.custA", cust
+        val custA = GateCache.materialize("q5.custA", cust
           .join(broadcast(asiaN), col("c_nationkey") === col("n_nationkey"))
           .select(col("c_custkey"), col("n_nationkey")))
-        custA.count() // materialize: joins below plan on true size
         // r13 bloom-prefilter A/B, REJECTED with numbers: ordA is ~10%
         // selective over the 600M-row lineitem exchange, and Catalyst's
         // runtime bloom can't fire here (the cached dims hide the

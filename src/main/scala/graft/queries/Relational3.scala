@@ -70,13 +70,12 @@ object Relational3 extends QueryModule {
       (s, dir) => {
         val li = t(s, dir, "lineitem")
           .filter(col("l_quantity").between(1, 50))
-        val part = GateCache.persist("q41.part", t(s, dir, "part")
+        val part = GateCache.materialize("q41.part", t(s, dir, "part")
           .filter(
             (col("p_brand") === "Brand#1" && col("p_size").between(1, 15)) ||
             (col("p_brand") === "Brand#2" && col("p_size").between(10, 30)) ||
             (col("p_brand") === "Brand#3" && col("p_size").between(20, 50)))
           .select(col("p_partkey"), col("p_brand"), col("p_size")))
-        part.count() // materialize: the join below plans on true size
         li.join(part, col("l_partkey") === col("p_partkey"))
           .filter(
             (col("p_brand") === "Brand#1" && col("p_size").between(1, 15) &&

@@ -95,10 +95,9 @@ object Relational4 extends QueryModule {
     // published 2.17 s / 3.6x row was leg-throttle noise).
     "q51_setops_all" -> Q(
       (s, dir) => {
-        val base = GateCache.persist("q51.base", t(s, dir, "lineitem")
+        val base = GateCache.materialize("q51.base", t(s, dir, "lineitem")
           .filter(col("l_orderkey") <= 1500)
           .select(col("l_orderkey"), col("l_partkey")))
-        base.count() // materialize: both set-ops read the cached rows
         val a = base.filter(col("l_orderkey") <= 1000)
           .select(col("l_partkey"))
         val b = base.filter(col("l_orderkey").between(500, 1500))
@@ -386,12 +385,10 @@ object Relational4 extends QueryModule {
         // int nation KEYS ride the corpus-scale exchanges; the ~12 B
         // name strings attach to the 1250-row aggregate at the end
         // (two 25-row broadcasts) — same trick as q5's restructure
-        val supN = GateCache.persist("q62.supN", t(s, dir, "supplier")
+        val supN = GateCache.materialize("q62.supN", t(s, dir, "supplier")
           .select(col("s_suppkey"), col("s_nationkey")))
-        supN.count() // materialize: the fact join plans on true size
-        val custN = GateCache.persist("q62.custN", t(s, dir, "customer")
+        val custN = GateCache.materialize("q62.custN", t(s, dir, "customer")
           .select(col("c_custkey"), col("c_nationkey")))
-        custN.count()
         // shuffle_hash, not sort-merge: neither side's custkey order
         // is reusable downstream (the next join keys on orderkey), so
         // hashing the dim side beats sorting 150M orders rows.

@@ -44,11 +44,11 @@ class ClusterSpec extends AnyFunSuite {
   }
 
   test("repeated d6 invocations do not accumulate cached RDDs") {
-    // the working set persists across the build/action boundary, so a
-    // single live handle is expected — but re-running the gate must
-    // REPLACE it (GateCache), not pile up a new copy per invocation.
-    // RDDs persisted before this test (e.g. the components test's
-    // localCheckpoints, reaped only on GC) are not d6's.
+    // d6 persists no working set (its rooted table is recomputed per
+    // read; GateCache holds only size materializations), so re-running
+    // the gate must not pile up cached RDDs, and release must leave
+    // none behind. RDDs persisted before this test (e.g. the components
+    // test's localCheckpoints, reaped only on GC) are not d6's.
     val before = spark.sparkContext.getPersistentRDDs.keySet
     SparkEntry.queries("d6_dup_clusters")(spark, TestSpark.SF).collect()
     val after1 = spark.sparkContext.getPersistentRDDs.size

@@ -73,6 +73,31 @@ class PlanSpec extends AnyFunSuite {
       s"q41 must not shuffle the fact side on the join key:\n$p")
   }
 
+  test("GateCache holds size materializations only: no subtree persists") {
+    // the one materialization rule: a gate persists (and counts) a
+    // dimension only so the next join plans on its true size. The
+    // dedup/ANN keys read their multiply-referenced subtrees by
+    // recompute; the size-materializing keys read one cached relation
+    // per materialized dimension.
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    def cached(q: String): Int = {
+      val df = SparkEntry.queries(q)(spark, TestSpark.SF)
+      val rels = df.queryExecution.withCachedData.collect {
+        case r: InMemoryRelation => r.cacheBuilder
+      }
+      rels.distinct.size
+    }
+    try {
+      for (q <- Seq("d2_dedup_minhash", "d4_dedup_simhash", "d6_dup_clusters",
+          "d8_incr_dedup", "d11_semdedup", "s3_ann_ivf", "s4_knn_graph"))
+        assert(cached(q) == 0, s"$q plans with an InMemoryRelation")
+      for ((q, n) <- Seq("q3_join_agg" -> 1, "q5_multijoin" -> 1,
+          "q41_disjunctive" -> 1, "q51_setops_all" -> 1,
+          "q62_nation_pairs" -> 2, "d9_contamination" -> 1, "t10_rarity" -> 1))
+        assert(cached(q) == n, s"$q should plan with $n InMemoryRelation(s)")
+    } finally graft.queries.GateCache.release(spark)
+  }
+
   test("q1 aggregates partially before the exchange (map-side combine)") {
     val p = planOf("q1_agg")
     assert(p.contains("partial_sum") || p.contains("HashAggregate"),
