@@ -9,17 +9,19 @@ package graft
   * numbers report steady-state engine throughput rather than one-off
   * JVM class-loading / whole-stage-codegen compilation (JMH-style; the
   * cold-start cost is amortized to zero on any long-lived cluster).
-  * Set SPARK_GRAFT_WARMUP=0 to measure cold.
   *
-  * Each query is then timed on SPARK_GRAFT_RUNS (default 3) full
-  * passes and reported as the per-query MEDIAN across passes — round-2
-  * showed single-pass times swinging 2-15x on unchanged code from JIT /
-  * GC / scheduler interference, which made the bench unable to detect
-  * real regressions. `value` is the sum of medians; `spread` is the
+  * Each query is then timed on [[Runs]] full passes and reported as
+  * the per-query MEDIAN across passes — round-2 showed single-pass
+  * times swinging 2-15x on unchanged code from JIT / GC / scheduler
+  * interference, which made the bench unable to detect real
+  * regressions. `value` is the sum of medians; `spread` is the
   * max over queries of (max-min)/median across passes, a noise
   * indicator for the run.
   */
 object Bench {
+
+  /** Timed passes per key, after the one untimed warm-up pass. */
+  private val Runs = 3
 
   /** Contention sentinel (r15, verdict task 3). BENCH_r14's 163 s
     * total (vs r13's 89 s on mostly-unchanged code) was the round's
@@ -61,8 +63,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0"
-    val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt.max(1)
     val peersAtStart = liveGraftPeers()
     val spark = graft.core.EngineDefaults.session(sfDir,
       graft.core.EngineDefaults.cpus)
@@ -97,7 +97,7 @@ object Bench {
       .filterNot(n => excl.exists(n.startsWith))
       .filter(n => only.isEmpty || only.exists(n.startsWith))
     // Query-major measurement (r9; was run-major): warm up a query,
-    // time its `runs` passes back-to-back, then drop the app's scratch
+    // time its `Runs` passes back-to-back, then drop the app's scratch
     // root before moving on. Gates recreate their scratch databases on
     // every invocation, so transient disk is bounded by ONE gate's
     // footprint instead of the whole suite's accumulation — the
@@ -108,11 +108,10 @@ object Bench {
     // cross-query JIT/GC interference than the interleaved order did.
     val failed = scala.collection.mutable.LinkedHashSet[String]()
     val perQuery: Map[String, Seq[Double]] = names.map { name =>
-      if (warmup) {
-        try run(SparkEntry.queries(name)(spark, sfDir))
-        catch { case _: Throwable => () }
-      }
-      val times = (1 to runs).map { _ =>
+      // untimed warm-up pass
+      try run(SparkEntry.queries(name)(spark, sfDir))
+      catch { case _: Throwable => () }
+      val times = (1 to Runs).map { _ =>
         val t0 = System.nanoTime()
         try run(SparkEntry.queries(name)(spark, sfDir))
         catch { case e: Throwable =>
@@ -132,7 +131,7 @@ object Bench {
       name -> times
     }.toMap
     val samples: Seq[Map[String, Double]] =
-      (0 until runs).map(i => names.map(n => n -> perQuery(n)(i)).toMap)
+      (0 until Runs).map(i => names.map(n => n -> perQuery(n)(i)).toMap)
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2)
@@ -173,9 +172,9 @@ object Bench {
     val peers = (peersAtStart ++ liveGraftPeers()).distinct
     val peersJson = peers.map(p => "\"" + p.replace("\\", "\\\\")
       .replace("\"", "\\\"") + "\"").mkString("[", ",", "]")
-    val fullLine = s"""{"metric":"queries_full","value":$total,"unit":"sec","queries":$qs,"qspreads":$qspreads,"sf":"$sfDir","runs":$runs,"spread":$spread,"total_ok":$totalOk,"n_failed":${failed.size},"failed":$failedJson,"contended":${peers.size},"peers":$peersJson}"""
+    val fullLine = s"""{"metric":"queries_full","value":$total,"unit":"sec","queries":$qs,"qspreads":$qspreads,"sf":"$sfDir","runs":$Runs,"spread":$spread,"total_ok":$totalOk,"n_failed":${failed.size},"failed":$failedJson,"contended":${peers.size},"peers":$peersJson}"""
     println(fullLine)
-    val tail = renderTail(names, med, failed.toSeq, sfDir, runs, spread,
+    val tail = renderTail(names, med, failed.toSeq, sfDir, Runs, spread,
       peers.size)
     // Machine-parseable artifacts: stdout framing (sbt's [info]/[success]
     // wrappers) defeated tail-parsing for nine straight rounds, so the

@@ -11,9 +11,9 @@ import graft.functions.{FloatVecDot, RollingFingerprint}
   * expressions so plain SQL users reach them —
   * `SELECT float_vec_dot(a, b) FROM ...`.
   *
-  * Install via `.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.GraftExtensions`; or call
-  * [[GraftExtensions.registerFunctions]] on an existing session.
+  * [[graft.core.EngineDefaults.scaled]] installs them in every graft
+  * session; a foreign session installs them with
+  * `spark.sql.extensions=graft.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -46,12 +46,4 @@ object GraftExtensions {
     new ExpressionInfo(classOf[RollingFingerprint].getName,
       "rolling_fingerprint"),
     buildFp)
-
-  /** Register on an already-built session (temp function). */
-  def registerFunctions(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "float_vec_dot", build, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_fingerprint", buildFp, "scala_udf")
-  }
 }

@@ -36,10 +36,6 @@ import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, FloatType,
   */
 final class Catalog(val spark: SparkSession, val database: String) {
 
-  // tolerate TIMESTAMP(NANOS) parquet columns (read as epoch-nanos
-  // longs) — Spark's reader rejects them outright otherwise
-  spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
   private val root = new Path(database)
 
   /** The Hadoop filesystem owning `database` (local, HDFS, s3a, ...). */

@@ -109,15 +109,24 @@ object EngineDefaults {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
 
-  /** The engine conf plus the scale-aware fan-out for a known input dir. */
+  /** The engine conf plus the scale-aware fan-out for a known input dir,
+    * and the [[graft.GraftExtensions]] SQL functions (`float_vec_dot`,
+    * `rolling_fingerprint`), installed here once so every graft session
+    * resolves them — ModelRunner SQL models included.
+    */
   def scaled(b: SparkSession.Builder, sfDir: String,
       cpus: Int): SparkSession.Builder = b
+    .withExtensions(new graft.GraftExtensions)
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
     // testdata timestamps are naive (no isAdjustedToUTC); read them as
     // session-tz TIMESTAMP (UTC everywhere in graft), not TIMESTAMP_NTZ,
     // so streaming watermarks and the DuckDB oracle see identical values
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    // tolerate TIMESTAMP(NANOS) parquet columns, which Spark's reader
+    // rejects outright otherwise: they read as epoch-nanos longs, and
+    // Q.eventTs turns the events `ts` back into a timestamp
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     // hermetic-FS test target (reference connections.py `mem://`):
     // catalogs over mem://ns/db run fully in-JVM — see MemFileSystem
     .config("spark.hadoop.fs.mem.impl", classOf[MemFileSystem].getName)

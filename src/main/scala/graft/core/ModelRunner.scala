@@ -63,16 +63,12 @@ object Materialization {
   * catalog under (schema, name) — the dbt-core capability the
   * reference adapter plugs into (reference: README.md "Why",
   * macros/adapters.sql materializations).
-  *
-  * `ephemeral` predates [[Materialization]] and is kept as sugar for
-  * `materialized = Materialization.Ephemeral` (it wins when set).
   */
 final case class Model(
     name: String,
     sql: String,
     schema: String = "",
     singleFile: Boolean = false,
-    ephemeral: Boolean = false,
     materialized: Materialization = Materialization.Table) {
 
   /** Names this model `ref()`s. */
@@ -141,8 +137,7 @@ final class ModelRunner(
   private def materialize(m: Model, byName: Map[String, Model]): Unit = {
     val df = target.spark.sql(render(m, byName))
     import Materialization._
-    val mode = if (m.ephemeral) Ephemeral else m.materialized
-    mode match {
+    m.materialized match {
       case Ephemeral =>
         // dbt ephemeral: participates in the DAG but is never written —
         // it registers under the same view name refs resolve to, so

@@ -20,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * every counter the scorer derives its ratios from.
   *
   * Field semantics, each matching the exact composition it replaces
-  * (norm = lower(trim(regexp_replace(text, "\\s+", " ")))):
+  * (norm = [[graft.queries.Q.norm]] of the text):
   *   - n_chars      = length(text): UTF-8 char count of the raw text.
   *   - n_words      = size(split(norm, " ")): maximal non-whitespace
   *     runs (ASCII \s class; UTF-8 lead/continuation bytes are all

@@ -15,10 +15,7 @@ import graft.core.{Catalog, DataTests, Materialization, Model, ModelRunner}
   * same result directly.
   */
 object Engine extends QueryModule {
-  import Q.t
-
-  private def dsumSql(expr: String, scale: Int = 2): String =
-    s"cast(sum(cast($expr as decimal(18,$scale))) as double)"
+  import Q.{t, dsumSql}
 
   def queries: Map[String, Q] = Map(
     // ─── C2/C3/C4/C10/C11: catalog discovery + column introspection ───
@@ -212,7 +209,7 @@ object Engine extends QueryModule {
                   o_orderdate
                FROM {{ source('', 'orders') }}
                WHERE $where""",
-            ephemeral = true),
+            materialized = Materialization.Ephemeral),
           Model("fct_orders",
             "SELECT * FROM {{ ref('stg_orders_win') }}",
             materialized = Materialization.Incremental(Seq("o_orderkey"))))

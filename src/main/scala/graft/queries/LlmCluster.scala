@@ -17,12 +17,7 @@ import org.apache.spark.sql.functions._
   * decision must be, so pairs are closed into connected components.
   */
 object LlmCluster extends QueryModule {
-  import Q.t
-
-  private def norm(c: org.apache.spark.sql.Column) =
-    lower(trim(regexp_replace(c, "\\s+", " ")))
-  private val normSql =
-    "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
+  import Q.{t, norm, normSql}
 
   private val emailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
   private val phoneRe = "\\+[0-9]{1,2} [0-9]{3}-[0-9]{4}"

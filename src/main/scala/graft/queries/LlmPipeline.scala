@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * filtering when a corpus is turned into training batches).
   */
 object LlmPipeline extends QueryModule {
-  import Q.t
+  import Q.{t, norm}
 
   def queries: Map[String, Q] = Map(
     // ─── t6: sequence packing (concatenate-and-chop) ───
@@ -61,7 +61,7 @@ object LlmPipeline extends QueryModule {
     "d8_incr_dedup" -> Q(
       (s, dir) => {
         val docs = t(s, dir, "documents")
-        val nrm = lower(trim(regexp_replace(col("text"), "\\s+", " ")))
+        val nrm = norm(col("text"))
         val corpusSigs = docs.select(md5(nrm).as("sig")).distinct()
         val dupes = docs.filter(col("doc_id") % 3 === 0)
           .select((col("doc_id") + 2000000L).as("doc_id"), col("lang"),
@@ -349,8 +349,7 @@ object LlmPipeline extends QueryModule {
         // go loudly red against the string-keyed oracle rather than
         // silently skew.
         val toks = docs.select(col("doc_id"),
-          explode(split(lower(trim(regexp_replace(col("text"), "\\s+", " "))),
-            " ")).as("w"))
+          explode(split(norm(col("text")), " ")).as("w"))
           .select(col("doc_id"), xxhash64(col("w")).as("w"))
         // cache+count-materialized (r8, the q3/q5/q41 pattern): the
         // vocab is sublinear (Heaps' law) but Catalyst's no-CBO

@@ -15,7 +15,8 @@ import org.apache.spark.sql.types.DecimalType
   * single codegen'd projection (array folds, no UDFs, no shuffle).
   */
 object LlmSim extends QueryModule {
-  import Q.t
+  import Q.{t, norm}
+  import graft.functions.FloatVecDot.dot
 
   // ── deterministic coefficient tables (seeded LCG, no RNG at plan time) ──
   private def lcgStream(seed: Long): Iterator[Long] =
@@ -52,17 +53,88 @@ object LlmSim extends QueryModule {
       ((math.abs(it.next()) % 2001) / 1000.0 - 1.0).toFloat))
   }
 
-  private val DEC = DecimalType(18, 15)
+  // Every `dot` here is the exact (order-independent) FloatVecDot:
+  // per-position double products rounded onto a 15-decimal grid and
+  // summed with exact integer arithmetic — `sum(cast(x*y as
+  // decimal(18,15)))` as a native codegen'd expression.
 
-  /** Exact (order-independent) dot product of two float arrays:
-    * per-position double products rounded onto a 15-decimal grid and
-    * summed with exact integer arithmetic — equivalent to
-    * `sum(cast(x*y as decimal(18,15)))` but as a native codegen'd
-    * expression ([[graft.functions.FloatVecDot]]) instead of an
-    * interpreted higher-order fold.
+  /** Cosine of two embedding columns on that grid, rounded to 12
+    * places — the grid the top-k and near-dup oracles compare on. */
+  private def cosine(a: Column, b: Column): Column =
+    round(dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b))), 12)
+
+  /** Exact vector collapse (exact-then-near): one `(vec_id, embedding)`
+    * row per byte-identical embedding, under its min id — one shuffle
+    * on the full array as the group key, no hash-collision risk. */
+  private def exactReps(e: DataFrame): DataFrame =
+    e.groupBy(col("embedding"))
+      .agg(min(col("vec_id")).as("vec_id"))
+      .select(col("vec_id"), col("embedding"))
+
+  /** Exact text collapse (exact-then-near): one `(doc_id, text)` row per
+    * normalized text — one md5 hash-shuffle, the min-doc_id
+    * representative kept. Identity on an exact-dup-free corpus. */
+  private def textReps(docs: DataFrame): DataFrame =
+    docs.groupBy(md5(norm(col("text"))).as("fp"))
+      .agg(min(col("doc_id")).as("doc_id"),
+        min_by(col("text"), col("doc_id")).as("text"))
+      .select(col("doc_id"), col("text"))
+
+  /** Perturbed copies (ids + 1000000, cosine ≈ 0.9999) of the vectors
+    * with id < 50: the near-dups d5b and d11 must recover.
+    * INTEGER-derived so the oracle can replicate it bit-for-bit:
+    * delta = 0.001·k with k = (31·vec_id + i) mod 7 − 3 ∈ [−3, 3] —
+    * every step (int arithmetic, one double multiply, one double add,
+    * one float cast) is exactly reproducible IEEE in both engines,
+    * unlike the pre-r9 sin() whose libm vs StrictMath ulps could flip
+    * the rounded cosine grid.
     */
-  private def dotDec(a: Column, b: Column): Column =
-    graft.functions.FloatVecDot.dot(a, b)
+  private def nearDupCopies(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < 50)
+      .select((col("vec_id") + 1000000L).as("vec_id"),
+        expr("""transform(embedding,
+             (x, i) -> cast(x + 0.001d *
+               cast(pmod(vec_id * 31 + i, 7) - 3 as double) as float))""")
+          .as("embedding"))
+
+  /** Top-5 member ids per query from `(query_id, rep_id, cosine)` rep
+    * scores: rank() (not row_number) cuts the REP list, so cosine ties
+    * keep every tied vector and the expansion through `memberMap`
+    * (`rep_id → cand_id`) is a superset of the exact top-5 ids; the
+    * final (cosine desc, cand_id) cut is exact. */
+  private def topMembers(scored: DataFrame, memberMap: DataFrame): DataFrame = {
+    val wr = Window.partitionBy(col("query_id"))
+      .orderBy(col("cosine").desc)
+    val topReps = scored.withColumn("rk", rank().over(wr))
+      .filter(col("rk") <= 5)
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cosine").desc, col("cand_id"))
+    topReps.join(memberMap, Seq("rep_id"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 5)
+      .select(col("query_id"), col("cand_id"), col("cosine"),
+        col("rank").cast("long").as("rank"))
+  }
+
+  /** Exact brute-force top-5 `(query_id, cand_id, cosine, rank)` of
+    * the 10 query vectors (id < 10) over the rest: broadcast query set,
+    * one corpus scan, no shuffle; norms computed once per side. */
+  private def bruteTop5(e: DataFrame): DataFrame = {
+    val queries = e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
+        sqrt(dot(col("embedding"), col("embedding"))).as("qn"))
+    val cands = e.filter(col("vec_id") >= 10)
+      .select(col("vec_id").as("cand_id"), col("embedding").as("cv"),
+        sqrt(dot(col("embedding"), col("embedding"))).as("cn"))
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cosine").desc, col("cand_id"))
+    cands.join(broadcast(queries))
+      .select(col("query_id"), col("cand_id"),
+        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 12)
+          .as("cosine"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 5)
+  }
 
   /** Shuffle-free nearest-cell assignment (r15, guide §2.4 "remove
     * shuffles outright").
@@ -90,8 +162,8 @@ object LlmSim extends QueryModule {
       cents: Seq[(Int, Seq[Float])],
       normalize: Boolean = false): DataFrame = {
     val scored = array(cents.map { case (cid, cv) =>
-      val d0 = dotDec(vec, typedlit(cv))
-      val d = if (normalize) d0 / sqrt(dotDec(vec, vec)) else d0
+      val d0 = dot(vec, typedlit(cv))
+      val d = if (normalize) d0 / sqrt(dot(vec, vec)) else d0
       struct(d.as("cent_dot"), lit(cid).as("cent_id"))
     }: _*)
     val byDotDescIdAsc = (l: Column, r: Column) =>
@@ -156,7 +228,7 @@ object LlmSim extends QueryModule {
       // argmax is that centroid by definition (ADVICE r15 — the old
       // max_by form handled k=1, this projection must too)
       val centStructs = cents.map { case (cid, cv) =>
-        struct(dotDec(col("embedding"), typedlit(cv)).as("d"),
+        struct(dot(col("embedding"), typedlit(cv)).as("d"),
           lit(-cid).as("neg_id"), lit(cid).as("cent_id"))
       }
       val best =
@@ -210,8 +282,7 @@ object LlmSim extends QueryModule {
     val SPREAD = 0x000000FF000000FFL // lanes k and k+4 → 32-bit slots
     val hashed = docs
       .select(col("doc_id"),
-        posexplode(split(lower(trim(regexp_replace(col("text"), "\\s+", " "))),
-          " ")).as(Seq("pos", "w")))
+        posexplode(split(norm(col("text")), " ")).as(Seq("pos", "w")))
       .select(col("doc_id"), (col("pos") / 127).cast("int").as("chk"),
         xxhash64(col("w")).as("wh"))
     val lvl1Aggs = count(lit(1)).as("cn") +: (0 until 8).map { j =>
@@ -249,8 +320,7 @@ object LlmSim extends QueryModule {
   /** Word-trigram shingles of the normalized text, hashed into [0, 2^30). */
   private def shingles(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-      split(lower(trim(regexp_replace(col("text"), "\\s+", " "))), " ")
-        .as("words"))
+      split(norm(col("text")), " ").as("words"))
       .select(col("doc_id"),
         explode(expr(
           """transform(sequence(0, size(words) - 3),
@@ -421,9 +491,7 @@ object LlmSim extends QueryModule {
         val K = 3
         val W = 48
         val e = t(s, dir, "embeddings")
-        val reps = e.groupBy(col("embedding"))
-          .agg(min(col("vec_id")).as("vec_id"))
-          .select(col("vec_id"), col("embedding"))
+        val reps = exactReps(e)
         val centroids = trainCentroids(s,
           e.filter(col("vec_id") < 5000)
             .select(col("vec_id"), col("embedding")), k = 16, iters = 3)
@@ -450,9 +518,7 @@ object LlmSim extends QueryModule {
           .join(reps.select(col("vec_id").as("nbr_id"),
             col("embedding").as("yv")), Seq("nbr_id"))
           .select(col("vec_id"), col("nbr_id"),
-            round(dotDec(col("xv"), col("yv")) /
-              (sqrt(dotDec(col("xv"), col("xv"))) *
-                sqrt(dotDec(col("yv"), col("yv")))), 12).as("cosine"))
+            cosine(col("xv"), col("yv")).as("cosine"))
         val w = Window.partitionBy(col("vec_id"))
           .orderBy(col("cosine").desc, col("nbr_id"))
         // one NN-descent refinement round: a vector's true neighbor is
@@ -522,23 +588,9 @@ object LlmSim extends QueryModule {
           col("qv"), nprobe = 4, idCol = "query_id")
         val scored = queries.join(cands, Seq("cent_id"))
           .select(col("query_id"), col("rep_id"),
-            round(dotDec(col("qv"), col("cv")) /
-              (sqrt(dotDec(col("qv"), col("qv"))) *
-                sqrt(dotDec(col("cv"), col("cv")))), 12).as("cosine"))
+            cosine(col("qv"), col("cv")).as("cosine"))
           .distinct()
-        // rank() keeps cosine ties, so the member expansion is a
-        // superset of the exact top-5 ids and the final cut is exact
-        val wr = Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc)
-        val topReps = scored.withColumn("rk", rank().over(wr))
-          .filter(col("rk") <= 5)
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("cand_id"))
-        topReps.join(memberMap, Seq("rep_id"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 5)
-          .select(col("query_id"), col("cand_id"), col("cosine"),
-            col("rank").cast("long").as("rank"))
+        topMembers(scored, memberMap)
   }
 
   def queries: Map[String, Q] = Map(
@@ -559,12 +611,7 @@ object LlmSim extends QueryModule {
         // what the O(n) exact pass resolves outright — the standard
         // dedup-pipeline ordering (exact → near) at 100 TB. On an
         // exact-dup-free corpus this pre-step is the identity.
-        val reps = t(s, dir, "documents")
-          .groupBy(md5(lower(trim(regexp_replace(col("text"), "\\s+", " "))))
-            .as("fp"))
-          .agg(min(col("doc_id")).as("doc_id"),
-            min_by(col("text"), col("doc_id")).as("text"))
-          .select(col("doc_id"), col("text"))
+        val reps = textReps(t(s, dir, "documents"))
         val tri = shingles(reps)
         // 16 minhashes per doc, one shuffle
         val mhAggs = minhashCoef.zipWithIndex.map { case ((a, b), i) =>
@@ -612,12 +659,7 @@ object LlmSim extends QueryModule {
         // pass — exact pairs are d1's O(n) job, and every reported
         // pair here is genuinely near-but-not-exact. Identity on a
         // dup-free corpus.
-        val reps = t(s, dir, "documents")
-          .groupBy(md5(lower(trim(regexp_replace(col("text"), "\\s+", " "))))
-            .as("fp"))
-          .agg(min(col("doc_id")).as("doc_id"),
-            min_by(col("text"), col("doc_id")).as("text"))
-          .select(col("doc_id"), col("text"))
+        val reps = textReps(t(s, dir, "documents"))
         val sim = simhash64(reps)
           .select(col("doc_id"), col("simhash"))
         val chunks = sim.select(col("doc_id"), col("simhash"),
@@ -696,11 +738,11 @@ object LlmSim extends QueryModule {
         val e = t(s, dir, "embeddings").filter(col("vec_id") < 200)
           .select(col("vec_id"), col("embedding"))
         val norms = e.select(col("vec_id").as("nid"),
-          dotDec(col("embedding"), col("embedding")).as("nrm"))
+          dot(col("embedding"), col("embedding")).as("nrm"))
         val pairs = e.as("x").join(e.as("y"),
             col("x.vec_id") < col("y.vec_id"))
           .select(col("x.vec_id").as("a"), col("y.vec_id").as("b"),
-            dotDec(col("x.embedding"), col("y.embedding")).as("dot"))
+            dot(col("x.embedding"), col("y.embedding")).as("dot"))
         pairs
           .join(norms.select(col("nid").as("a"), col("nrm").as("na")), "a")
           .join(norms.select(col("nid").as("b"), col("nrm").as("nb")), "b")
@@ -753,24 +795,8 @@ object LlmSim extends QueryModule {
         // A corpus with k exact copies of a vector holds k²/2 true
         // near-dup pairs; listing them is the exact pass's O(n) job,
         // not the LSH's.
-        val e = t(s, dir, "embeddings")
-          .groupBy(col("embedding"))
-          .agg(min(col("vec_id")).as("vec_id"))
-          .select(col("vec_id"), col("embedding"))
-        // deterministic near-dup injection, INTEGER-derived so the
-        // oracle can replicate it bit-for-bit: delta = 0.001·k with
-        // k = (31·vec_id + i) mod 7 − 3 ∈ [−3, 3] — every step
-        // (int arithmetic, one double multiply, one double add, one
-        // float cast) is exactly reproducible IEEE in both engines,
-        // unlike the pre-r9 sin() whose libm vs StrictMath ulps could
-        // flip the rounded cosine grid
-        val injected = e.filter(col("vec_id") < 50)
-          .select((col("vec_id") + 1000000L).as("vec_id"),
-            expr("""transform(embedding,
-                 (x, i) -> cast(x + 0.001d *
-                   cast(pmod(vec_id * 31 + i, 7) - 3 as double) as float))""")
-              .as("embedding"))
-        val corpus = e.unionByName(injected)
+        val e = exactReps(t(s, dir, "embeddings"))
+        val corpus = e.unionByName(nearDupCopies(e))
         val BANDS = 8
         val PLANES = 16
         // all 8 buckets in ONE codegen'd kernel — see FloatVecSignBuckets
@@ -794,9 +820,7 @@ object LlmSim extends QueryModule {
           .join(corpus.select(col("vec_id").as("b"),
             col("embedding").as("bv")), "b")
         withVecs.select(col("a"), col("b"),
-            round(dotDec(col("av"), col("bv")) /
-              (sqrt(dotDec(col("av"), col("av"))) *
-                sqrt(dotDec(col("bv"), col("bv")))), 12).as("cosine"))
+            cosine(col("av"), col("bv")).as("cosine"))
           .filter(col("cosine") > 0.99)
           .orderBy(col("a"), col("b"))
       },
@@ -835,26 +859,10 @@ object LlmSim extends QueryModule {
 
     // ─── s1: brute-force cosine top-k (exact ANN baseline, oracled) ───
     "s1_ann_brute" -> Q(
-      (s, dir) => {
-        val e = t(s, dir, "embeddings")
-        val queries = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-            sqrt(dotDec(col("embedding"), col("embedding"))).as("qn"))
-        val cands = e.filter(col("vec_id") >= 10)
-          .select(col("vec_id").as("cand_id"), col("embedding").as("cv"),
-            sqrt(dotDec(col("embedding"), col("embedding"))).as("cn"))
-        val scored = cands.join(broadcast(queries))
-          .select(col("query_id"), col("cand_id"),
-            round(dotDec(col("qv"), col("cv")) / (col("qn") * col("cn")), 12)
-              .as("cosine"))
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("cand_id"))
-        scored.withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 5)
-          .select(col("query_id"), col("cand_id"), col("cosine"),
-            col("rank").cast("long").as("rank"))
-          .orderBy(col("query_id"), col("rank"))
-      },
+      (s, dir) => bruteTop5(t(s, dir, "embeddings"))
+        .select(col("query_id"), col("cand_id"), col("cosine"),
+          col("rank").cast("long").as("rank"))
+        .orderBy(col("query_id"), col("rank")),
       Some(topkOracle)),
 
     // ─── s2: sign-LSH bucketed approximate top-k (scale path; oracled
@@ -907,23 +915,8 @@ object LlmSim extends QueryModule {
           .select(col("query_id"), col("rep_id"), col("qv"), col("cv"))
           .distinct()
         val scored = matched.select(col("query_id"), col("rep_id"),
-          round(dotDec(col("qv"), col("cv")) /
-            (sqrt(dotDec(col("qv"), col("qv"))) *
-              sqrt(dotDec(col("cv"), col("cv")))), 12).as("cosine"))
-        // rank() (not row_number) cuts the REP list: cosine ties keep
-        // every tied vector, so the expansion below is a superset of
-        // the exact top-5 ids and the final cut stays exact
-        val wr = Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc)
-        val topReps = scored.withColumn("rk", rank().over(wr))
-          .filter(col("rk") <= 5)
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("cand_id"))
-        topReps.join(memberMap, Seq("rep_id"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 5)
-          .select(col("query_id"), col("cand_id"), col("cosine"),
-            col("rank").cast("long").as("rank"))
+          cosine(col("qv"), col("cv")).as("cosine"))
+        topMembers(scored, memberMap)
           .orderBy(col("query_id"), col("rank"))
       },
       Some(topkOracle)),
@@ -964,21 +957,7 @@ object LlmSim extends QueryModule {
       (s, dir) => {
         val ivf = ivfTopk(s, dir)
           .select(col("query_id"), col("cand_id"))
-        val e = t(s, dir, "embeddings")
-        val queries = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-            sqrt(dotDec(col("embedding"), col("embedding"))).as("qn"))
-        val cands = e.filter(col("vec_id") >= 10)
-          .select(col("vec_id").as("cand_id"), col("embedding").as("cv"),
-            sqrt(dotDec(col("embedding"), col("embedding"))).as("cn"))
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("cand_id"))
-        val truth = cands.join(broadcast(queries))
-          .select(col("query_id"), col("cand_id"),
-            round(dotDec(col("qv"), col("cv")) / (col("qn") * col("cn")), 12)
-              .as("cosine"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 5)
+        val truth = bruteTop5(t(s, dir, "embeddings"))
           .select(col("query_id"), col("cand_id"))
         val hits = truth.join(ivf, Seq("query_id", "cand_id"))
           .groupBy().agg(count(lit(1)).as("n_hits"))
@@ -1027,23 +1006,13 @@ object LlmSim extends QueryModule {
         val EPS = 0.99
         val W = 16
         val e0 = t(s, dir, "embeddings")
-        // deterministic injection (same integer-derived scheme as d5b,
-        // oracle-replicable bit-for-bit): perturbed copies of the
-        // first 50 vectors — cosine ≈ 0.9999 to their originals —
-        // must all be pruned, and only they may be.
-        val injected = e0.filter(col("vec_id") < 50)
-          .select((col("vec_id") + 1000000L).as("vec_id"),
-            expr("""transform(embedding,
-                 (x, i) -> cast(x + 0.001d *
-                   cast(pmod(vec_id * 31 + i, 7) - 3 as double) as float))""")
-              .as("embedding"))
+        // the d5b near-dup copies of the first 50 vectors must all be
+        // pruned, and only they may be
         val corpus = e0.select(col("vec_id"), col("embedding"))
-          .unionByName(injected)
+          .unionByName(nearDupCopies(e0))
         // 1. exact collapse (k byte-identical copies are k-1 drops here,
         //    never k²/2 pairs downstream)
-        val reps = corpus.groupBy(col("embedding"))
-          .agg(min(col("vec_id")).as("vec_id"))
-          .select(col("vec_id"), col("embedding"))
+        val reps = exactReps(corpus)
         // 2. bounded-sample quantizer (shared machinery with s3)
         val centroids = trainCentroids(s,
           e0.filter(col("vec_id") < 5000)
@@ -1079,9 +1048,9 @@ object LlmSim extends QueryModule {
         // 4. exact verdict on candidates only; drop the larger id
         val drops = pairs
           .withColumn("cosine",
-            dotDec(col("av"), col("bv")) /
-              (sqrt(dotDec(col("av"), col("av"))) *
-                sqrt(dotDec(col("bv"), col("bv")))))
+            dot(col("av"), col("bv")) /
+              (sqrt(dot(col("av"), col("av"))) *
+                sqrt(dot(col("bv"), col("bv")))))
           .filter(col("cosine") > EPS)
           .select(col("b").as("vec_id")).distinct()
         reps.join(drops, Seq("vec_id"), "left_anti")
@@ -1174,19 +1143,13 @@ object LlmSim extends QueryModule {
         val graph = knnGraph(s, dir)
           .filter(col("vec_id") < 100)
           .select(col("vec_id"), col("nbr_id"))
-        val e = t(s, dir, "embeddings")
-        val reps = e.groupBy(col("embedding"))
-          .agg(min(col("vec_id")).as("vec_id"))
-          .select(col("vec_id"), col("embedding"))
+        val reps = exactReps(t(s, dir, "embeddings"))
         val evalQ = reps.filter(col("vec_id") < 100)
           .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
         val scored = reps.join(broadcast(evalQ),
             col("vec_id") =!= col("q_id"))
           .select(col("q_id"), col("vec_id").as("nbr_id"),
-            round(dotDec(col("qv"), col("embedding")) /
-              (sqrt(dotDec(col("qv"), col("qv"))) *
-                sqrt(dotDec(col("embedding"), col("embedding")))), 12)
-              .as("cosine"))
+            cosine(col("qv"), col("embedding")).as("cosine"))
         val w = Window.partitionBy(col("q_id"))
           .orderBy(col("cosine").desc, col("nbr_id"))
         val truth = scored.withColumn("rank", row_number().over(w))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis + exact/ngram dedup operators for LLM training-data
@@ -11,14 +11,7 @@ import org.apache.spark.sql.functions._
   * arrays stay inside one projection so nothing materializes wide.
   */
 object LlmText extends QueryModule {
-  import Q.t
-
-  /** Normalized text: lowercase, trimmed, whitespace collapsed. */
-  private def norm(c: Column): Column =
-    lower(trim(regexp_replace(c, "\\s+", " ")))
-
-  private val normSql =
-    "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
+  import Q.{t, norm, normSql}
 
   /** Deterministic per-language stopword lists (from the synthetic
     * corpus vocabulary) for the language-ID heuristic.

@@ -1,14 +1,19 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{expr, lower, regexp_replace,
+  timestamp_micros, trim}
+import org.apache.spark.sql.types.LongType
 
 /** One gated capability: a Spark query builder plus (optionally) the
   * equivalent ANSI SQL the driver runs in DuckDB as the oracle.
   *
   * Numeric policy (keeps the driver's hash-compare order-independent):
   *   - money sums: sum over decimal(18,2) cast, then cast to double —
-  *     exact in both engines regardless of aggregation order.
-  *   - averages: exact decimal sum / exact count, divided in double.
+  *     exact in both engines regardless of aggregation order
+  *     ([[graft.functions.Dnum.dsum]]; DuckDB side [[Q.dsumSql]]).
+  *   - averages: exact decimal sum / exact count, divided in double
+  *     ([[graft.functions.Dnum.davg]]; DuckDB side [[Q.davgSql]]).
   *   - integer sums in DuckDB return HUGEINT; oracles cast to bigint.
   *   - date-ish group keys are formatted to strings on both sides.
   */
@@ -69,22 +74,40 @@ object Q {
     fs.delete(p, true)
   }
 
-  /** Read the events table, normalizing its TIMESTAMP(NANOS) `ts`
-    * column (which Spark's vectorized parquet reader rejects) to a
-    * microsecond TimestampType column — the same truncation DuckDB
-    * applies when casting timestamp_ns to timestamp.
+  /** DuckDB rendering of [[graft.functions.Dnum.dsum]] (numeric policy
+    * above): exact decimal(18,scale) sum, as double. */
+  def dsumSql(expr: String, scale: Int = 2): String =
+    s"cast(sum(cast($expr as decimal(18,$scale))) as double)"
+
+  /** DuckDB rendering of [[graft.functions.Dnum.davg]]: [[dsumSql]] /
+    * count — identical IEEE division on identical operands. */
+  def davgSql(expr: String, scale: Int = 2): String =
+    s"${dsumSql(expr, scale)} / count($expr)"
+
+  /** Normalized text: lowercase, trimmed, whitespace collapsed — the
+    * form every text signature, shingle and word split starts from. */
+  def norm(c: Column): Column = lower(trim(regexp_replace(c, "\\s+", " ")))
+
+  /** DuckDB rendering of [[norm]] over the `text` column. */
+  val normSql = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
+
+  /** Read the events table with [[eventTs]] applied. */
+  def events(spark: SparkSession, dir: String): DataFrame =
+    eventTs(spark.read.parquet(s"$dir/events.parquet"))
+
+  /** Normalize an events frame's TIMESTAMP(NANOS) `ts` column — read as
+    * epoch-nanos longs under the conf [[graft.core.EngineDefaults.scaled]]
+    * sets, since Spark's vectorized parquet reader rejects the type —
+    * to a microsecond TimestampType column: the same truncation DuckDB
+    * applies when casting timestamp_ns to timestamp. Batch and stream
+    * reads both go through here; a microsecond `ts` passes unchanged.
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    import org.apache.spark.sql.functions.{expr, timestamp_micros}
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        // integer `div`, not `/`: double division loses precision on
-        // epoch-nanos magnitudes (~1.7e18 > 2^53)
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _ => raw
-    }
+  def eventTs(raw: DataFrame): DataFrame = raw.schema("ts").dataType match {
+    case LongType =>
+      // integer `div`, not `/`: double division loses precision on
+      // epoch-nanos magnitudes (~1.7e18 > 2^53)
+      raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+    case _ => raw
   }
 }
 

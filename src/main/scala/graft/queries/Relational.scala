@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
@@ -14,26 +14,8 @@ import org.apache.spark.sql.types.DecimalType
   * goes through an exact decimal sum (see [[Q]] numeric policy).
   */
 object Relational extends QueryModule {
-  import Q.t
-
-  /** Exact, order-independent sum of a double column: element-wise cast
-    * to decimal(18,s), exact decimal sum, result as double.
-    */
-  private def dsum(c: Column, scale: Int = 2): Column =
-    graft.functions.Dnum.dsum(c, scale)
-
-  /** DuckDB rendering of [[dsum]]. */
-  private def dsumSql(expr: String, scale: Int = 2): String =
-    s"cast(sum(cast($expr as decimal(18,$scale))) as double)"
-
-  /** Exact average: decimal sum / count — identical IEEE division on
-    * identical operands in both engines.
-    */
-  private def davg(c: Column, scale: Int = 2): Column =
-    graft.functions.Dnum.davg(c, scale)
-
-  private def davgSql(expr: String, scale: Int = 2): String =
-    s"cast(sum(cast($expr as decimal(18,$scale))) as double) / count($expr)"
+  import Q.{t, dsumSql, davgSql}
+  import graft.functions.Dnum.{dsum, davg}
 
   def queries: Map[String, Q] = Map(
     // ─── q1: filter → groupBy → multi-agg (TPC-H Q1 shape) ───

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -14,12 +14,8 @@ import org.apache.spark.sql.expressions.Window
   * IEEE expression tree on both engines so results are bit-identical.
   */
 object Relational2 extends QueryModule {
-  import Q.t
-
-  private def dsum(c: Column, scale: Int = 2): Column =
-    graft.functions.Dnum.dsum(c, scale)
-  private def dsumSql(expr: String, scale: Int = 2): String =
-    s"cast(sum(cast($expr as decimal(18,$scale))) as double)"
+  import Q.{t, dsumSql}
+  import graft.functions.Dnum.dsum
 
   private val TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
   private val TS_FMT_DD = "%Y-%m-%d %H:%M:%S.%f"

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
 
@@ -10,13 +10,8 @@ import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructTyp
   * IN-over-HAVING), and ORC / JSON source-sink roundtrips.
   */
 object Relational3 extends QueryModule {
-  import Q.t
-
-  private def dsum(c: Column, scale: Int = 2): Column =
-    graft.functions.Dnum.dsum(c, scale)
-  private def dsumSql(expr: String, scale: Int = 2): String =
-    s"cast(sum(cast($expr as decimal(18,$scale))) as double)"
-
+  import Q.{t, dsumSql}
+  import graft.functions.Dnum.dsum
 
   def queries: Map[String, Q] = Map(
     // ─── q40: JSON extraction (semi-structured column) ───

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -13,12 +12,8 @@ import org.apache.spark.sql.types.DecimalType
   * declarative DataFrame programs with the scale shape annotated.
   */
 object Relational5 extends QueryModule {
-  import Q.{t, events}
-
-  private def dsum(c: Column, scale: Int = 2): Column =
-    graft.functions.Dnum.dsum(c, scale)
-  private def dsumSql(expr: String, scale: Int = 2): String =
-    s"cast(sum(cast($expr as decimal(18,$scale))) as double)"
+  import Q.{t, events, dsumSql, norm}
+  import graft.functions.Dnum.dsum
 
   /** Okapi BM25 scores of every term-matching document — (doc_id,
     * bm25 round(6)). t17's gate output, and the lexical rank source
@@ -31,8 +26,7 @@ object Relational5 extends QueryModule {
     val b = 0.75
     val docs = t(s, dir, "documents")
       .select(col("doc_id"),
-        split(lower(trim(regexp_replace(col("text"), "\\s+", " "))),
-          " ").as("words"))
+        split(norm(col("text")), " ").as("words"))
     val len = docs.select(col("doc_id"),
       size(col("words")).cast("double").as("dl"))
     val stats = len.agg(
@@ -146,8 +140,7 @@ object Relational5 extends QueryModule {
       (s, dir) => {
         val docs = t(s, dir, "documents")
           .select(col("doc_id"),
-            split(lower(trim(regexp_replace(col("text"), "\\s+", " "))),
-              " ").as("words"))
+            split(norm(col("text")), " ").as("words"))
         // ONE token-stream explode: tf and the term string come out of
         // the same aggregate (min(term) rides as map-side-collapsed
         // payload — the exchange still PARTITIONS on the 16-byte
@@ -217,7 +210,7 @@ object Relational5 extends QueryModule {
       (s, dir) => {
         val d = t(s, dir, "documents").select(
           col("doc_id"), col("lang"),
-          md5(lower(trim(regexp_replace(col("text"), "\\s+", " "))))
+          md5(norm(col("text")))
             .as("sig"),
           size(split(trim(col("text")), "\\s+")).cast("long").as("toks"),
           (length(regexp_replace(lower(col("text")), "[^a-z]", ""))

@@ -481,7 +481,7 @@ class ModelRunnerSpec extends AnyFunSuite {
     val (target, r) = runner()
     r.run(Seq(
       Model("base", "select * from {{ source('', 'region') }}",
-        ephemeral = true),
+        materialized = Materialization.Ephemeral),
       Model("final", "select count(*) as n from {{ ref('base') }}")))
     assert(target.listRelations("") == Seq("final"),
       "ephemeral model must not materialize")
@@ -549,7 +549,8 @@ class ModelRunnerSpec extends AnyFunSuite {
     def dag(maxKey: Int) = Seq(
       Model("stg_n",
         s"select n_nationkey, n_name from {{ source('', 'nation') }} " +
-          s"where n_nationkey < $maxKey", ephemeral = true),
+          s"where n_nationkey < $maxKey",
+        materialized = Materialization.Ephemeral),
       Model("dim_n", "select * from {{ ref('stg_n') }}",
         materialized = Materialization.Incremental(Seq("n_nationkey"))))
     r.run(dag(10))

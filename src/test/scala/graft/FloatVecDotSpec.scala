@@ -29,7 +29,6 @@ class FloatVecDotSpec extends AnyFunSuite {
   }
 
   test("callable from SQL once registered via GraftExtensions") {
-    GraftExtensions.registerFunctions(spark)
     spark.read.parquet(s"${TestSpark.SF}/embeddings.parquet")
       .createOrReplaceTempView("emb_fvd")
     val d = spark.sql(

@@ -53,14 +53,12 @@ class RollingHashSpec extends AnyFunSuite {
     assert(rows(0).getLong(1) == 0L, "empty array folds to the init 0")
     assert(rows(3).isNullAt(1), "null array yields NULL")
     // null ELEMENT yields NULL (matching the interpreted fold)
-    GraftExtensions.registerFunctions(spark)
     assert(spark.sql(
       "SELECT rolling_fingerprint(array('a', cast(NULL as string))) IS NULL")
       .collect()(0).getBoolean(0))
   }
 
   test("SQL registration works") {
-    GraftExtensions.registerFunctions(spark)
     val viaSql = spark.sql(
       "SELECT rolling_fingerprint(array('alpha','beta','gamma'))")
       .collect()(0).getLong(0)
