@@ -1,15 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.functions.{FloatVecDot, RollingFingerprint}
 
 /** Session extensions for the graft engine: registers the native
-  * expressions so plain SQL users reach them —
-  * `SELECT float_vec_dot(a, b) FROM ...`.
+  * kernels so plain SQL users reach them —
+  * `SELECT float_vec_dot(a, b) FROM ...`. Each SQL function builds the
+  * same expression as the kernel's column builder, so an unaliased
+  * call is named `static_invoke(graft.functions.FloatVecDot.compute(…))`.
   *
   * [[graft.core.EngineDefaults.scaled]] installs them in every graft
   * session; a foreign session installs them with
@@ -23,27 +26,20 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  private def build(args: Seq[Expression]): Expression = {
-    require(args.length == 2, "float_vec_dot expects exactly 2 arguments")
-    FloatVecDot(args.head, args(1))
-  }
-
-  private def buildFp(args: Seq[Expression]): Expression = {
-    require(args.length == 1,
-      "rolling_fingerprint expects exactly 1 argument")
-    RollingFingerprint(args.head)
-  }
-
-  val floatVecDotDescriptor
+  private def descriptor(name: String, kernel: AnyRef, arity: Int)(
+      build: Seq[Column] => Column)
       : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("float_vec_dot"),
-    new ExpressionInfo(classOf[FloatVecDot].getName, "float_vec_dot"),
-    build)
+    FunctionIdentifier(name),
+    new ExpressionInfo(kernel.getClass.getName, name),
+    args => {
+      require(args.length == arity, s"$name expects exactly $arity argument(s)")
+      Bridge.expression(build(args.map(Bridge.column)))
+    })
 
-  val rollingFingerprintDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("rolling_fingerprint"),
-    new ExpressionInfo(classOf[RollingFingerprint].getName,
-      "rolling_fingerprint"),
-    buildFp)
+  val floatVecDotDescriptor =
+    descriptor("float_vec_dot", FloatVecDot, 2)(a => FloatVecDot.dot(a(0), a(1)))
+
+  val rollingFingerprintDescriptor =
+    descriptor("rolling_fingerprint", RollingFingerprint, 1)(a =>
+      RollingFingerprint.of(a(0)))
 }

@@ -2,16 +2,15 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Literal}
+import org.apache.spark.sql.graftbridge.Bridge.exactly
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass blocklist word counting for the t14 content filter:
   * `struct(n_words, n_flagged)` over the raw text against a
-  * plan-time-constant lowercase-ASCII word set, as a native codegen'd
-  * Catalyst expression.
+  * plan-time-constant lowercase-ASCII word set, as a codegen'd row
+  * kernel (see [[Kernel]]).
   *
   * Replaces `size(split(norm(text), " "))` +
   * `size(filter(words, w -> w IN (...)))` — a whitespace-collapsing
@@ -32,45 +31,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *     "long s" -> "s", which Spark's `lower` would fold and this
   *     scan would not; no such char exists in the corpus).
   */
-case class BlockWordStats(child: Expression, words: Seq[String])
-    extends UnaryExpression {
+object BlockWordStats {
 
-  override def dataType: DataType = StructType(Seq(
+  private val Schema = StructType(Seq(
     StructField("n_words", LongType, nullable = false),
     StructField("n_flagged", LongType, nullable = false)))
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"expected string, got $other")
-    }
-
-  override def nullable: Boolean = child.nullable
-
-  @transient private lazy val set: Array[Array[Byte]] =
-    BlockWordStats.prepare(words)
-
-  override def nullSafeEval(s: Any): Any =
-    BlockWordStats.compute(s.asInstanceOf[UTF8String], set)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => {
-      val cls = BlockWordStats.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      val setRef = ctx.addReferenceObj("blockSet", set, "byte[][]")
-      s"${ev.value} = $cls.compute($s, $setRef);"
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): BlockWordStats = copy(child = newChild)
-
-  override def prettyName: String = "block_word_stats"
-}
-
-object BlockWordStats {
 
   def prepare(words: Seq[String]): Array[Array[Byte]] =
     words.map(_.getBytes("UTF-8")).toArray
@@ -118,5 +83,6 @@ object BlockWordStats {
 
   /** Column-level API: `words` must be lowercase ASCII. */
   def of(text: Column, words: Seq[String]): Column =
-    Bridge.column(BlockWordStats(Bridge.expression(text), words))
+    Kernel.call(this, "compute", Schema, Seq(text -> exactly(StringType)),
+      Seq(Literal.fromObject(prepare(words))))
 }

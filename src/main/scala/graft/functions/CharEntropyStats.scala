@@ -2,15 +2,14 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.graftbridge.Bridge.exactly
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass per-document character statistics for the t16 quality
   * signal: `struct(n_chars_norm, n_distinct_chars, entropy)` over a
-  * (pre-normalized) string, as a native codegen'd Catalyst expression.
+  * (pre-normalized) string, as a codegen'd row kernel (see [[Kernel]]).
   *
   * Replaces the `transform(array_sort(array_distinct(chars)), c ->
   * size(filter(chars, x -> x = c)))` histogram, which is
@@ -42,42 +41,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * normalized documents (the old arm could not have matched the
   * oracle on one either).
   */
-case class CharEntropyStats(child: Expression) extends UnaryExpression {
+object CharEntropyStats {
 
-  override def dataType: DataType = StructType(Seq(
+  private val Schema = StructType(Seq(
     StructField("n_chars_norm", LongType, nullable = false),
     StructField("n_distinct_chars", LongType, nullable = false),
     StructField("entropy", DoubleType, nullable = false)))
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case org.apache.spark.sql.types.StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"expected string, got $other")
-    }
-
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(s: Any): Any =
-    CharEntropyStats.compute(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => {
-      val cls = CharEntropyStats.getClass.getName.stripSuffix("$") +
-        "$.MODULE$"
-      s"${ev.value} = $cls.compute($s);"
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): CharEntropyStats = copy(child = newChild)
-
-  override def prettyName: String = "char_entropy_stats"
-}
-
-object CharEntropyStats {
 
   // StrictMath, not Math: Spark's codegen'd log2 emits
   // `StrictMath.log(x) / StrictMath.log(2)`, and Math.log's platform
@@ -111,8 +80,7 @@ object CharEntropyStats {
       if (cp < 128) ascii(cp) += 1
       else {
         if (other == null) other = new java.util.TreeMap[Integer, Long]()
-        val prev = other.get(cp)
-        other.put(cp, if (prev == null) 1L else prev + 1L)
+        other.put(cp, other.getOrDefault(cp, 0L) + 1L)
       }
       n += 1
     }
@@ -144,5 +112,5 @@ object CharEntropyStats {
 
   /** Column-level API. */
   def of(text: Column): Column =
-    Bridge.column(CharEntropyStats(Bridge.expression(text)))
+    Kernel.call(this, "compute", Schema, Seq(text -> exactly(StringType)))
 }

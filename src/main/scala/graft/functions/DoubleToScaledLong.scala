@@ -3,10 +3,10 @@ package graft.functions
 import java.math.RoundingMode
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
+import org.apache.spark.sql.graftbridge.Bridge.exactly
+import org.apache.spark.sql.types.{DoubleType, LongType}
 import org.apache.spark.sql.functions.{lit, sum}
 
 /** `double → unscaled long at decimal scale s`, value-identical to the
@@ -40,41 +40,6 @@ import org.apache.spark.sql.functions.{lit, sum}
   * (the ANSI Cast raises its own error class there; this suite never
   * feeds either — documented divergence, not silent).
   */
-case class DoubleToScaledLong(child: Expression, scale: Int)
-    extends UnaryExpression {
-
-  require(scale >= 0 && scale <= 8, s"scale $scale out of range")
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case DoubleType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"expected double, got $other")
-    }
-
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(x: Any): Any =
-    DoubleToScaledLong.compute(x.asInstanceOf[Double], scale)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val cls = DoubleToScaledLong.getClass.getName.stripSuffix("$") +
-        "$.MODULE$"
-      s"${ev.value} = $cls.compute($x, $scale);"
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): DoubleToScaledLong = copy(child = newChild)
-
-  override def prettyName: String = "double_to_scaled_long"
-}
-
 object DoubleToScaledLong {
 
   private val Pow10 = Array.tabulate(9)(i => math.pow(10.0, i))
@@ -123,8 +88,11 @@ object DoubleToScaledLong {
   }
 
   /** Column-level API. */
-  def of(c: Column, scale: Int): Column =
-    Bridge.column(DoubleToScaledLong(Bridge.expression(c), scale))
+  def of(c: Column, scale: Int): Column = {
+    require(scale >= 0 && scale <= 8, s"scale $scale out of range")
+    Kernel.call(this, "compute", LongType, Seq(c -> exactly(DoubleType)),
+      Seq(Literal(scale)))
+  }
 }
 
 /** The suite-wide exact-decimal-sum helpers, rebuilt on

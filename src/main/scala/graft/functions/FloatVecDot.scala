@@ -1,16 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.graftbridge.Bridge.exactly
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
-/** Exact dot product of two `array<float>` columns as a native
-  * codegen'd Catalyst expression.
+/** Exact dot product of two `array<float>` columns as a codegen'd row
+  * kernel (see [[Kernel]]).
   *
   * Numerics: each per-position product is computed in double
   * (exact — two 24-bit mantissas always fit in 53), rounded to 15
@@ -25,67 +21,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * embedding dedup: one fused loop per pair, no per-element object
   * allocation, fully inside whole-stage codegen.
   */
-case class FloatVecDot(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def isFloatArray(dt: DataType): Boolean = dt match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    }
-    // Both children must be array<float>: getFloat on any other array
-    // type would silently reinterpret raw bytes (user-reachable via the
-    // registered SQL function float_vec_dot).
-    if (isFloatArray(left.dataType) && isFloatArray(right.dataType)) {
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    } else {
-      val side = if (isFloatArray(left.dataType)) "right" else "left"
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"expected array<float> on both sides, got $side=" +
-          s"${if (side == "left") left.dataType else right.dataType} " +
-          s"(left=${left.dataType}, right=${right.dataType})")
-    }
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = FloatVecDot.checkedLength(x.numElements(), y.numElements())
-    var acc = 0L
-    var i = 0
-    while (i < n) {
-      acc += FloatVecDot.scaled(x.getFloat(i), y.getFloat(i))
-      i += 1
-    }
-    acc / FloatVecDot.SCALE
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val cls = FloatVecDot.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      s"""
-         |int $n = $cls.checkedLength($a.numElements(), $b.numElements());
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += $cls.scaled($a.getFloat($i), $b.getFloat($i));
-         |}
-         |${ev.value} = $acc / $cls.SCALE();
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): FloatVecDot =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "float_vec_dot"
-}
-
 object FloatVecDot {
   /** 10^15: the decimal grid the products are rounded onto. */
   val SCALE: Double = 1e15
@@ -114,7 +49,24 @@ object FloatVecDot {
     if (s >= 0) Math.round(s) else -Math.round(-s)
   }
 
+  /** The kernel: one fused loop per pair, no per-element allocation. */
+  def compute(x: ArrayData, y: ArrayData): Double = {
+    val n = checkedLength(x.numElements(), y.numElements())
+    var acc = 0L
+    var i = 0
+    while (i < n) {
+      acc += scaled(x.getFloat(i), y.getFloat(i))
+      i += 1
+    }
+    acc / SCALE
+  }
+
+  // both operands must be array<float>: getFloat on any other array
+  // type would silently reinterpret raw bytes (user-reachable via the
+  // registered SQL function float_vec_dot)
+  private val FloatVec = exactly(ArrayType(FloatType))
+
   /** Column-level API. */
   def dot(a: Column, b: Column): Column =
-    Bridge.column(FloatVecDot(Bridge.expression(a), Bridge.expression(b)))
+    Kernel.call(this, "compute", DoubleType, Seq(a -> FloatVec, b -> FloatVec))
 }

@@ -1,13 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
+import org.apache.spark.sql.graftbridge.Bridge.exactly
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
 
-/** All sign-LSH band buckets of a float vector in ONE codegen'd loop:
+/** All sign-LSH band buckets of a float vector in ONE codegen'd kernel
+  * call (see [[Kernel]]):
   * returns `array<long>` of `bands` bucket ids, bit `p` of band `b`
   * set iff `vec · plane(b*planesPerBand+p) > 0`.
   *
@@ -17,33 +17,32 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
   * back to interpreted evaluation and the signature step becomes the
   * dominant cost of the whole near-dup pipeline (measured ~10 µs per
   * dot interpreted vs ~0.1 µs generated). Here the plane matrix is a
-  * single flat float[] reference object and the generated code is one
-  * tight triple loop; only the SIGN of each projection is used, so
+  * single flat float[] literal and the kernel is one tight triple
+  * loop; only the SIGN of each projection is used, so
   * plain double accumulation (sequential, fixed order — deterministic)
   * suffices with no decimal grid.
   */
-case class FloatVecSignBuckets(
-    child: Expression,
-    planes: Array[Float],
-    bands: Int,
-    planesPerBand: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"expected array<float>, got $other")
+object FloatVecSignBuckets {
+  /** The plane matrix must cover bands×planesPerBand projections of
+    * exactly the vector's dimension — anything else means the caller
+    * paired a vector with the wrong hyperplane family, which would
+    * produce plausible but meaningless buckets.
+    */
+  def checkedDim(dim: Int, planesLen: Int, bands: Int, ppb: Int): Int = {
+    if (planesLen != bands * ppb * dim) {
+      throw new IllegalArgumentException(
+        s"float_vec_sign_buckets: $planesLen plane floats for " +
+          s"$bands bands x $ppb planes x $dim dims")
     }
+    dim
+  }
 
-  override def nullSafeEval(input: Any): Any = {
-    val vec = input.asInstanceOf[ArrayData]
-    val dim = FloatVecSignBuckets.checkedDim(
-      vec.numElements(), planes.length, bands, planesPerBand)
+  /** The kernel: `bands` bucket ids of `vec` against the flat plane
+    * matrix.
+    */
+  def compute(vec: ArrayData, planes: Array[Float], bands: Int,
+      planesPerBand: Int): ArrayData = {
+    val dim = checkedDim(vec.numElements(), planes.length, bands, planesPerBand)
     val out = new Array[Long](bands)
     var b = 0
     while (b < bands) {
@@ -66,61 +65,13 @@ case class FloatVecSignBuckets(
     new GenericArrayData(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, vec => {
-      val planesRef = ctx.addReferenceObj("planes", planes, "float[]")
-      val cls = FloatVecSignBuckets.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      val gad = classOf[GenericArrayData].getName
-      val (dim, out, b, p, acc, off, i, bucket) = (
-        ctx.freshName("dim"), ctx.freshName("out"), ctx.freshName("b"),
-        ctx.freshName("p"), ctx.freshName("acc"), ctx.freshName("off"),
-        ctx.freshName("i"), ctx.freshName("bucket"))
-      s"""
-         |int $dim = $cls.checkedDim($vec.numElements(),
-         |  $planesRef.length, $bands, $planesPerBand);
-         |long[] $out = new long[$bands];
-         |for (int $b = 0; $b < $bands; $b++) {
-         |  long $bucket = 0L;
-         |  for (int $p = 0; $p < $planesPerBand; $p++) {
-         |    double $acc = 0.0;
-         |    int $off = ($b * $planesPerBand + $p) * $dim;
-         |    for (int $i = 0; $i < $dim; $i++) {
-         |      $acc += $planesRef[$off + $i] * $vec.getFloat($i);
-         |    }
-         |    if ($acc > 0) $bucket |= 1L << $p;
-         |  }
-         |  $out[$b] = $bucket;
-         |}
-         |${ev.value} = new $gad($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): FloatVecSignBuckets = copy(child = newChild)
-
-  override def prettyName: String = "float_vec_sign_buckets"
-}
-
-object FloatVecSignBuckets {
-  /** The plane matrix must cover bands×planesPerBand projections of
-    * exactly the vector's dimension — anything else means the caller
-    * paired a vector with the wrong hyperplane family, which would
-    * produce plausible but meaningless buckets.
-    */
-  def checkedDim(dim: Int, planesLen: Int, bands: Int, ppb: Int): Int = {
-    if (planesLen != bands * ppb * dim) {
-      throw new IllegalArgumentException(
-        s"float_vec_sign_buckets: $planesLen plane floats for " +
-          s"$bands bands x $ppb planes x $dim dims")
-    }
-    dim
-  }
-
   /** Column-level API; `planes` as (bands*planesPerBand) rows of the
     * vector dimension.
     */
   def buckets(v: Column, planes: Seq[Seq[Float]], bands: Int,
       planesPerBand: Int): Column =
-    Bridge.column(FloatVecSignBuckets(Bridge.expression(v),
-      planes.flatten.toArray, bands, planesPerBand))
+    Kernel.call(this, "compute", ArrayType(LongType, containsNull = false),
+      Seq(v -> exactly(ArrayType(FloatType))),
+      Seq(Literal.fromObject(planes.flatten.toArray), Literal(bands),
+        Literal(planesPerBand)))
 }

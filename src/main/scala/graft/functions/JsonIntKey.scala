@@ -3,14 +3,13 @@ package graft.functions
 import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.graftbridge.Bridge.exactly
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Read one top-level integer key out of a JSON object string, as a
-  * native codegen'd Catalyst expression.
+  * codegen'd row kernel (see [[Kernel]]).
   *
   * Single-scalar-path extraction doesn't need a structural parse, a
   * variant encode, or a regex: the common shape of an event-props
@@ -44,54 +43,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * is space/tab/LF/CR only, numbers take no leading zeros, strings
   * take no unescaped control characters.
   */
-case class JsonIntKey(child: Expression, key: String)
-    extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"expected string, got $other")
-    }
-
-  override def nullable: Boolean = true
-
-  // UTF-8 bytes of the key, computed once — the scan compares raw
-  // bytes, so a char-by-char comparison would never match a multibyte
-  // key's unescaped occurrence
-  @transient private lazy val keyU8 = UTF8String.fromString(key)
-
-  override def nullSafeEval(s: Any): Any =
-    JsonIntKey.extract(s.asInstanceOf[UTF8String], keyU8)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => {
-      val cls = JsonIntKey.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      val keyRef = ctx.addReferenceObj("jsonKey",
-        UTF8String.fromString(key),
-        "org.apache.spark.unsafe.types.UTF8String")
-      val boxed = ctx.freshName("jk")
-      s"""
-         |Object $boxed = $cls.extract($s, $keyRef);
-         |if ($boxed == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ((Long) $boxed).longValue();
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): JsonIntKey = copy(child = newChild)
-
-  override def prettyName: String = "json_int_key"
-}
-
 object JsonIntKey {
 
   private val factory = new JsonFactory() // thread-safe after config
@@ -376,7 +327,11 @@ object JsonIntKey {
     } catch { case scala.util.control.NonFatal(_) => null }
   }
 
-  /** Column-level API. */
+  /** Column-level API. The key goes in as a `string` literal, i.e. as
+    * UTF-8 bytes once per plan: the scan compares raw bytes, so a
+    * multibyte key matches its unescaped occurrences.
+    */
   def of(json: Column, key: String): Column =
-    Bridge.column(JsonIntKey(Bridge.expression(json), key))
+    Kernel.call(this, "extract", LongType, Seq(json -> exactly(StringType)),
+      Seq(Literal(key)), returnNullable = true)
 }

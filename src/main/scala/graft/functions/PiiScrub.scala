@@ -2,15 +2,14 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.graftbridge.Bridge.exactly
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass PII detection + scrubbing for the t5 gate:
-  * `struct(n_emails, n_phones, clean)` over a string, as a native
-  * codegen'd Catalyst expression — a hand-compiled scanner for the
+  * `struct(n_emails, n_phones, clean)` over a string, as a codegen'd
+  * row kernel (see [[Kernel]]) — a hand-compiled scanner for the
   * two fixed patterns the gate uses, replacing two `regexp_count`
   * plus two chained `regexp_replace` Java-regex passes (8.8x vs the
   * reference at sf10; java.util.regex re-executes the NFA with
@@ -45,41 +44,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * UTF-8 lead/continuation bytes are all >= 0x80, so they can never
   * false-match a class test.
   */
-case class PiiScrub(child: Expression) extends UnaryExpression {
+object PiiScrub {
 
-  override def dataType: DataType = StructType(Seq(
+  private val Schema = StructType(Seq(
     StructField("n_emails", LongType, nullable = false),
     StructField("n_phones", LongType, nullable = false),
     StructField("clean", StringType, nullable = false)))
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"expected string, got $other")
-    }
-
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(s: Any): Any =
-    PiiScrub.compute(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => {
-      val cls = PiiScrub.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      s"${ev.value} = $cls.compute($s);"
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): PiiScrub = copy(child = newChild)
-
-  override def prettyName: String = "pii_scrub"
-}
-
-object PiiScrub {
 
   private val Email = "<EMAIL>".getBytes
   private val Phone = "<PHONE>".getBytes
@@ -204,5 +174,5 @@ object PiiScrub {
 
   /** Column-level API. */
   def of(text: Column): Column =
-    Bridge.column(PiiScrub(Bridge.expression(text)))
+    Kernel.call(this, "compute", Schema, Seq(text -> exactly(StringType)))
 }

@@ -2,16 +2,15 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Literal}
+import org.apache.spark.sql.graftbridge.Bridge.exactly
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass quality-scan counters for the t2 quality scorer:
   * `struct(n_chars, n_words, n_punct, n_stop, n_alpha, n_word_chars)`
   * over the raw text against a plan-time-constant lowercase-ASCII
-  * stopword set, as a native codegen'd Catalyst expression.
+  * stopword set, as a codegen'd row kernel (see [[Kernel]]).
   *
   * Replaces the t16-class interpreted pipeline the r11 ports left
   * behind in t2 (three corpus-wide regexp_replace passes, a split
@@ -57,10 +56,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * corpus regeneration that broke the assumption fails that spec
   * loudly instead of skewing n_stop/n_alpha silently.
   */
-case class QualityScanStats(child: Expression, stopWords: Seq[String])
-    extends UnaryExpression {
+object QualityScanStats {
 
-  override def dataType: DataType = StructType(Seq(
+  private val Schema = StructType(Seq(
     StructField("n_chars", LongType, nullable = false),
     StructField("n_words", LongType, nullable = false),
     StructField("n_punct", LongType, nullable = false),
@@ -68,40 +66,6 @@ case class QualityScanStats(child: Expression, stopWords: Seq[String])
     StructField("n_alpha", LongType, nullable = false),
     StructField("n_word_chars", LongType, nullable = false),
     StructField("max_word_chars", LongType, nullable = false)))
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"expected string, got $other")
-    }
-
-  override def nullable: Boolean = child.nullable
-
-  @transient private lazy val set: Array[Array[Byte]] =
-    stopWords.map(_.getBytes("UTF-8")).toArray
-
-  override def nullSafeEval(s: Any): Any =
-    QualityScanStats.compute(s.asInstanceOf[UTF8String], set)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => {
-      val cls = QualityScanStats.getClass.getName.stripSuffix("$") +
-        "$.MODULE$"
-      val setRef = ctx.addReferenceObj("stopSet", set, "byte[][]")
-      s"${ev.value} = $cls.compute($s, $setRef);"
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): QualityScanStats = copy(child = newChild)
-
-  override def prettyName: String = "quality_scan_stats"
-}
-
-object QualityScanStats {
 
   private def isWs(b: Int): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' ||
@@ -176,5 +140,6 @@ object QualityScanStats {
 
   /** Column-level API: `stopWords` must be lowercase ASCII. */
   def of(text: Column, stopWords: Seq[String]): Column =
-    Bridge.column(QualityScanStats(Bridge.expression(text), stopWords))
+    Kernel.call(this, "compute", Schema, Seq(text -> exactly(StringType)),
+      Seq(Literal.fromObject(BlockWordStats.prepare(stopWords))))
 }

@@ -3,15 +3,13 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.graftbridge.Bridge.exactly
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 
 /** Polynomial rolling-hash document fingerprint over an
-  * `array<string>` of words, as a native codegen'd Catalyst
-  * expression: `acc = (acc * 31 + md5_32(word)) mod 1e9+7`, starting
+  * `array<string>` of words, as a codegen'd row kernel (see
+  * [[Kernel]]): `acc = (acc * 31 + md5_32(word)) mod 1e9+7`, starting
   * from 0, where `md5_32` is the first 4 bytes of the word's MD5
   * digest read big-endian (== the first 8 hex chars parsed base-16 —
   * the engine-agnostic form a SQL oracle can state).
@@ -27,50 +25,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * unreduced).
   *
   * Null handling matches the fold it replaces: a null words array or
-  * a null element yields NULL (aggregate's merge on null is null).
+  * a null element yields NULL (aggregate's merge on null is null), so
+  * the result is nullable even over a non-null array.
   */
-case class RollingFingerprint(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"expected array<string>, got $other")
-    }
-
-  // a null ELEMENT nulls the whole fingerprint, so the boxed-Long
-  // return carries the nullability (UnaryExpression handles null input)
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(a: Any): Any =
-    RollingFingerprint.hashWords(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val cls = RollingFingerprint.getClass.getName.stripSuffix("$") +
-        "$.MODULE$"
-      val boxed = ctx.freshName("fp")
-      s"""
-         |Object $boxed = $cls.hashWords($a);
-         |if ($boxed == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ((Long) $boxed).longValue();
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): RollingFingerprint = copy(child = newChild)
-
-  override def prettyName: String = "rolling_fingerprint"
-}
-
 object RollingFingerprint {
   val Mod: Long = 1000000007L
 
@@ -102,5 +59,6 @@ object RollingFingerprint {
 
   /** Column-level API. */
   def of(words: Column): Column =
-    Bridge.column(RollingFingerprint(Bridge.expression(words)))
+    Kernel.call(this, "hashWords", LongType,
+      Seq(words -> exactly(ArrayType(StringType))), returnNullable = true)
 }

@@ -2,15 +2,14 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.graftbridge.Bridge.exactly
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass token statistics for the t3 token-counting signal:
   * `struct(n_chars, ws_tokens, re_tokens)` over the raw text, as a
-  * native codegen'd Catalyst expression.
+  * codegen'd row kernel (see [[Kernel]]).
   *
   * Replaces two `split` array materializations plus a
   * `regexp_extract_all` that allocated every match just to take
@@ -37,41 +36,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - `n_chars` = `length(text)` in code points, for the
   *     chars-per-token ratio without a second pass.
   */
-case class TokenCounts(child: Expression) extends UnaryExpression {
+object TokenCounts {
 
-  override def dataType: DataType = StructType(Seq(
+  private val Schema = StructType(Seq(
     StructField("n_chars", LongType, nullable = false),
     StructField("ws_tokens", LongType, nullable = false),
     StructField("re_tokens", LongType, nullable = false)))
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"expected string, got $other")
-    }
-
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(s: Any): Any =
-    TokenCounts.compute(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => {
-      val cls = TokenCounts.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      s"${ev.value} = $cls.compute($s);"
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): TokenCounts = copy(child = newChild)
-
-  override def prettyName: String = "token_counts"
-}
-
-object TokenCounts {
 
   private def isWs(cp: Int): Boolean =
     cp == ' ' || cp == '\t' || cp == '\n' || cp == 0x0B || cp == '\f' ||
@@ -139,5 +109,5 @@ object TokenCounts {
 
   /** Column-level API. */
   def of(text: Column): Column =
-    Bridge.column(TokenCounts(Bridge.expression(text)))
+    Kernel.call(this, "compute", Schema, Seq(text -> exactly(StringType)))
 }

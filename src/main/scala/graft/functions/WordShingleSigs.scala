@@ -1,11 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, StringType}
+import org.apache.spark.sql.graftbridge.Bridge.exactly
+import org.apache.spark.sql.types.{ArrayType, BinaryType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** All n-word shingle signatures of a word array, as 16-byte binary
@@ -36,7 +35,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `size(words) >= 5` pre-filter of the form it replaces becomes a
   * no-op under explode.
   *
-  * TEXT MODE (r12): a `string` child is tokenized directly from its
+  * TEXT MODE (r12): a `string` input is tokenized directly from its
   * UTF-8 bytes — maximal runs of non-`\s` bytes are the words, exactly
   * the word list `split(lower-ed text collapsed by regexp_replace +
   * trim), " ")` produces (Java's `\s` class is 6 ASCII chars; a UTF-8
@@ -51,55 +50,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * risk. ShingleSigSpec pins text-mode ≡ array-mode on the corpus and
   * on adversarial whitespace/unicode edges.
   */
-case class WordShingleSigs(child: Expression, n: Int)
-    extends UnaryExpression {
-
-  require(n >= 1 && n <= 64, s"shingle width $n out of range")
-
-  override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-
-  private def isTextMode: Boolean = child.dataType == StringType
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case ArrayType(StringType, false) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case ArrayType(StringType, true) =>
-        // compute() hashes elements without a null check; split()
-        // output (the only intended feeder) is containsNull=false, so
-        // reject nullable elements at analysis time instead of NPEing
-        // at runtime (ADVICE r11).
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          "expected array<string> with non-nullable elements " +
-            "(feed split() output or wrap with filter(x -> x is not null))")
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"expected string or array<string>, got $other")
-    }
-
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(a: Any): Any =
-    if (isTextMode) WordShingleSigs.computeText(a.asInstanceOf[UTF8String], n)
-    else WordShingleSigs.compute(a.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val cls = WordShingleSigs.getClass.getName.stripSuffix("$") +
-        "$.MODULE$"
-      val method = if (isTextMode) "computeText" else "compute"
-      s"${ev.value} = $cls.$method($a, $n);"
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): WordShingleSigs = copy(child = newChild)
-
-  override def prettyName: String = "word_shingle_sigs"
-}
-
 object WordShingleSigs {
 
   // FNV-1a 64 parameters; lane B gets a different offset basis and a
@@ -183,7 +133,7 @@ object WordShingleSigs {
 
   /** Text mode: tokenize maximal non-`\s` byte runs and hash each run
     * in place — no word strings, no regex pass, no transient array.
-    * Word-for-word identical lane hashes to [[compute]] over
+    * Word-for-word identical lane hashes to the array [[compute]] over
     * `split(trim(regexp_replace(text, "\s+", " ")), " ")` whenever the
     * text contains at least one non-whitespace byte. When it does not,
     * the split form yields the `[""]` singleton (one empty word) while
@@ -191,7 +141,7 @@ object WordShingleSigs {
     * sides emit the empty sig array); only a degenerate n=1 caller on
     * empty/whitespace-only text would see the difference.
     */
-  def computeText(text: UTF8String, n: Int): ArrayData = {
+  def compute(text: UTF8String, n: Int): ArrayData = {
     val bytes = text.getBytes
     val len = bytes.length
     var cap = 32
@@ -221,7 +171,18 @@ object WordShingleSigs {
     combine(ha, hb, m, n)
   }
 
-  /** Column-level API. */
-  def of(words: Column, n: Int): Column =
-    Bridge.column(WordShingleSigs(Bridge.expression(words), n))
+  /** Column-level API over `string` text (text mode) or an
+    * `array<string>` of words whose elements cannot be null: the array
+    * [[compute]] hashes elements without a null check, and split()
+    * output (the intended feeder) is `containsNull = false`, so a
+    * nullable-element array fails analysis instead of NPEing at run
+    * time (wrap it with `filter(x -> x is not null)`).
+    */
+  def of(words: Column, n: Int): Column = {
+    require(n >= 1 && n <= 64, s"shingle width $n out of range")
+    Kernel.call(this, "compute", ArrayType(BinaryType, containsNull = false),
+      Seq(words ->
+        exactly(StringType, ArrayType(StringType, containsNull = false))),
+      Seq(Literal(n)))
+  }
 }

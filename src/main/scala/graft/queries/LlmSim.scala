@@ -193,7 +193,6 @@ object LlmSim extends QueryModule {
     */
   private[graft] def trainCentroids(s: SparkSession, e0: DataFrame,
       k: Int, iters: Int): Seq[(Int, Seq[Float])] = {
-    import s.implicits._
     // the training set is scanned 2x per Lloyd iteration; persist it
     // for the (bounded) lifetime of training and release before
     // returning — at 100 TB the training input is a sample, so the
@@ -487,7 +486,6 @@ object LlmSim extends QueryModule {
     * itself) and the r9 driver gate key s4b (its exact-recall
     * evaluation summary). */
   private def knnGraph(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
         val K = 3
         val W = 48
         val e = t(s, dir, "embeddings")
@@ -551,7 +549,6 @@ object LlmSim extends QueryModule {
   /** s3's IVF top-k builder, shared by the operator key and its
     * r9 driver recall gate (s3b). */
   private def ivfTopk(s: SparkSession, dir: String): DataFrame = {
-        import s.implicits._
         val e = t(s, dir, "embeddings")
         // train on an ABSOLUTELY bounded sample (the first 5000 vec
         // ids — a no-op below sf1, the whole point above it): quantizer
@@ -564,8 +561,7 @@ object LlmSim extends QueryModule {
         // [[assignCells]]; the old broadcast-join + row_number window
         // paid an Exchange+Sort of n×16 embedding-carrying rows per
         // assignment (plan diff: plans/r15/s3_ann_ivf_{before,after}.txt)
-        def assign(df: DataFrame, vec: Column, nprobe: Int,
-            idCol: String): DataFrame =
+        def assign(df: DataFrame, vec: Column, nprobe: Int): DataFrame =
           assignCells(df, vec, nprobe, centroids).drop("cent_dot")
         // exact-then-near (same collapse as s2/d5b): byte-identical
         // corpus vectors fill inverted lists ONCE via their min-id
@@ -581,11 +577,11 @@ object LlmSim extends QueryModule {
           explode(col("member_ids")).as("cand_id"))
         val cands = assign(
           grouped.select(col("rep_id"), col("embedding").as("cv")),
-          col("cv"), nprobe = 2, idCol = "rep_id")
+          col("cv"), nprobe = 2)
         val queries = assign(
           e.filter(col("vec_id") < 10)
             .select(col("vec_id").as("query_id"), col("embedding").as("qv")),
-          col("qv"), nprobe = 4, idCol = "query_id")
+          col("qv"), nprobe = 4)
         val scored = queries.join(cands, Seq("cent_id"))
           .select(col("query_id"), col("rep_id"),
             cosine(col("qv"), col("cv")).as("cosine"))

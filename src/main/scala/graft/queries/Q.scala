@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{expr, lower, regexp_replace,
   timestamp_micros, trim}
@@ -43,16 +44,7 @@ object Q {
     * materializes there instead of assuming a POSIX tmpdir.
     */
   def scratch(spark: SparkSession, name: String): String = {
-    import org.apache.hadoop.fs.Path
-    val root = sys.env.getOrElse("GRAFT_SCRATCH_ROOT",
-      "file:" + System.getProperty("java.io.tmpdir"))
-    // Suffix with the Spark application id: two concurrent graft JVMs
-    // (e.g. a bench run overlapping a correctness run) must never
-    // share a scratch database — a CTAS rename-aside in one process
-    // would corrupt the other's mid-swap read. Within one JVM the id
-    // is stable, so each gate keeps its own drop-first determinism.
-    val p = new Path(root,
-      s"graft_${spark.sparkContext.applicationId}/graft_db_$name")
+    val p = new Path(scratchRoot(spark), s"graft_db_$name")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(p)
     fs.makeQualified(p).toString
@@ -66,13 +58,23 @@ object Q {
     * otherwise stack ~43 GB of dead tables under the live one.
     */
   def cleanScratch(spark: SparkSession): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = sys.env.getOrElse("GRAFT_SCRATCH_ROOT",
-      "file:" + System.getProperty("java.io.tmpdir"))
-    val p = new Path(root, s"graft_${spark.sparkContext.applicationId}")
+    val p = scratchRoot(spark)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(p, true)
   }
+
+  /** This application's scratch root: `GRAFT_SCRATCH_ROOT` (default
+    * the JVM tmpdir) plus `graft_<applicationId>`. The application id
+    * keeps two concurrent graft JVMs (e.g. a bench run overlapping a
+    * correctness run) from ever sharing a scratch database — a CTAS
+    * rename-aside in one process would corrupt the other's mid-swap
+    * read. Within one JVM the id is stable, so each gate keeps its own
+    * drop-first determinism.
+    */
+  private def scratchRoot(spark: SparkSession): Path =
+    new Path(sys.env.getOrElse("GRAFT_SCRATCH_ROOT",
+      "file:" + System.getProperty("java.io.tmpdir")),
+      s"graft_${spark.sparkContext.applicationId}")
 
   /** DuckDB rendering of [[graft.functions.Dnum.dsum]] (numeric policy
     * above): exact decimal(18,scale) sum, as double. */

@@ -35,7 +35,7 @@ class BenchTailSpec extends AnyFunSuite {
     assert(parts.forall(_.get("metric").asText == "queries_part"))
     assert(parts.map(_.get("i").asInt) == parts.indices)
     assert(parts.forall(_.get("k").asInt == parts.size))
-    val got = parts.flatMap(_.get("queries").fields().asScala
+    val got = parts.flatMap(_.get("queries").properties().asScala
       .map(e => e.getKey -> e.getValue)).toMap
     assert(got.keySet == names.toSet)
     failed.foreach(n => assert(got(n).isNull, n))

@@ -58,7 +58,7 @@ class ClusterSpec extends AnyFunSuite {
     assert(after3 <= after1,
       s"cached RDDs grew across invocations: $after1 -> $after3")
     graft.queries.GateCache.release(spark)
-    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    val left = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
     assert(left.isEmpty, s"d6 left persisted RDDs after release: $left")
   }
 

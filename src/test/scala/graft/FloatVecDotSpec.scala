@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.FloatVecDot
+import graft.functions.{FloatVecDot, PiiScrub}
 
 class FloatVecDotSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -47,13 +48,29 @@ class FloatVecDotSpec extends AnyFunSuite {
   test("interpreted eval path agrees with codegen") {
     import org.apache.spark.sql.catalyst.util.ArrayData
     import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.graftbridge.Bridge
     val a = ArrayData.toArrayData(Array(0.5f, -1.25f, 2.0f))
-    val expr = graft.functions.FloatVecDot(
-      Literal.create(a, org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType)),
-      Literal.create(a, org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType)))
+    val expr = Bridge.expression(FloatVecDot.dot(
+      Bridge.column(Literal.create(a, org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.FloatType))),
+      Bridge.column(Literal.create(a, org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.FloatType)))))
     val interpreted = expr.eval(null).asInstanceOf[Double]
     assert(math.abs(interpreted - (0.25 + 1.5625 + 4.0)) < 1e-12)
+  }
+
+  test("kernel operands of the wrong type fail analysis") {
+    // the input contract: no implicit cast toward a kernel's operand
+    // type (ANSI coercion would turn an int into a string and an
+    // array<double> into an array<float>)
+    spark.range(1).selectExpr("id AS l", "array(cast(id AS float)) AS f",
+        "array(cast(id AS double)) AS d", "cast(id AS int) AS i")
+      .createOrReplaceTempView("fvd_types")
+    intercept[AnalysisException](
+      spark.sql("select float_vec_dot(l, f) from fvd_types"))
+    intercept[AnalysisException](
+      spark.sql("select float_vec_dot(d, f) from fvd_types"))
+    intercept[AnalysisException](
+      spark.table("fvd_types").select(PiiScrub.of(col("i"))))
   }
 }

@@ -318,7 +318,7 @@ class PlanSpec extends AnyFunSuite {
   }
   test("q1/q44/q47 decimal measures ride the scaled-long path (no per-row Cast)") {
     // the r11 bias-class fix, pinned: dsum/davg inputs must plan as
-    // double_to_scaled_long + primitive long sums, never as a per-row
+    // DoubleToScaledLong.compute + primitive long sums, never as a per-row
     // cast(double as decimal) whose BigDecimal allocation rides every
     // fact row (and whose >18-digit sum buffer forces variable-length
     // aggregation-map updates). The reconstruction to decimal happens
@@ -326,7 +326,8 @@ class PlanSpec extends AnyFunSuite {
     for (q <- Seq("q1_agg", "q44_in_having", "q47_salted_join",
         "q65_unpivot", "q43_avg_subquery")) {
       val p = planOf(q)
-      assert(p.contains("double_to_scaled_long"),
+      assert(p.contains(
+          "static_invoke(graft.functions.DoubleToScaledLong.compute("),
         s"$q lost the scaled-long sum path:\n$p")
       val castSums = p.linesIterator.filter(l =>
         l.contains("partial_sum(cast(") && l.contains("as decimal")).toSeq
@@ -341,7 +342,7 @@ class PlanSpec extends AnyFunSuite {
     // and the bench probe must stay a semi join (bench is distinct,
     // so inner join output would only duplicate corpus rows).
     val p = planOf("d9_contamination")
-    assert(p.contains("word_shingle_sigs"),
+    assert(p.contains("static_invoke(graft.functions.WordShingleSigs.compute("),
       s"d9 lost the native shingle signatures:\n$p")
     assert(!p.contains("concat_ws"),
       s"d9 re-grew shingle string construction:\n$p")
