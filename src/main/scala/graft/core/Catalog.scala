@@ -295,13 +295,8 @@ final class Catalog(val spark: SparkSession, val database: String) {
     else {
       val existing = table(schema, tableName)
       val (tgt, inc) = widenTo(existing, df)
-      val dup = inc.groupBy(uniqueKey.map(col): _*).count()
-        .filter(col("count") > 1).limit(1).collect()
-      require(dup.isEmpty,
-        s"merge increment for $schema.$tableName has multiple rows per " +
-          s"unique_key (${uniqueKey.mkString(", ")}), e.g. " +
-          dup.headOption.map(_.toString).getOrElse("") +
-          " — SQL MERGE forbids multiple source matches per target row")
+      requireUniqueKey(inc, uniqueKey, s"merge increment for $schema.$tableName",
+        "SQL MERGE forbids multiple source matches per target row")
       val upd =
         if (updateColumns.nonEmpty) updateColumns
         else inc.columns.toSeq.filterNot(uniqueKey.contains)
@@ -334,6 +329,19 @@ final class Catalog(val spark: SparkSession, val database: String) {
       createTableAs(schema, tableName,
         merged.unionByName(inserts, allowMissingColumns = true))
     }
+  }
+
+  /** Fail loudly when `df` holds more than one row for some value of
+    * `key` (`what` names the input, `why` the rule it would break): one
+    * map-side-combined aggregate, LIMIT 1 — aggregates reach the
+    * driver, never rows. */
+  private def requireUniqueKey(df: DataFrame, key: Seq[String],
+      what: String, why: String): Unit = {
+    val dup = df.groupBy(key.map(col): _*).count()
+      .filter(col("count") > 1).limit(1).collect()
+    require(dup.isEmpty,
+      s"$what has multiple rows per unique_key (${key.mkString(", ")}), " +
+        s"e.g. ${dup.headOption.map(_.toString).getOrElse("")} — $why")
   }
 
   /** Cast the columns `a` and `b` share to their widest common type,
@@ -399,51 +407,14 @@ final class Catalog(val spark: SparkSession, val database: String) {
     * `asOf` is an explicit timestamp literal so runs are deterministic
     * and replayable (pass current_timestamp at the call site for wall
     * clock). Change detection hashes the payload columns as canonical
-    * JSON. All joins are key-equi-joins — the history table never
-    * self-joins on anything wider, so the shape scales like any
-    * incremental merge.
+    * JSON. Same scale shape as every incremental merge ([[scd2]]).
     */
   def snapshot(schema: String, tableName: String, df: DataFrame,
       uniqueKey: Seq[String], asOf: String): Unit = {
+    val payload = df.columns.filterNot(uniqueKey.contains).toSeq.sorted
     val at = to_timestamp(lit(asOf))
-    val payload = df.columns.filterNot(uniqueKey.contains).toSeq
-    def fingerprint(d: DataFrame): Column =
-      md5(to_json(struct(payload.sorted.map(d.col): _*)))
-    val incoming = df.withColumn("_fp", fingerprint(df))
-    if (!listRelations(schema).contains(tableName)) {
-      createTableAs(schema, tableName,
-        incoming.drop("_fp")
-          .withColumn("dbt_valid_from", at)
-          .withColumn("dbt_valid_to", lit(null).cast("timestamp")))
-    } else {
-      val cur = table(schema, tableName)
-      val closed = cur.filter(col("dbt_valid_to").isNotNull)
-      val open = cur.filter(col("dbt_valid_to").isNull)
-      val openFp = open.withColumn("_fp",
-        md5(to_json(struct(payload.sorted.map(open.col): _*))))
-      val inKeyed = incoming.select(
-        (uniqueKey.map(col) :+ col("_fp").as("_fp_new")): _*)
-      val joined = openFp.join(inKeyed, uniqueKey, "left_outer")
-      // current versions: close if the payload changed, keep otherwise
-      val stillOpen = joined
-        .filter(col("_fp_new").isNull || col("_fp_new") === col("_fp"))
-        .drop("_fp", "_fp_new")
-      val nowClosed = joined
-        .filter(col("_fp_new").isNotNull && col("_fp_new") =!= col("_fp"))
-        .drop("_fp", "_fp_new")
-        .withColumn("dbt_valid_to", at)
-      // incoming rows that open a new version: new keys or changed rows
-      val opens = incoming
-        .join(openFp.select((uniqueKey.map(col) :+
-          col("_fp").as("_fp_cur")): _*), uniqueKey, "left_outer")
-        .filter(col("_fp_cur").isNull || col("_fp_cur") =!= col("_fp"))
-        .drop("_fp", "_fp_cur")
-        .withColumn("dbt_valid_from", at)
-        .withColumn("dbt_valid_to", lit(null).cast("timestamp"))
-      createTableAs(schema, tableName,
-        closed.unionByName(stillOpen).unionByName(nowClosed)
-          .unionByName(opens))
-    }
+    scd2(schema, tableName, df, uniqueKey,
+      d => md5(to_json(struct(payload.map(d.col): _*))), _ =!= _, _ => at)
   }
 
   /** dbt-style snapshot, `timestamp` strategy (the other standard dbt
@@ -459,44 +430,56 @@ final class Catalog(val spark: SparkSession, val database: String) {
     * own `updatedAt`, and the closed version's `dbt_valid_to` is the
     * superseding row's `updatedAt` — exactly how dbt's timestamp
     * strategy stitches history. Rows whose `updatedAt` did not advance
-    * (equal or older — late arrivals) leave history untouched. Same
-    * scale shape as [[snapshot]]: key-equi-joins only, then the atomic
-    * CTAS swap.
+    * (equal or older — late arrivals) leave history untouched, and a
+    * NULL `updatedAt` on either side never supersedes.
     */
   def snapshotTimestamp(schema: String, tableName: String, df: DataFrame,
       uniqueKey: Seq[String], updatedAt: String): Unit = {
-    val tsOf = (d: DataFrame) => d.col(updatedAt).cast("timestamp")
-    if (!listRelations(schema).contains(tableName)) {
-      createTableAs(schema, tableName,
-        df.withColumn("dbt_valid_from", tsOf(df))
-          .withColumn("dbt_valid_to", lit(null).cast("timestamp")))
-    } else {
+    val ts = (d: DataFrame) => d.col(updatedAt).cast("timestamp")
+    scd2(schema, tableName, df, uniqueKey, ts, (cur, next) => next > cur, ts)
+  }
+
+  /** The SCD-2 step both snapshot strategies run. `version(d)` is a
+    * row's version in frame `d`; `changed(cur, next)` says whether the
+    * incoming version supersedes the open one, and a NULL answer counts
+    * as unchanged (dbt's `valid_from < updated_at`); `at(d)` is when an
+    * incoming row's version starts, and so when the one it supersedes
+    * ends. Open versions are kept exactly when not superseded; an
+    * incoming row opens a version when its key has no open version
+    * (told by a match flag, so a NULL version still counts as open) or
+    * its open version was just superseded. The source must be unique
+    * on `key`: two rows for one key would close its version twice and
+    * open two. Key-equi-joins only, then the atomic CTAS swap — the
+    * history never self-joins on anything wider.
+    */
+  private def scd2(schema: String, tableName: String, df: DataFrame,
+      key: Seq[String], version: DataFrame => Column,
+      changed: (Column, Column) => Column, at: DataFrame => Column): Unit = {
+    requireUniqueKey(df, key, s"snapshot source for $schema.$tableName",
+      "one version per key and run")
+    def opened(d: DataFrame) = d.withColumn("dbt_valid_from", at(d))
+      .withColumn("dbt_valid_to", lit(null).cast("timestamp"))
+    if (!listRelations(schema).contains(tableName))
+      createTableAs(schema, tableName, opened(df))
+    else {
       val cur = table(schema, tableName)
-      val closed = cur.filter(col("dbt_valid_to").isNotNull)
       val open = cur.filter(col("dbt_valid_to").isNull)
-      val inKeyed = df.select(
-        (uniqueKey.map(col) :+ tsOf(df).as("_ts_new")): _*)
-      val joined = open.join(inKeyed, uniqueKey, "left_outer")
-      val stillOpen = joined
-        .filter(col("_ts_new").isNull ||
-          col("_ts_new") <= col(updatedAt).cast("timestamp"))
-        .drop("_ts_new")
-      val nowClosed = joined
-        .filter(col("_ts_new").isNotNull &&
-          col("_ts_new") > col(updatedAt).cast("timestamp"))
-        .withColumn("dbt_valid_to", col("_ts_new"))
-        .drop("_ts_new")
-      val opens = df
-        .join(open.select((uniqueKey.map(col) :+
-          tsOf(open).as("_ts_cur")): _*), uniqueKey, "left_outer")
-        .filter(col("_ts_cur").isNull ||
-          tsOf(df) > col("_ts_cur"))
-        .drop("_ts_cur")
-        .withColumn("dbt_valid_from", tsOf(df))
-        .withColumn("dbt_valid_to", lit(null).cast("timestamp"))
+      val curV = open.select(key.map(col) :+ version(open).as("_cur") :+
+        lit(true).as("_open"): _*)
+      val superseded = coalesce(changed(col("_cur"), col("_new")), lit(false))
+      val joined = open.withColumn("_cur", version(open)).join(
+        df.select(key.map(col) :+ version(df).as("_new") :+ at(df).as("_at"): _*),
+        key, "left_outer")
+      val kept = joined.filter(!superseded).drop("_cur", "_new", "_at")
+      val closed = joined.filter(superseded)
+        .withColumn("dbt_valid_to", col("_at")).drop("_cur", "_new", "_at")
+      val opens = df.join(curV, key, "left_outer")
+        .withColumn("_new", version(df))
+        .filter(col("_open").isNull || superseded)
+        .drop("_cur", "_open", "_new")
       createTableAs(schema, tableName,
-        closed.unionByName(stillOpen).unionByName(nowClosed)
-          .unionByName(opens))
+        cur.filter(col("dbt_valid_to").isNotNull).unionByName(kept)
+          .unionByName(closed).unionByName(opened(opens)))
     }
   }
 

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * decision must be, so pairs are closed into connected components.
   */
 object LlmCluster extends QueryModule {
-  import Q.{t, norm, normSql}
+  import Q.{t, norm, normSql, bagSig, bagSigSql}
 
   private val emailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
   private val phoneRe = "\\+[0-9]{1,2} [0-9]{3}-[0-9]{4}"
@@ -138,9 +138,7 @@ object LlmCluster extends QueryModule {
         // grouping. unhex(md5) halves both exchanges' key payload.
         val keyed = docs.select(col("doc_id"),
           unhex(md5(substring(col("nrm"), 1, 40))).as("pfx"),
-          unhex(md5(array_join(
-            array_sort(array_distinct(split(col("nrm"), " "))),
-            " "))).as("bag"))
+          unhex(bagSig(col("nrm"))).as("bag"))
         // Contraction: every doc is directly connected to its prefix
         // group's min ("pfx root") and its bag group's min, so the
         // component structure survives collapsing each group to its
@@ -176,8 +174,7 @@ object LlmCluster extends QueryModule {
           SELECT doc_id, $normSql AS nrm FROM documents),
         keyed AS (
           SELECT doc_id, md5(substr(nrm, 1, 40)) AS pfx,
-            md5(array_to_string(list_sort(list_distinct(
-              string_split(nrm, ' '))), ' ')) AS bag
+            ${bagSigSql("nrm")} AS bag
           FROM docs),
         rooted AS (
           SELECT doc_id,

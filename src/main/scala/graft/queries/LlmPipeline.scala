@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * filtering when a corpus is turned into training batches).
   */
 object LlmPipeline extends QueryModule {
-  import Q.{t, norm}
+  import Q.{t, norm, normSql}
 
   def queries: Map[String, Q] = Map(
     // ─── t6: sequence packing (concatenate-and-chop) ───
@@ -89,9 +89,9 @@ object LlmPipeline extends QueryModule {
           .select(col("doc_id"), col("lang"))
           .orderBy(col("doc_id"))
       },
-      Some("""WITH nrmdocs AS (
+      Some(s"""WITH nrmdocs AS (
           SELECT doc_id, lang, text,
-            md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS sig
+            md5($normSql) AS sig
           FROM documents),
         corpus_sigs AS (SELECT DISTINCT sig FROM nrmdocs),
         batch AS (
@@ -102,7 +102,7 @@ object LlmPipeline extends QueryModule {
           FROM documents WHERE doc_id % 5 = 0),
         qualified AS (
           SELECT doc_id, lang,
-            md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS sig
+            md5($normSql) AS sig
           FROM batch WHERE length(text) >= 100),
         batch_keep AS (
           SELECT sig, min(doc_id) AS doc_id FROM qualified GROUP BY sig)
@@ -172,9 +172,9 @@ object LlmPipeline extends QueryModule {
             (coalesce(col("n_cont"), lit(0L)) > 0).as("contaminated"))
           .orderBy(col("doc_id"))
       },
-      Some("""WITH w AS (
+      Some(s"""WITH w AS (
           SELECT doc_id,
-            string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))),
+            string_split($normSql,
               ' ') AS words
           FROM documents),
         sh AS (
@@ -382,10 +382,9 @@ object LlmPipeline extends QueryModule {
           .withColumn("keep", col("score") > 0.0333)
           .orderBy(col("doc_id"))
       },
-      Some("""WITH toks AS (
+      Some(s"""WITH toks AS (
           SELECT doc_id,
-            unnest(string_split(lower(trim(regexp_replace(text, '\s+', ' ',
-              'g'))), ' ')) AS w
+            unnest(string_split($normSql, ' ')) AS w
           FROM documents),
         wf AS (SELECT w, count(*) AS wf FROM toks GROUP BY w),
         total AS (SELECT count(*) AS n FROM toks)

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.types.DecimalType
 
 /** Near-duplicate detection + similarity search for LLM training-data
@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.DecimalType
   * single codegen'd projection (array folds, no UDFs, no shuffle).
   */
 object LlmSim extends QueryModule {
-  import Q.{t, norm}
+  import Q.{t, norm, normSql, shingles}
   import graft.functions.FloatVecDot.dot
 
   // ── deterministic coefficient tables (seeded LCG, no RNG at plan time) ──
@@ -31,27 +31,37 @@ object LlmSim extends QueryModule {
       math.abs(it.next()) % P30))
   }
 
-  /** 32 hyperplanes (8 bands × 4 planes) × 64 dims in [-1, 1] for
-    * sign-LSH, stored as float arrays so the codegen'd FloatVecDot
-    * kernel computes each signed projection (the higher-order
-    * aggregate/zip_with alternative runs interpreted).
-    */
-  private val hyperplanes: Seq[Seq[Float]] = {
-    val it = lcgStream(7L)
-    Seq.fill(32)(Seq.fill(64)(
-      ((math.abs(it.next()) % 2001) / 1000.0 - 1.0).toFloat))
+  /** Sign-LSH over the `embedding` column: 8 bands of `perBand`
+    * seeded hyperplanes × 64 dims in [-1, 1], stored as float arrays
+    * so one codegen'd FloatVecSignBuckets call computes every band's
+    * sign pattern (the higher-order aggregate/zip_with alternative
+    * runs interpreted). */
+  private final class SignLsh(seed: Long, perBand: Int) {
+    private val planes: Seq[Seq[Float]] = {
+      val it = lcgStream(seed)
+      Seq.fill(8 * perBand)(Seq.fill(64)(
+        ((math.abs(it.next()) % 2001) / 1000.0 - 1.0).toFloat))
+    }
+
+    /** One `(band, bucket)` row per band. */
+    def buckets: Column = posexplode(graft.functions.FloatVecSignBuckets
+      .buckets(col("embedding"), planes, 8, perBand))
+
+    /** Hamming-1 multi-probe of `bucket`: itself, then each of its
+      * `perBand` one-bit flips, one row each. */
+    def probes(bucket: Column): Column =
+      explode(array((0L +: (0 until perBand).map(p => 1L << p)).map(f =>
+        bucket.bitwiseXOR(lit(f))): _*))
   }
 
-  /** 128 hyperplanes (8 bands × 16 planes) for the near-dup LSH (d5b).
-    * 16 planes per band give a 2^-16 random-pair band-collision rate —
-    * near-dup detection needs far more selective buckets than top-k
-    * search (s2), where missing a candidate only costs rank quality.
-    */
-  private val ndupPlanes: Seq[Seq[Float]] = {
-    val it = lcgStream(19L)
-    Seq.fill(128)(Seq.fill(64)(
-      ((math.abs(it.next()) % 2001) / 1000.0 - 1.0).toFloat))
-  }
+  /** 4 planes per band for top-k search (s2). */
+  private val topkLsh = new SignLsh(7L, 4)
+
+  /** 16 planes per band for the near-dup LSH (d5b): a 2^-16
+    * random-pair band-collision rate — near-dup detection needs far
+    * more selective buckets than top-k search, where missing a
+    * candidate only costs rank quality. */
+  private val ndupLsh = new SignLsh(19L, 16)
 
   // Every `dot` here is the exact (order-independent) FloatVecDot:
   // per-position double products rounded onto a 15-decimal grid and
@@ -96,6 +106,57 @@ object LlmSim extends QueryModule {
              (x, i) -> cast(x + 0.001d *
                cast(pmod(vec_id * 31 + i, 7) - 3 as double) as float))""")
           .as("embedding"))
+
+  /** DuckDB rendering of the corpus plus [[nearDupCopies]] on the
+    * cosine grid: `flat0` the embeddings, `inj` the copies, `flat` both,
+    * and the [[Q.gridCosinesSql]] CTEs over every pair a < b. */
+  private val injectedGridSql = s"""flat0 AS (${Q.flatSql("embeddings")}),
+        inj AS (SELECT vec_id + 1000000 AS vec_id, pos,
+            cast(cast(val + cast(0.001 as double) *
+              cast((vec_id * 31 + pos - 1) % 7 - 3 as double)
+              as float) as double) AS val
+          FROM flat0 WHERE vec_id < 50),
+        flat AS (SELECT * FROM flat0 UNION ALL SELECT * FROM inj),
+        ${Q.gridCosinesSql("x.vec_id < y.vec_id")}"""
+
+  /** Exact collapse of the top-k candidate side (vec_id >= 10): one
+    * `(embedding, rep_id, member_ids)` row per distinct vector under its
+    * min id, and the `(rep_id, cand_id)` map back to every member. The
+    * one aggregation carries the mapping out (collect_list), so the
+    * final expansion joins on the 8-byte rep_id instead of re-hashing
+    * the 256-byte float array. Identity on a dup-free corpus. */
+  private def candidateReps(e: DataFrame): (DataFrame, DataFrame) = {
+    val grouped = e.filter(col("vec_id") >= 10).groupBy(col("embedding"))
+      .agg(min(col("vec_id")).as("rep_id"),
+        collect_list(col("vec_id")).as("member_ids"))
+    (grouped, grouped.select(col("rep_id"),
+      explode(col("member_ids")).as("cand_id")))
+  }
+
+  /** Sorted-neighborhood pairing: each row of `df` next to the `n` rows
+    * after it in `w`'s bucket order, one row per neighbor — `keep` plus
+    * the neighbor's `member` as `out` — in one window pass (lead()
+    * arrays), never a rank-probe self-join. Pair volume is ≤ n per row,
+    * linear at any bucket skew. */
+  private def nextInBucket(df: DataFrame, w: WindowSpec, n: Int,
+      member: Column, out: String, keep: Column*): DataFrame =
+    df.withColumn("nbrs", array((1 to n).map(i => lead(member, i).over(w)): _*))
+      .select(keep :+ explode(col("nbrs")).as(out): _*)
+      .filter(col(out).isNotNull)
+
+  /** Recall verdict of an approximate result: `(<queries>, recall_ok)`,
+    * the distinct `query` count of `truth` and whether the `hits` (truth
+    * rows the result also holds) reach `floor` of it. */
+  private def recallVerdict(truth: DataFrame, hits: DataFrame,
+      query: String, queries: String, floor: Double): DataFrame = {
+    val nHits = hits.groupBy().agg(count(lit(1)).as("n_hits"))
+    val totals = truth.groupBy().agg(count(lit(1)).as("n_truth"),
+      countDistinct(col(query)).as(queries))
+    totals.join(nHits)
+      .select(col(queries),
+        (col("n_hits").cast("double") / col("n_truth") >= floor)
+          .as("recall_ok"))
+  }
 
   /** Top-5 member ids per query from `(query_id, rep_id, cosine)` rep
     * scores: rank() (not row_number) cuts the REP list, so cosine ties
@@ -202,6 +263,16 @@ object LlmSim extends QueryModule {
       trainCentroidsOn(s, e, k, iters)
     } finally e.unpersist()
   }
+
+  /** The 16 IVF cells every ANN key shares: trained on an ABSOLUTELY
+    * bounded sample (the first 5000 vec ids — a no-op below sf1, the
+    * whole point above it): quantizer quality needs a representative
+    * sample, not the corpus, and training cost must not scale with the
+    * data. */
+  private def sampleCentroids(s: SparkSession,
+      e: DataFrame): Seq[(Int, Seq[Float])] =
+    trainCentroids(s, e.filter(col("vec_id") < 5000)
+      .select(col("vec_id"), col("embedding")), k = 16, iters = 3)
 
   private def trainCentroidsOn(s: SparkSession, e: DataFrame,
       k: Int, iters: Int): Seq[(Int, Seq[Float])] = {
@@ -316,18 +387,6 @@ object LlmSim extends QueryModule {
         .as("simhash"))
   }
 
-  /** Word-trigram shingles of the normalized text, hashed into [0, 2^30). */
-  private def shingles(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      split(norm(col("text")), " ").as("words"))
-      .select(col("doc_id"),
-        explode(expr(
-          """transform(sequence(0, size(words) - 3),
-               i -> concat_ws(' ', words[i], words[i+1], words[i+2]))"""))
-          .as("sh"))
-      .distinct()
-      .withColumn("sh30", pmod(xxhash64(col("sh")), lit(1L << 30)))
-
   /** LSH candidate pairs from a MinHash signature table
     * `(doc_id, sig: array<long>[16])`, bounded two ways:
     *
@@ -358,11 +417,7 @@ object LlmSim extends QueryModule {
     // the window already sees. Same pair set.
     val wb = Window.partitionBy(col("band"), col("bh"))
       .orderBy(col("doc_id"))
-    bands
-      .withColumn("nbrs", array((1 to 8).map(i =>
-        lead(col("doc_id"), i).over(wb)): _*))
-      .select(col("doc_id").as("a"), explode(col("nbrs")).as("b"))
-      .filter(col("b").isNotNull)
+    nextInBucket(bands, wb, 8, col("doc_id"), "b", col("doc_id").as("a"))
       .distinct()
   }
 
@@ -377,23 +432,13 @@ object LlmSim extends QueryModule {
     * gate-scale only, excluded from the large-SF bench replay.
     */
   private val dupPairsOracle =
-    """WITH reps AS (
+    s"""WITH reps AS (
         SELECT min(doc_id) AS doc_id, arg_min(text, doc_id) AS text
         FROM documents
-        GROUP BY md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))),
-      docs AS (SELECT doc_id,
-          string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')
-            AS words FROM reps),
-      toks AS (SELECT doc_id, generate_subscripts(words, 1) AS pos,
-                 unnest(words) AS w FROM docs),
-      tri AS (SELECT DISTINCT a.doc_id, a.w || ' ' || b.w || ' ' || c.w AS sh
-              FROM toks a
-              JOIN toks b ON b.doc_id = a.doc_id AND b.pos = a.pos + 1
-              JOIN toks c ON c.doc_id = a.doc_id AND c.pos = a.pos + 2),
-      sizes AS (SELECT doc_id, count(*) AS n FROM tri GROUP BY doc_id),
-      inter AS (SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS ni
-                FROM tri x JOIN tri y ON x.sh = y.sh AND x.doc_id < y.doc_id
-                GROUP BY 1, 2)
+        GROUP BY md5($normSql)),
+      docs AS (SELECT doc_id, string_split($normSql, ' ') AS words
+        FROM reps),
+      ${Q.trigramOverlapSql}
       SELECT a, b, cast(ni as double) / (sa.n + sb.n - ni) AS jaccard
       FROM inter JOIN sizes sa ON sa.doc_id = a
                  JOIN sizes sb ON sb.doc_id = b
@@ -456,24 +501,10 @@ object LlmSim extends QueryModule {
     * exact decimal cosines), so their output EQUALS the exact top-k;
     * AnnSpec keeps the recall floors that hold at any scale.
     */
-  private val topkOracle = """WITH flat AS (
-          SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-            unnest(embedding) AS val
-          FROM embeddings),
-        norms AS (SELECT vec_id,
-            sqrt(cast(sum(cast(cast(val as double) * cast(val as double)
-              as decimal(18,15))) as double)) AS nrm
-          FROM flat GROUP BY vec_id),
-        dots AS (SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-            cast(sum(cast(cast(q.val as double) * cast(c.val as double)
-              as decimal(18,15))) as double) AS dot
-          FROM (SELECT * FROM flat WHERE vec_id < 10) q
-          JOIN (SELECT * FROM flat WHERE vec_id >= 10) c ON q.pos = c.pos
-          GROUP BY q.vec_id, c.vec_id),
-        scored AS (SELECT query_id, cand_id,
-            round(dot / (nq.nrm * nc.nrm), 12) AS cosine
-          FROM dots JOIN norms nq ON nq.vec_id = query_id
-                    JOIN norms nc ON nc.vec_id = cand_id),
+  private val topkOracle = s"""WITH flat AS (${Q.flatSql("embeddings")}),
+        ${Q.gridCosinesSql("x.vec_id < 10 AND y.vec_id >= 10")},
+        scored AS (SELECT a AS query_id, b AS cand_id,
+            round(cosine, 12) AS cosine FROM cosines),
         ranked AS (SELECT query_id, cand_id, cosine,
             row_number() OVER (PARTITION BY query_id
                                ORDER BY cosine DESC, cand_id) AS rank
@@ -490,9 +521,7 @@ object LlmSim extends QueryModule {
         val W = 48
         val e = t(s, dir, "embeddings")
         val reps = exactReps(e)
-        val centroids = trainCentroids(s,
-          e.filter(col("vec_id") < 5000)
-            .select(col("vec_id"), col("embedding")), k = 16, iters = 3)
+        val centroids = sampleCentroids(s, e)
         // 3-cell multi-assignment as a pure projection (r15) — see
         // [[assignCells]]; was a broadcast join + per-vec row_number
         // window (an Exchange+Sort of n×16 embedding-carrying rows)
@@ -501,11 +530,8 @@ object LlmSim extends QueryModule {
           .select(col("cent_id"), col("vec_id"), col("cent_dot"))
         val wCell = Window.partitionBy(col("cent_id"))
           .orderBy(col("cent_dot").desc, col("vec_id"))
-        val fwd = assigned
-          .withColumn("nbrs", array((1 to W).map(i =>
-            lead(col("vec_id"), i).over(wCell)): _*))
-          .select(col("vec_id"), explode(col("nbrs")).as("nbr_id"))
-          .filter(col("nbr_id").isNotNull)
+        val fwd = nextInBucket(assigned, wCell, W, col("vec_id"), "nbr_id",
+          col("vec_id"))
         val candIds = fwd
           .union(fwd.select(col("nbr_id").as("vec_id"),
             col("vec_id").as("nbr_id")))
@@ -550,13 +576,7 @@ object LlmSim extends QueryModule {
     * r9 driver recall gate (s3b). */
   private def ivfTopk(s: SparkSession, dir: String): DataFrame = {
         val e = t(s, dir, "embeddings")
-        // train on an ABSOLUTELY bounded sample (the first 5000 vec
-        // ids — a no-op below sf1, the whole point above it): quantizer
-        // quality needs a representative sample, not the corpus, and
-        // the training cost must not scale with the data
-        val centroids = trainCentroids(s,
-          e.filter(col("vec_id") < 5000)
-            .select(col("vec_id"), col("embedding")), k = 16, iters = 3)
+        val centroids = sampleCentroids(s, e)
         // nprobe-cell assignment is a pure projection since r15 — see
         // [[assignCells]]; the old broadcast-join + row_number window
         // paid an Exchange+Sort of n×16 embedding-carrying rows per
@@ -565,16 +585,8 @@ object LlmSim extends QueryModule {
           assignCells(df, vec, nprobe, centroids).drop("cent_dot")
         // exact-then-near (same collapse as s2/d5b): byte-identical
         // corpus vectors fill inverted lists ONCE via their min-id
-        // representative; the collapse aggregation also carries the
-        // rep→member id mapping out (collect_list), so the final
-        // expansion joins on the 8-byte rep_id instead of re-hashing
-        // the 256-byte float array. Identity on a dup-free corpus.
-        val cand0 = e.filter(col("vec_id") >= 10)
-        val grouped = cand0.groupBy(col("embedding"))
-          .agg(min(col("vec_id")).as("rep_id"),
-            collect_list(col("vec_id")).as("member_ids"))
-        val memberMap = grouped.select(col("rep_id"),
-          explode(col("member_ids")).as("cand_id"))
+        // representative
+        val (grouped, memberMap) = candidateReps(e)
         val cands = assign(
           grouped.select(col("rep_id"), col("embedding").as("cv")),
           col("cv"), nprobe = 2)
@@ -678,14 +690,10 @@ object LlmSim extends QueryModule {
         // exploded 8 rank probes per row and equi-joined them back on
         // (chunk, cval, rn) — a second full exchange+sort of 8n rows
         // the window operator already had in hand. Same pair set.
-        val ranked = chunks
-          .withColumn("rn", row_number().over(wb))
-          .withColumn("nbrs", array((1 to 8).map(i =>
-            lead(struct(col("doc_id"), col("simhash")), i).over(wb)): _*))
-        val exactBucket = ranked
-          .select(col("doc_id").as("a"), col("simhash").as("sim_a"),
-            explode(col("nbrs")).as("nb"))
-          .filter(col("nb").isNotNull)
+        val ranked = chunks.withColumn("rn", row_number().over(wb))
+        val exactBucket = nextInBucket(ranked, wb, 8,
+            struct(col("doc_id"), col("simhash")), "nb",
+            col("doc_id").as("a"), col("simhash").as("sim_a"))
           .select(col("a"), col("nb.doc_id").as("b"),
             col("sim_a"), col("nb.simhash").as("sim_b"))
         // hamming-1 multiprobe (the s2/d5b trick on the simhash index):
@@ -748,24 +756,10 @@ object LlmSim extends QueryModule {
           .select(col("a"), col("b"), col("cosine"))
           .orderBy(col("a"), col("b"))
       },
-      Some("""WITH e AS (
-          SELECT vec_id, embedding FROM embeddings WHERE vec_id < 200),
-        flat AS (SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-                   unnest(embedding) AS val FROM e),
-        norms AS (SELECT vec_id,
-            cast(sum(cast(cast(val as double) * cast(val as double)
-              as decimal(18,15))) as double) AS nrm
-          FROM flat GROUP BY vec_id),
-        dots AS (SELECT x.vec_id AS a, y.vec_id AS b,
-            cast(sum(cast(cast(x.val as double) * cast(y.val as double)
-              as decimal(18,15))) as double) AS dot
-          FROM flat x JOIN flat y
-            ON x.pos = y.pos AND x.vec_id < y.vec_id
-          GROUP BY x.vec_id, y.vec_id)
-        SELECT a, b, round(dot / (sqrt(na.nrm) * sqrt(nb.nrm)), 12) AS cosine
-        FROM dots JOIN norms na ON na.vec_id = a
-                  JOIN norms nb ON nb.vec_id = b
-        WHERE round(dot / (sqrt(na.nrm) * sqrt(nb.nrm)), 12) > 0.3
+      Some(s"""WITH flat AS (${Q.flatSql("embeddings WHERE vec_id < 200")}),
+        ${Q.gridCosinesSql("x.vec_id < y.vec_id")}
+        SELECT a, b, round(cosine, 12) AS cosine FROM cosines
+        WHERE round(cosine, 12) > 0.3
         ORDER BY a, b""")),
 
     // ─── d5b: LSH-bucketed embedding near-dup (the scale path) ───
@@ -793,17 +787,10 @@ object LlmSim extends QueryModule {
         // not the LSH's.
         val e = exactReps(t(s, dir, "embeddings"))
         val corpus = e.unionByName(nearDupCopies(e))
-        val BANDS = 8
-        val PLANES = 16
-        // all 8 buckets in ONE codegen'd kernel — see FloatVecSignBuckets
         val sigs = corpus.select(col("vec_id"),
-          posexplode(graft.functions.FloatVecSignBuckets.buckets(
-            col("embedding"), ndupPlanes, BANDS, PLANES))
-            .as(Seq("band", "bucket")))
-        val probeFlips = 0L +: (0 until PLANES).map(p => 1L << p)
+          ndupLsh.buckets.as(Seq("band", "bucket")))
         val probes = sigs.select(col("vec_id"), col("band"),
-          explode(array(probeFlips.map(f =>
-            col("bucket").bitwiseXOR(lit(f))): _*)).as("bucket"))
+          ndupLsh.probes(col("bucket")).as("bucket"))
         val cands = probes.as("x").join(sigs.as("y"),
             col("x.band") === col("y.band") &&
               col("x.bucket") === col("y.bucket") &&
@@ -829,28 +816,9 @@ object LlmSim extends QueryModule {
       // Quadratic by design — gate-scale only, excluded from the
       // large-SF bench replay. Exact-dup collapse is omitted here: the
       // gate corpus has no byte-identical vectors (spec-pinned).
-      Some("""WITH flat0 AS (
-          SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-            cast(unnest(embedding) as double) AS val
-          FROM embeddings),
-        inj AS (SELECT vec_id + 1000000 AS vec_id, pos,
-            cast(cast(val + cast(0.001 as double) *
-              cast((vec_id * 31 + pos - 1) % 7 - 3 as double)
-              as float) as double) AS val
-          FROM flat0 WHERE vec_id < 50),
-        flat AS (SELECT * FROM flat0 UNION ALL SELECT * FROM inj),
-        norms AS (SELECT vec_id,
-            cast(sum(cast(val * val as decimal(18,15))) as double) AS nrm
-          FROM flat GROUP BY vec_id),
-        dots AS (SELECT x.vec_id AS a, y.vec_id AS b,
-            cast(sum(cast(x.val * y.val as decimal(18,15))) as double) AS dot
-          FROM flat x JOIN flat y
-            ON x.pos = y.pos AND x.vec_id < y.vec_id
-          GROUP BY x.vec_id, y.vec_id)
-        SELECT a, b, round(dot / (sqrt(na.nrm) * sqrt(nb.nrm)), 12) AS cosine
-        FROM dots JOIN norms na ON na.vec_id = a
-                  JOIN norms nb ON nb.vec_id = b
-        WHERE round(dot / (sqrt(na.nrm) * sqrt(nb.nrm)), 12) > 0.99
+      Some(s"""WITH $injectedGridSql
+        SELECT a, b, round(cosine, 12) AS cosine FROM cosines
+        WHERE round(cosine, 12) > 0.99
         ORDER BY a, b"""), quadraticOracle = true),
 
     // ─── s1: brute-force cosine top-k (exact ANN baseline, oracled) ───
@@ -874,39 +842,20 @@ object LlmSim extends QueryModule {
     "s2_ann_lsh" -> Q(
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val BANDS = 8
-        val PLANES = 4
         // exact-then-near (the d5b/d2 ordering): byte-identical corpus
         // vectors collapse to their min-id representative before any
         // bucket work — k exact copies would otherwise multiply every
         // probed bucket and every scored pair by k. Each distinct
-        // vector is hashed and scored ONCE. The SAME aggregation also
-        // carries the rep→member id mapping out (collect_list), so the
-        // final expansion back to member ids joins on the 8-byte
-        // rep_id — not on the 256-byte float array, which would hash
-        // and shuffle the full vector payload again for no information
-        // gain. Identity on a dup-free corpus.
-        val cand0 = e.filter(col("vec_id") >= 10)
-        val grouped = cand0.groupBy(col("embedding"))
-          .agg(min(col("vec_id")).as("rep_id"),
-            collect_list(col("vec_id")).as("member_ids"))
+        // vector is hashed and scored ONCE.
+        val (grouped, memberMap) = candidateReps(e)
         val reps = grouped.select(col("embedding"), col("rep_id"))
-        val memberMap = grouped.select(col("rep_id"),
-          explode(col("member_ids")).as("cand_id"))
-        // all 8 4-bit buckets in one codegen'd kernel (FloatVecSignBuckets)
         val candSigs = reps.select(col("rep_id"), col("embedding").as("cv"),
-          posexplode(graft.functions.FloatVecSignBuckets.buckets(
-            col("embedding"), hyperplanes, BANDS, PLANES))
-            .as(Seq("band", "bucket")))
-        val probeFlips = 0L +: (0 until PLANES).map(p => 1L << p)
+          topkLsh.buckets.as(Seq("band", "bucket")))
         val queries = e.filter(col("vec_id") < 10)
           .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-            posexplode(graft.functions.FloatVecSignBuckets.buckets(
-              col("embedding"), hyperplanes, BANDS, PLANES))
-              .as(Seq("band", "bucket0")))
+            topkLsh.buckets.as(Seq("band", "bucket0")))
           .select(col("query_id"), col("qv"), col("band"),
-            explode(array(probeFlips.map(f =>
-              col("bucket0").bitwiseXOR(lit(f))): _*)).as("bucket"))
+            topkLsh.probes(col("bucket0")).as("bucket"))
         val matched = queries.join(candSigs, Seq("band", "bucket"))
           .select(col("query_id"), col("rep_id"), col("qv"), col("cv"))
           .distinct()
@@ -955,14 +904,8 @@ object LlmSim extends QueryModule {
           .select(col("query_id"), col("cand_id"))
         val truth = bruteTop5(t(s, dir, "embeddings"))
           .select(col("query_id"), col("cand_id"))
-        val hits = truth.join(ivf, Seq("query_id", "cand_id"))
-          .groupBy().agg(count(lit(1)).as("n_hits"))
-        val totals = truth.groupBy().agg(count(lit(1)).as("n_truth"),
-          countDistinct(col("query_id")).as("n_queries"))
-        totals.join(hits)
-          .select(col("n_queries"),
-            (col("n_hits").cast("double") / col("n_truth") >= 0.9)
-              .as("recall_ok"))
+        recallVerdict(truth, truth.join(ivf, Seq("query_id", "cand_id")),
+          "query_id", "n_queries", floor = 0.9)
       },
       Some("""SELECT count(*) AS n_queries, true AS recall_ok
         FROM embeddings WHERE vec_id < 10""")),
@@ -1010,9 +953,7 @@ object LlmSim extends QueryModule {
         //    never k²/2 pairs downstream)
         val reps = exactReps(corpus)
         // 2. bounded-sample quantizer (shared machinery with s3)
-        val centroids = trainCentroids(s,
-          e0.filter(col("vec_id") < 5000)
-            .select(col("vec_id"), col("embedding")), k = 16, iters = 3)
+        val centroids = sampleCentroids(s, e0)
         // 3. 2-nearest-cell assignment + sorted-neighborhood pairing.
         //    Assignment is a pure projection since r15 ([[assignCells]];
         //    was a broadcast join + per-vec row_number window). Pairing
@@ -1030,13 +971,9 @@ object LlmSim extends QueryModule {
             col("cent_dot"))
         val wCell = Window.partitionBy(col("cent_id"))
           .orderBy(col("cent_dot").desc, col("vec_id"))
-        val pairs = assigned
-          .withColumn("nbrs", array((1 to W).map(i =>
-            lead(struct(col("vec_id"), col("embedding")), i)
-              .over(wCell)): _*))
-          .select(col("vec_id"), col("embedding"),
-            explode(col("nbrs")).as("nb"))
-          .filter(col("nb").isNotNull)
+        val pairs = nextInBucket(assigned, wCell, W,
+            struct(col("vec_id"), col("embedding")), "nb",
+            col("vec_id"), col("embedding"))
           .select(
             least(col("vec_id"), col("nb.vec_id")).as("a"),
             greatest(col("vec_id"), col("nb.vec_id")).as("b"),
@@ -1061,28 +998,9 @@ object LlmSim extends QueryModule {
       // natural cosine 0.51). Unrounded cosine compare, identical
       // IEEE division on identical decimal-grid operands. Quadratic —
       // gate-scale only, excluded from the large-SF bench replay.
-      Some("""WITH flat0 AS (
-          SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-            cast(unnest(embedding) as double) AS val
-          FROM embeddings),
-        inj AS (SELECT vec_id + 1000000 AS vec_id, pos,
-            cast(cast(val + cast(0.001 as double) *
-              cast((vec_id * 31 + pos - 1) % 7 - 3 as double)
-              as float) as double) AS val
-          FROM flat0 WHERE vec_id < 50),
-        flat AS (SELECT * FROM flat0 UNION ALL SELECT * FROM inj),
-        norms AS (SELECT vec_id,
-            cast(sum(cast(val * val as decimal(18,15))) as double) AS nrm
-          FROM flat GROUP BY vec_id),
-        dots AS (SELECT x.vec_id AS a, y.vec_id AS b,
-            cast(sum(cast(x.val * y.val as decimal(18,15))) as double) AS dot
-          FROM flat x JOIN flat y
-            ON x.pos = y.pos AND x.vec_id < y.vec_id
-          GROUP BY x.vec_id, y.vec_id),
-        drops AS (SELECT DISTINCT b AS vec_id
-          FROM dots JOIN norms na ON na.vec_id = a
-                    JOIN norms nb ON nb.vec_id = b
-          WHERE dot / (sqrt(na.nrm) * sqrt(nb.nrm)) > 0.99)
+      Some(s"""WITH $injectedGridSql,
+        drops AS (SELECT DISTINCT b AS vec_id FROM cosines
+          WHERE cosine > 0.99)
         SELECT vec_id FROM (
           SELECT DISTINCT vec_id FROM flat) all_ids
         WHERE vec_id NOT IN (SELECT vec_id FROM drops)
@@ -1151,16 +1069,10 @@ object LlmSim extends QueryModule {
         val truth = scored.withColumn("rank", row_number().over(w))
           .filter(col("rank") <= K)
           .select(col("q_id"), col("nbr_id"))
-        val hits = truth.join(graph,
+        recallVerdict(truth, truth.join(graph,
             truth("q_id") === graph("vec_id") &&
-              truth("nbr_id") === graph("nbr_id"))
-          .groupBy().agg(count(lit(1)).as("n_hits"))
-        val totals = truth.groupBy().agg(count(lit(1)).as("n_truth"),
-          countDistinct(col("q_id")).as("n_eval"))
-        totals.join(hits)
-          .select(col("n_eval"),
-            (col("n_hits").cast("double") / col("n_truth") >= 0.75)
-              .as("recall_ok"))
+              truth("nbr_id") === graph("nbr_id")),
+          "q_id", "n_eval", floor = 0.75)
       },
       Some("""WITH reps AS (
           SELECT min(vec_id) AS vec_id FROM embeddings GROUP BY embedding)

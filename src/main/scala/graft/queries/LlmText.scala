@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * arrays stay inside one projection so nothing materializes wide.
   */
 object LlmText extends QueryModule {
-  import Q.{t, norm, normSql}
+  import Q.{t, norm, normSql, bagSig, bagSigSql}
 
   /** Deterministic per-language stopword lists (from the synthetic
     * corpus vocabulary) for the language-ID heuristic.
@@ -46,9 +46,7 @@ object LlmText extends QueryModule {
           .withColumn("nrm", norm(col("text")))
           .select(col("doc_id"), col("lang"),
             unhex(md5(col("nrm"))).as("sig"),
-            unhex(md5(array_join(
-              array_sort(array_distinct(split(col("nrm"), " "))), " ")))
-              .as("bag_sig"))
+            unhex(bagSig(col("nrm"))).as("bag_sig"))
         sigs
           .withColumn("keep_id",
             min(col("doc_id")).over(Window.partitionBy(col("sig"))))
@@ -64,8 +62,7 @@ object LlmText extends QueryModule {
       },
       Some(s"""WITH docs AS (
           SELECT doc_id, lang, md5($normSql) AS sig,
-            md5(array_to_string(list_sort(list_distinct(
-              string_split($normSql, ' '))), ' ')) AS bag_sig
+            ${bagSigSql(normSql)} AS bag_sig
           FROM documents),
         by_sig AS (SELECT sig, min(doc_id) AS keep_id FROM docs GROUP BY sig),
         by_bag AS (SELECT bag_sig, min(doc_id) AS bag_keep_id
@@ -134,15 +131,9 @@ object LlmText extends QueryModule {
     // the driver's sf0.01 gate (doc_ids there stop at 499).
     "d3_ngram_jaccard" -> Q(
       (s, dir) => {
-        val docs = t(s, dir, "documents")
-          .filter(col("doc_id") % 5 === 0 && col("doc_id") < 750)
-          .select(col("doc_id"), split(norm(col("text")), " ").as("words"))
         // word trigram shingles, distinct per doc
-        val tri = docs.select(col("doc_id"),
-          explode(expr(
-            """transform(sequence(0, size(words) - 3),
-                 i -> concat_ws(' ', words[i], words[i+1], words[i+2]))"""))
-            .as("sh")).distinct()
+        val tri = Q.shingles(t(s, dir, "documents")
+          .filter(col("doc_id") % 5 === 0 && col("doc_id") < 750))
         val sizes = tri.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
         val inter = tri.as("x").join(tri.as("y"),
             col("x.sh") === col("y.sh") && col("x.doc_id") < col("y.doc_id"))
@@ -156,22 +147,10 @@ object LlmText extends QueryModule {
               (col("sa.n") + col("sb.n") - col("ni"))).as("jaccard"))
           .orderBy(col("a"), col("b"))
       },
-      Some("""WITH docs AS (
-          SELECT doc_id,
-            string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')
-              AS words
+      Some(s"""WITH docs AS (
+          SELECT doc_id, string_split($normSql, ' ') AS words
           FROM documents WHERE doc_id % 5 = 0 AND doc_id < 750),
-        toks AS (SELECT doc_id, generate_subscripts(words, 1) AS pos,
-                   unnest(words) AS w FROM docs),
-        tri AS (SELECT DISTINCT a.doc_id, a.w || ' ' || b.w || ' ' || c.w AS sh
-                FROM toks a
-                JOIN toks b ON b.doc_id = a.doc_id AND b.pos = a.pos + 1
-                JOIN toks c ON c.doc_id = a.doc_id AND c.pos = a.pos + 2),
-        sizes AS (SELECT doc_id, count(*) AS n FROM tri GROUP BY doc_id),
-        inter AS (SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS ni
-                  FROM tri x JOIN tri y
-                    ON x.sh = y.sh AND x.doc_id < y.doc_id
-                  GROUP BY 1, 2)
+        ${Q.trigramOverlapSql}
         SELECT a, b, ni, sa.n AS na, sb.n AS nb,
           cast(ni as double) / (sa.n + sb.n - ni) AS jaccard
         FROM inter JOIN sizes sa ON sa.doc_id = a

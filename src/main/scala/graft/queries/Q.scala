@@ -2,8 +2,9 @@ package graft.queries
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{expr, lower, regexp_replace,
-  timestamp_micros, trim}
+import org.apache.spark.sql.functions.{array_distinct, array_join,
+  array_sort, col, explode, expr, lit, lower, md5, pmod, regexp_replace,
+  split, timestamp_micros, trim, xxhash64}
 import org.apache.spark.sql.types.LongType
 
 /** One gated capability: a Spark query builder plus (optionally) the
@@ -92,6 +93,75 @@ object Q {
 
   /** DuckDB rendering of [[norm]] over the `text` column. */
   val normSql = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
+
+  /** Bag signature of a normalized text: md5 of its sorted distinct
+    * words, so reordered or repeated content signs alike. */
+  def bagSig(nrm: Column): Column =
+    md5(array_join(array_sort(array_distinct(split(nrm, " "))), " "))
+
+  /** DuckDB rendering of [[bagSig]]. */
+  def bagSigSql(nrm: String): String =
+    s"md5(array_to_string(list_sort(list_distinct(string_split($nrm, ' '))), ' '))"
+
+  /** Distinct word-trigram shingles `(doc_id, sh, sh30)` of each
+    * document's normalized text; `sh30` hashes the shingle into
+    * [0, 2^30). */
+  def shingles(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      split(norm(col("text")), " ").as("words"))
+      .select(col("doc_id"),
+        explode(expr(
+          """transform(sequence(0, size(words) - 3),
+               i -> concat_ws(' ', words[i], words[i+1], words[i+2]))"""))
+          .as("sh"))
+      .distinct()
+      .withColumn("sh30", pmod(xxhash64(col("sh")), lit(1L << 30)))
+
+  /** DuckDB rendering of [[shingles]] plus their all-pairs overlap, as
+    * CTEs over a caller-defined `docs (doc_id, words)`: `tri (doc_id,
+    * sh)` distinct trigrams, `sizes (doc_id, n)` and `inter (a, b, ni)`
+    * the shared-trigram count of every overlapping pair a < b. */
+  val trigramOverlapSql =
+    """toks AS (SELECT doc_id, generate_subscripts(words, 1) AS pos,
+                 unnest(words) AS w FROM docs),
+      tri AS (SELECT DISTINCT a.doc_id, a.w || ' ' || b.w || ' ' || c.w AS sh
+              FROM toks a
+              JOIN toks b ON b.doc_id = a.doc_id AND b.pos = a.pos + 1
+              JOIN toks c ON c.doc_id = a.doc_id AND c.pos = a.pos + 2),
+      sizes AS (SELECT doc_id, count(*) AS n FROM tri GROUP BY doc_id),
+      inter AS (SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS ni
+                FROM tri x JOIN tri y ON x.sh = y.sh AND x.doc_id < y.doc_id
+                GROUP BY 1, 2)"""
+
+  /** DuckDB rendering of [[graft.functions.FloatVecDot.dot]] over two
+    * double components: each product rounded onto the decimal(18,15)
+    * grid, summed exactly. */
+  def gridDotSql(x: String, y: String): String =
+    s"cast(sum(cast($x * $y as decimal(18,15))) as double)"
+
+  /** One `(vec_id, pos, val)` row per component of the embeddings
+    * `from` names (a table, optionally with a WHERE clause), `val` as
+    * double and `pos` 1-based. */
+  def flatSql(from: String): String =
+    s"""SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
+            cast(unnest(embedding) as double) AS val
+          FROM $from"""
+
+  /** Grid-cosine CTEs over a caller-defined `flat` ([[flatSql]]):
+    * `norms (vec_id, nrm)` squared norms, `dots (a, b, dot)` for every
+    * pair of flat vectors `x`, `y` that `pairs` admits, and `cosines
+    * (a, b, cosine)` unrounded: dot(a, b) / (sqrt(dot(a, a)) *
+    * sqrt(dot(b, b))), the cosine every embedding key computes. */
+  def gridCosinesSql(pairs: String): String =
+    s"""norms AS (SELECT vec_id, ${gridDotSql("val", "val")} AS nrm
+          FROM flat GROUP BY vec_id),
+        dots AS (SELECT x.vec_id AS a, y.vec_id AS b,
+            ${gridDotSql("x.val", "y.val")} AS dot
+          FROM flat x JOIN flat y ON x.pos = y.pos AND $pairs
+          GROUP BY x.vec_id, y.vec_id),
+        cosines AS (SELECT a, b, dot / (sqrt(na.nrm) * sqrt(nb.nrm)) AS cosine
+          FROM dots JOIN norms na ON na.vec_id = a
+                    JOIN norms nb ON nb.vec_id = b)"""
 
   /** Read the events table with [[eventTs]] applied. */
   def events(spark: SparkSession, dir: String): DataFrame =

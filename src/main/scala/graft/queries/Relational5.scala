@@ -12,8 +12,13 @@ import org.apache.spark.sql.types.DecimalType
   * declarative DataFrame programs with the scale shape annotated.
   */
 object Relational5 extends QueryModule {
-  import Q.{t, events, dsumSql, norm}
+  import Q.{t, events, dsumSql, norm, normSql}
   import graft.functions.Dnum.dsum
+
+  // BM25's query terms and Okapi parameters, on both engines
+  private val bm25Terms = Seq("spark", "window", "hash", "stream", "vector")
+  private val bm25K1 = 1.2
+  private val bm25B = 0.75
 
   /** Okapi BM25 scores of every term-matching document — (doc_id,
     * bm25 round(6)). t17's gate output, and the lexical rank source
@@ -21,9 +26,6 @@ object Relational5 extends QueryModule {
     */
   private def bm25Scores(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    val terms = Seq("spark", "window", "hash", "stream", "vector")
-    val k1 = 1.2
-    val b = 0.75
     val docs = t(s, dir, "documents")
       .select(col("doc_id"),
         split(norm(col("text")), " ").as("words"))
@@ -35,7 +37,7 @@ object Relational5 extends QueryModule {
         count(lit(1))).as("avgdl"))
     val tf = docs
       .select(col("doc_id"), explode(col("words")).as("term"))
-      .filter(col("term").isin(terms: _*))
+      .filter(col("term").isin(bm25Terms: _*))
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).cast("double").as("tf"))
     val df = tf.groupBy(col("term"))
@@ -45,12 +47,44 @@ object Relational5 extends QueryModule {
       .crossJoin(broadcast(stats))
       .withColumn("contrib",
         log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
-          * col("tf") * (k1 + 1.0)
-          / (col("tf") +
-            lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
+          * col("tf") * (bm25K1 + 1.0)
+          / (col("tf") + lit(bm25K1) *
+            (lit(1.0 - bm25B) + lit(bm25B) * col("dl") / col("avgdl"))))
       .groupBy(col("doc_id"))
       .agg(round(sum(col("contrib")), 6).as("bm25"))
   }
+
+  /** DuckDB rendering of [[bm25Scores]]: CTEs ending in `bm (doc_id,
+    * bm25)`. */
+  private val bm25Sql = s"""d AS (
+          SELECT doc_id, string_split($normSql, ' ') AS words
+          FROM documents),
+        len AS (
+          SELECT doc_id, cast(len(words) as double) AS dl FROM d),
+        stats AS (
+          SELECT cast(count(*) as double) AS n_docs,
+            cast(sum(cast(dl as bigint)) as double) / count(*) AS avgdl
+          FROM len),
+        tf AS (
+          SELECT doc_id, w AS term, cast(count(*) as double) AS tf
+          FROM d, unnest(words) AS u(w)
+          WHERE w IN (${bm25Terms.map(w => s"'$w'").mkString(", ")})
+          GROUP BY doc_id, w),
+        idf AS (
+          SELECT term, cast(count(*) as double) AS df FROM tf
+          GROUP BY term),
+        bm AS (
+          SELECT tf.doc_id,
+            round(sum(
+              ln((n_docs - df + 0.5) / (df + 0.5) + 1.0)
+                * tf * ($bm25K1 + 1.0)
+                / (tf + $bm25K1 * (1.0 - $bm25B + $bm25B * dl / avgdl))), 6)
+              AS bm25
+          FROM tf
+          JOIN idf USING (term)
+          JOIN len USING (doc_id)
+          CROSS JOIN stats
+          GROUP BY tf.doc_id)"""
 
   def queries: Map[String, Q] = Map(
 
@@ -171,9 +205,9 @@ object Relational5 extends QueryModule {
             col("term"), col("tfidf"))
           .orderBy(col("doc_id"), col("rank"))
       },
-      Some("""WITH d AS (
+      Some(s"""WITH d AS (
           SELECT doc_id,
-            string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))),
+            string_split($normSql,
               ' ') AS words
           FROM documents),
         pairs AS (
@@ -231,20 +265,18 @@ object Relational5 extends QueryModule {
           round(sum(when(col("toks").between(5, 5000), 1L).otherwise(0L))
             .cast("double") / count(lit(1)), 6).as("len_pass_rate"))
       },
-      Some("""SELECT count(*) AS n_docs,
-          count(distinct md5(lower(trim(regexp_replace(text, '\s+', ' ',
-            'g'))))) AS n_unique,
-          cast(sum(len(string_split_regex(trim(text), '\s+')))
+      Some(s"""SELECT count(*) AS n_docs,
+          count(distinct md5($normSql)) AS n_unique,
+          cast(sum(len(string_split_regex(trim(text), '\\s+')))
             as bigint) AS total_tokens,
           count(distinct lang) AS n_langs,
-          round((count(*) - count(distinct md5(lower(trim(
-              regexp_replace(text, '\s+', ' ', 'g'))))))::double
+          round((count(*) - count(distinct md5($normSql)))::double
             / count(*), 6) AS dup_rate,
           round(cast(sum(cast(
               length(regexp_replace(lower(text), '[^a-z]', '', 'g'))::double
                 / greatest(length(text), 1) as decimal(18,9))) as double)
             / count(*), 6) AS mean_alpha,
-          round(sum(CASE WHEN len(string_split_regex(trim(text), '\s+'))
+          round(sum(CASE WHEN len(string_split_regex(trim(text), '\\s+'))
               BETWEEN 5 AND 5000 THEN 1 ELSE 0 END)::double
             / count(*), 6) AS len_pass_rate
         FROM documents"""),
@@ -399,68 +431,21 @@ object Relational5 extends QueryModule {
             col("pos").cast("long").as("pos"))
           .orderBy(col("pos"))
       },
-      Some(s"""WITH d AS (
-          SELECT doc_id,
-            string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))),
-              ' ') AS words
-          FROM documents),
-        len AS (
-          SELECT doc_id, cast(len(words) as double) AS dl FROM d),
-        stats AS (
-          SELECT cast(count(*) as double) AS n_docs,
-            cast(sum(cast(dl as bigint)) as double) / count(*) AS avgdl
-          FROM len),
-        tf AS (
-          SELECT doc_id, w AS term, cast(count(*) as double) AS tf
-          FROM d, unnest(words) AS u(w)
-          WHERE w IN ('spark', 'window', 'hash', 'stream', 'vector')
-          GROUP BY doc_id, w),
-        idf AS (
-          SELECT term, cast(count(*) as double) AS df FROM tf
-          GROUP BY term),
-        bm AS (
-          SELECT tf.doc_id,
-            round(sum(
-              ln((n_docs - df + 0.5) / (df + 0.5) + 1.0)
-                * tf * (1.2 + 1.0)
-                / (tf + 1.2 * (1.0 - 0.75 + 0.75 * dl / avgdl))), 6)
-              AS bm25
-          FROM tf
-          JOIN idf USING (term)
-          JOIN len USING (doc_id)
-          CROSS JOIN stats
-          GROUP BY tf.doc_id),
+      Some(s"""WITH $bm25Sql,
         lex AS (
           SELECT doc_id, lrank FROM (
             SELECT doc_id,
               row_number() OVER (ORDER BY bm25 DESC, doc_id) AS lrank
             FROM bm)
           WHERE lrank <= 50),
-        flat AS (
-          SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-            unnest(embedding) AS val
-          FROM embeddings),
-        norms AS (
-          SELECT vec_id,
-            sqrt(cast(sum(cast(cast(val as double) * cast(val as double)
-              as decimal(18,15))) as double)) AS nrm
-          FROM flat GROUP BY vec_id),
-        dots AS (
-          SELECT c.vec_id AS doc_id,
-            cast(sum(cast(cast(q.val as double) * cast(c.val as double)
-              as decimal(18,15))) as double) AS dot
-          FROM (SELECT * FROM flat WHERE vec_id = 0) q
-          JOIN (SELECT * FROM flat WHERE vec_id <> 0) c ON q.pos = c.pos
-          GROUP BY c.vec_id),
+        flat AS (${Q.flatSql("embeddings")}),
+        ${Q.gridCosinesSql("x.vec_id = 0 AND y.vec_id <> 0")},
         vec AS (
           SELECT doc_id, vrank FROM (
-            SELECT dots.doc_id,
-              row_number() OVER (ORDER BY
-                round(dot / (nq.nrm * nc.nrm), 12) DESC, dots.doc_id)
+            SELECT b AS doc_id,
+              row_number() OVER (ORDER BY round(cosine, 12) DESC, b)
                 AS vrank
-            FROM dots
-            JOIN norms nc ON nc.vec_id = dots.doc_id
-            CROSS JOIN (SELECT nrm FROM norms WHERE vec_id = 0) nq)
+            FROM cosines)
           WHERE vrank <= 50),
         fused AS (
           SELECT coalesce(lex.doc_id, vec.doc_id) AS doc_id,
@@ -498,35 +483,7 @@ object Relational5 extends QueryModule {
     // caller's concern (s1/q9 pin deterministic top-k elsewhere).
     "t17_bm25" -> Q(
       (s, dir) => bm25Scores(s, dir).orderBy(col("doc_id")),
-      Some("""WITH d AS (
-          SELECT doc_id,
-            string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))),
-              ' ') AS words
-          FROM documents),
-        len AS (
-          SELECT doc_id, cast(len(words) as double) AS dl FROM d),
-        stats AS (
-          SELECT cast(count(*) as double) AS n_docs,
-            cast(sum(cast(dl as bigint)) as double) / count(*) AS avgdl
-          FROM len),
-        tf AS (
-          SELECT doc_id, w AS term, cast(count(*) as double) AS tf
-          FROM d, unnest(words) AS u(w)
-          WHERE w IN ('spark', 'window', 'hash', 'stream', 'vector')
-          GROUP BY doc_id, w),
-        idf AS (
-          SELECT term, cast(count(*) as double) AS df FROM tf
-          GROUP BY term)
-        SELECT tf.doc_id,
-          round(sum(
-            ln((n_docs - df + 0.5) / (df + 0.5) + 1.0)
-              * tf * (1.2 + 1.0)
-              / (tf + 1.2 * (1.0 - 0.75 + 0.75 * dl / avgdl))), 6) AS bm25
-        FROM tf
-        JOIN idf USING (term)
-        JOIN len USING (doc_id)
-        CROSS JOIN stats
-        GROUP BY tf.doc_id
-        ORDER BY tf.doc_id"""))
+      Some(s"""WITH $bm25Sql
+        SELECT doc_id, bm25 FROM bm ORDER BY doc_id"""))
   )
 }

@@ -191,10 +191,7 @@ object StreamOps extends QueryModule {
       (s, dir) => dedupDistinctSignatures(
         s, dir, s"$dir/documents.parquet", "documents.parquet",
         maxFilesPerTrigger = None, queryName = "graft_q59_sink"),
-      Some("""SELECT count(distinct md5(array_to_string(list_sort(
-            list_distinct(string_split(
-              lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' '))),
-            ' '))) AS n_unique
+      Some(s"""SELECT count(distinct ${Q.bagSigSql(Q.normSql)}) AS n_unique
         FROM documents""")),
 
     // ─── stream-stream interval join (stream_join) ───
@@ -349,8 +346,7 @@ object StreamOps extends QueryModule {
       maxFilesPerTrigger)
     val keyed = docs
       .withColumn("nrm", Q.norm(col("text")))
-      .withColumn("bag_sig", md5(array_join(
-        array_sort(array_distinct(split(col("nrm"), " "))), " ")))
+      .withColumn("bag_sig", Q.bagSig(col("nrm")))
       // +1: a doc at exactly epoch 0 would equal the initial
       // watermark and be dropped as late before dedup ever sees it
       .withColumn("ts", timestamp_micros((col("doc_id") + 1L) * 1000000L))

@@ -442,6 +442,83 @@ class CatalogSpec extends AnyFunSuite {
       (3, "c", null)))                     // appeared at t2
   }
 
+  /** `(k, payload, valid_from, valid_to)` history rows of `table`, ordered. */
+  private def history(cat: Catalog, table: String) =
+    cat.table("", table)
+      .orderBy(col("k"), col("dbt_valid_from"), col("p"))
+      .select(col("k"), col("p"), col("dbt_valid_from").cast("string"),
+        col("dbt_valid_to").cast("string"))
+      .collect().map(r => (r.getLong(0), r.getString(1),
+        r.getString(2), r.getString(3))).toList
+
+  private def tsSource(rows: Seq[(Long, String, Option[String])]) = {
+    import spark.implicits._
+    rows.toDF("k", "p", "updated_at")
+      .withColumn("updated_at", col("updated_at").cast("timestamp"))
+  }
+
+  test("snapshotTimestamp re-run on a NULL updated_at adds no version") {
+    val cat = freshCatalog("snap_null_rerun")
+    val src = tsSource(Seq((1L, "a", None), (2L, "b", Some("2026-01-01"))))
+    cat.snapshotTimestamp("", "sn", src, Seq("k"), "updated_at")
+    cat.snapshotTimestamp("", "sn", src, Seq("k"), "updated_at")
+    assert(history(cat, "sn") == List(
+      (1L, "a", null, null),
+      (2L, "b", "2026-01-01 00:00:00", null)))
+  }
+
+  test("snapshotTimestamp: a NULL updated_at is never superseded") {
+    val cat = freshCatalog("snap_null_later")
+    cat.snapshotTimestamp("", "sl",
+      tsSource(Seq((1L, "a", None), (2L, "b", Some("2026-01-01")))),
+      Seq("k"), "updated_at")
+    // key 1 arrives with a real updated_at: `valid_from < updated_at`
+    // is NULL, so (as in dbt) its open version stays and none opens
+    cat.snapshotTimestamp("", "sl",
+      tsSource(Seq((1L, "a2", Some("2026-02-01")),
+        (2L, "b", Some("2026-01-01")))), Seq("k"), "updated_at")
+    assert(history(cat, "sl") == List(
+      (1L, "a", null, null),
+      (2L, "b", "2026-01-01 00:00:00", null)))
+  }
+
+  test("snapshot strategies reject a source with duplicate keys") {
+    val cat = freshCatalog("snap_dup")
+    import spark.implicits._
+    cat.snapshot("", "sd", Seq((1L, "a"), (2L, "b")).toDF("k", "p"),
+      Seq("k"), "2026-01-01 00:00:00")
+    val before = history(cat, "sd")
+    val ex = intercept[IllegalArgumentException] {
+      cat.snapshot("", "sd", Seq((1L, "x"), (1L, "y")).toDF("k", "p"),
+        Seq("k"), "2026-02-01 00:00:00")
+    }
+    assert(ex.getMessage.contains("unique_key"))
+    assert(history(cat, "sd") == before, "history must be untouched")
+    cat.snapshotTimestamp("", "sdt",
+      tsSource(Seq((1L, "a", Some("2026-01-01")))), Seq("k"), "updated_at")
+    intercept[IllegalArgumentException] {
+      cat.snapshotTimestamp("", "sdt",
+        tsSource(Seq((1L, "x", Some("2026-02-01")),
+          (1L, "y", Some("2026-03-01")))), Seq("k"), "updated_at")
+    }
+    assert(history(cat, "sdt") ==
+      List((1L, "a", "2026-01-01 00:00:00", null)))
+  }
+
+  test("registerAll registers every schema's relations on a fresh Catalog") {
+    val cat = freshCatalog("register_all")
+    import spark.implicits._
+    cat.createTableAs("", "ra_top", Seq(1, 2).toDF("n"))
+    cat.createTableAs("marts", "ra_mart", Seq(10, 20, 30).toDF("n"))
+    Seq(cat.viewName("", "ra_top"), cat.viewName("marts", "ra_mart"))
+      .foreach(spark.catalog.dropTempView)
+    assert(!spark.catalog.tableExists("ra_top"))
+    val fresh = new Catalog(spark, cat.database)
+    fresh.registerAll()
+    assert(fresh.sql("select sum(n) from ra_top").head().getLong(0) == 3)
+    assert(fresh.sql("select sum(n) from marts__ra_mart").head().getLong(0) == 60)
+  }
+
   test("current_timestamp is available for snapshot time (C18)") {
     val now = spark.sql("select current_timestamp()").head().getTimestamp(0)
     assert(now.getTime > 0L)
