@@ -67,11 +67,6 @@ object Bench {
     val spark = graft.core.EngineDefaults.session(sfDir,
       graft.core.EngineDefaults.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    // SPARK_GRAFT_EXCLUDE: comma-separated prefixes to leave out of a
-    // run (e.g. "c_" to skip the engine WRITE gates at a scale factor
-    // whose transient write+shuffle footprint exceeds the local disk —
-    // the oracle replay must then skip the same keys for comparability)
-    //
     // Bench action (r10, was Dataset.count() r1-r9): execute the FULL
     // physical plan via queryExecution.toRdd.count(). Plain count()
     // lets Catalyst prune work that doesn't change cardinality — a
@@ -86,16 +81,7 @@ object Bench {
     // skip on a cluster.
     def run(df: org.apache.spark.sql.DataFrame): Unit =
       df.queryExecution.toRdd.count()
-    val excl = sys.env.getOrElse("SPARK_GRAFT_EXCLUDE", "")
-      .split(",").map(_.trim).filter(_.nonEmpty)
-    // SPARK_GRAFT_ONLY: comma-separated prefixes to RESTRICT a run to
-    // (e.g. "c_" to measure just the engine write gates at a scale
-    // factor whose full-suite footprint the disk can't hold)
-    val only = sys.env.getOrElse("SPARK_GRAFT_ONLY", "")
-      .split(",").map(_.trim).filter(_.nonEmpty)
     val names = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(n => excl.exists(n.startsWith))
-      .filter(n => only.isEmpty || only.exists(n.startsWith))
     // Query-major measurement (r9; was run-major): warm up a query,
     // time its `Runs` passes back-to-back, then drop the app's scratch
     // root before moving on. Gates recreate their scratch databases on
@@ -121,7 +107,6 @@ object Bench {
         (System.nanoTime() - t0) / 1e9
       }
       graft.queries.Q.cleanScratch(spark)
-      graft.queries.GateCache.release(spark)
       // Shuffle files are reaped by ContextCleaner only when the
       // driver GCs — a 64 GB heap can go many corpus-scale queries
       // without one, stacking tens of GB of dead shuffle data (the

@@ -36,7 +36,6 @@ object Explain {
         println(df.queryExecution.executedPlan.toString)
       }
       graft.queries.Q.cleanScratch(spark)
-      graft.queries.GateCache.release(spark)
     }
     spark.stop()
   }

@@ -21,7 +21,6 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       graft.queries.Q.cleanScratch(spark)
-      graft.queries.GateCache.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -212,12 +212,6 @@ final class Catalog(val spark: SparkSession, val database: String) {
     register(schema, tableName)
   }
 
-  /** Views == tables for parquet (reference: macros/adapters.sql
-    * parquet__create_view_as).
-    */
-  def createViewAs(schema: String, tableName: String, df: DataFrame): Unit =
-    createTableAs(schema, tableName, df)
-
   /** dbt-style incremental materialization, delete+insert by unique
     * key (the `unique_key` merge strategy the reference adapter leaves
     * unimplemented — its tests/functional/basic/test_basic.py skips
@@ -544,25 +538,11 @@ final class Catalog(val spark: SparkSession, val database: String) {
       else table(schema, tableName)
         .repartitionByRange(numFiles, clusterCols.map(col): _*))
 
-  /** Materialize range-clustered on `clusterCols`: rows are range-
-    * partitioned and sorted within partitions, so parquet row-group
-    * min/max statistics become selective and scans with predicates on
-    * the cluster columns skip most of the file — the poor-man's
-    * Z-order, and the right default for append-only fact tables.
-    */
-  def createTableClusteredBy(schema: String, tableName: String,
-      df: DataFrame, numFiles: Int, clusterCols: Seq[String]): Unit = {
-    val cols = clusterCols.map(df.col)
-    createTableAs(schema, tableName,
-      df.repartitionByRange(numFiles, cols: _*)
-        .sortWithinPartitions(cols: _*))
-  }
-
   /** Partition-at-a-time clustered rewrite: materialize `df`
     * hive-partitioned on `partCol`, each partition range-clustered on
     * `clusterCols`, one partition per write job. This is how a 100 TB
-    * table actually gets compacted/clustered: the whole-table
-    * [[createTableClusteredBy]] shuffles the full table in one job
+    * table actually gets compacted/clustered: the whole-table route,
+    * [[compact]] with `clusterCols`, shuffles the full table in one job
     * (transient shuffle + tmp footprint ≈ 2-3× the table — it was the
     * one engine gate the sf100 protocol could not fit on local disk),
     * while here the transient scratch is bounded by ONE partition's
@@ -580,7 +560,8 @@ final class Catalog(val spark: SparkSession, val database: String) {
       .map(_.get(0))
     require(parts.length <= 512,
       s"clusterPartitions('$partCol') has >512 distinct values — " +
-        "pick a coarser partition key or cluster whole-table")
+        "pick a coarser partition key or cluster whole-table with " +
+        "compact(…, clusterCols)")
     val cols = clusterCols.map(c => col(c))
     val path = relationPath(schema, tableName).toString
     // A NULL partition value is one more partition, routed to Spark's

@@ -129,8 +129,7 @@ object Engine extends QueryModule {
         // range-clustered on ship date inside each) instead of the
         // whole-table one-job rewrite — transient scratch is bounded
         // by one partition, which is what let this gate finally run
-        // at sf100 (the whole-table form needed ~65 GB scratch; its
-        // path stays pinned by CoreSpec's clustered-write spec).
+        // at sf100 (the whole-table form needed ~65 GB scratch).
         cat.clusterPartitions("", "li_clustered",
           cat.table("", "li_frag"),
           partCol = "l_shipyear", numFilesPerPart = 8,

@@ -148,20 +148,9 @@ object LlmPipeline extends QueryModule {
             explode(graft.functions.WordShingleSigs.of(
               lower(col("text")), 5)).as("g"))
         // bench is DISTINCT on g, so the inner join is exactly a
-        // left-semi probe — no join output materializes, each corpus
-        // shingle is a hash lookup. The distinct set is materialized
-        // (cache + count, the q41 pattern) so the UNHINTED 64 MB size
-        // check plans on its TRUE size: Catalyst estimates a distinct
-        // at its corpus-sized input, planned a shuffle semi at sf100
-        // (two 250M-row exchange stages, ~1000 s of CPU), where the
-        // realized benchmark shingle domain is ~240k sigs ≈ 4 MB — a
-        // benchmark set is fixed-size at the 100 TB design point, and
-        // with it broadcast the corpus side never exchanges at all
-        // (r12 stage attribution: 88.8 → 36.8 s at sf100, ~0.94x vs
-        // DuckDB). A bench outgrowing the threshold degrades back to
-        // the shuffle semi — size-checked, never forced.
-        val bench = GateCache.materialize("d9.bench",
-          sh.filter(col("doc_id") % 97 === 0).select(col("g")).distinct())
+        // left-semi probe — each corpus shingle is a hash lookup.
+        val bench = sh.filter(col("doc_id") % 97 === 0)
+          .select(col("g")).distinct()
         val cnt = sh.filter(col("doc_id") % 97 =!= 0)
           .join(bench, Seq("g"), "left_semi")
           .groupBy(col("doc_id")).agg(count(lit(1)).as("n_cont"))
@@ -338,7 +327,7 @@ object LlmPipeline extends QueryModule {
         // the saved scan) and folding the corpus total out of the
         // per-doc aggregate (the total branch recomputes the join
         // pipeline — exchange reuse does not cover it — which costs
-        // more than this one extra narrow count scan).
+        // more than summing wf).
         val docs = t(s, dir, "documents")
         // r9: the exchange key is xxhash64(word), not the word — the
         // score needs only per-token counts, so shipping raw strings
@@ -351,34 +340,17 @@ object LlmPipeline extends QueryModule {
         val toks = docs.select(col("doc_id"),
           explode(split(norm(col("text")), " ")).as("w"))
           .select(col("doc_id"), xxhash64(col("w")).as("w"))
-        // cache+count-materialized (r8, the q3/q5/q41 pattern): the
-        // vocab is sublinear (Heaps' law) but Catalyst's no-CBO
-        // estimate for the groupBy output is input-sized, which forced
-        // the toks⋈wf join onto a shuffle; materializing plans a
-        // static broadcast on the TRUE vocab size (sf100 fresh-JVM
-        // A/B: 27.3/28.1 → 24.7/23.5 s medians), degrading back to
-        // the shuffle join at the corpus scale where the vocab
-        // outgrows the threshold.
-        val wf = GateCache.materialize("t10.wf",
-          toks.groupBy(col("w")).agg(count(lit(1)).as("wf")))
-        // r15: the corpus token total is Σwf BY DEFINITION, and wf is
-        // already cached — the old `toks.count()` re-ran the full
-        // corpus scan + explode for a number the vocab table has.
-        // One cached vocab-sized aggregate instead of a corpus pass;
-        // exact integers, same value. (Distinct from the r9-rejected
-        // "fold the total out of the per-doc aggregate" arm, which
-        // recomputed the JOIN pipeline.)
-        // coalesce(…, 0): sum over zero rows is NULL — the old
-        // toks.count() returned 0 on an empty corpus, and getLong on a
-        // null cell would NPE (ADVICE r15)
-        val total = wf.agg(coalesce(sum(col("wf")), lit(0L)))
-          .collect()(0).getLong(0)
+        val wf = toks.groupBy(col("w")).agg(count(lit(1)).as("wf"))
+        // the corpus token total is Σwf: a one-row aggregate in the same
+        // plan, which reuses wf's exchange instead of re-exploding the corpus
+        val total = wf.agg(sum(col("wf")).as("total"))
         toks.join(wf, Seq("w"))
           .groupBy(col("doc_id"))
           .agg(count(lit(1)).as("n_tok"), sum(col("wf")).as("sum_wf"))
+          .crossJoin(total)
           .select(col("doc_id"), col("n_tok"), col("sum_wf"),
             (col("sum_wf").cast("double") /
-              (col("n_tok") * lit(total)).cast("double")).as("score"))
+              (col("n_tok") * col("total")).cast("double")).as("score"))
           .withColumn("keep", col("score") > 0.0333)
           .orderBy(col("doc_id"))
       },

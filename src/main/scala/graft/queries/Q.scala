@@ -187,56 +187,3 @@ object Q {
 trait QueryModule {
   def queries: Map[String, Q]
 }
-
-/** Eager size materialization, released by the harness. A gate whose
-  * next join must plan on a dimension's TRUE size (Catalyst's no-CBO
-  * estimate of a filter, distinct or aggregate is its input's size)
-  * hands that dimension to [[materialize]]: it is persisted and counted
-  * before the gate builds the join, so the size check sees the cached
-  * bytes and can plan a static broadcast. The gate cannot unpersist it
-  * (the returned DataFrame still reads the cache when the caller's
-  * action runs), so it is registered under a stable key and the harness
-  * calls [[release]] once the key's actions are done. This is the one
-  * materialization rule: a subtree that is merely read more than once
-  * is recomputed, not persisted.
-  *
-  * Release-before-persist: [[materialize]] unpersists the handle this
-  * session registered under `key` BEFORE persisting the new one. The
-  * shared CacheManager matches cache entries by plan equality, so a
-  * re-run gate's `persist()` of an equal plan is a no-op that aliases
-  * the previous entry — unpersisting the previous handle afterwards
-  * would drop the entry both share, and the new handle would run
-  * uncached. Each call therefore pays its own cache fill and a session
-  * holds at most one cached copy per key.
-  */
-object GateCache {
-  private val Level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
-  // keyed by session identity (SparkSession has reference equality):
-  // the same gate key from two live sessions must never collide
-  private val handles =
-    scala.collection.mutable.Map[(SparkSession, String), DataFrame]()
-
-  /** Register `df` as this session's working set for `key`, persist it
-    * after releasing the previous handle for `key`, and fill the cache
-    * with a count. The count runs outside the lock, so two sessions
-    * never serialize their Spark jobs here. */
-  def materialize(key: String, df: DataFrame): DataFrame = {
-    synchronized {
-      handles.remove((df.sparkSession, key)).foreach(_.unpersist(false))
-      // stopped sessions' handles are dropped so the map cannot strongly
-      // reference dead plans for the JVM lifetime
-      handles.filterInPlace { case ((owner, _), _) =>
-        !owner.sparkContext.isStopped }
-      handles((df.sparkSession, key)) = df.persist(Level)
-    }
-    df.count()
-    df
-  }
-
-  /** Unpersist every handle `session` registered. */
-  def release(session: SparkSession): Unit = synchronized {
-    handles.keys.filter(_._1 eq session).toList
-      .foreach(k => handles.remove(k).foreach(_.unpersist(false)))
-  }
-}

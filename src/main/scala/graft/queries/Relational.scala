@@ -85,23 +85,10 @@ object Relational extends QueryModule {
         // recorded in BASELINE.md round-7 notes.) The join output
         // keeps hash(l_orderkey) partitioning, which satisfies the
         // groupBy's clustering, so the aggregate adds no shuffle.
-        // The customer semi-filter runs on the orders side BEFORE its
-        // shuffle, so the 1/5 segment selectivity also cuts shuffle
-        // volume 5x. The filtered customer side is corpus-proportional
-        // (1/5 of all customers — billions of keys at 100 TB), so it
-        // must NOT be force-broadcast (broadcast() overrides the size
-        // check up to a hard 8 GB failure). Its key set is
-        // cache+count-materialized (one bounded customer scan) so the
-        // size check sees the TRUE ~8 B/key footprint instead of
-        // Catalyst's no-CBO filter estimate (= full customer size):
-        // the semi then plans as a static broadcast and orders skips
-        // its semi shuffle entirely, degrading back to the shuffle
-        // semi at the corpus scale where the key set outgrows the
-        // threshold.
-        val custKeys = GateCache.materialize("q3.custKeys",
-          cust.select(col("c_custkey")))
+        // The unhinted customer semi-filter cuts orders 5x before its shuffle.
         val ordF = ord
-          .join(custKeys, col("o_custkey") === col("c_custkey"), "left_semi")
+          .join(cust.select(col("c_custkey")),
+            col("o_custkey") === col("c_custkey"), "left_semi")
           .select(col("o_orderkey"), col("o_orderdate"))
         li.join(ordF.hint("shuffle_hash"),
             col("l_orderkey") === col("o_orderkey"))
@@ -180,13 +167,6 @@ object Relational extends QueryModule {
         // force-broadcast; unhinted, the EngineDefaults size-checked
         // policy broadcasts it while it fits and shuffles at the scale
         // where it doesn't — never a hard failure.
-        // The region→nation→customer chain collapses to one
-        // pre-filtered dimension (ASIA customers + their nation KEY),
-        // cache+count-materialized: the TRUE ~1/5-of-customer size
-        // replaces Catalyst's no-CBO estimate (= full customer scan),
-        // so the dim joins orders as a static size-checked broadcast
-        // BEFORE the big orderkey join, degrading to a shuffle at the
-        // corpus scale where it outgrows the threshold.
         // Round-8 restructure (interleaved fresh-JVM A/B at sf100:
         // 12.4/11.8 s vs 13.9/15.0 s medians for the old form): the
         // orders side carries n_nationkey THROUGH the orderkey join,
@@ -200,16 +180,16 @@ object Relational extends QueryModule {
         val asiaN = nation
           .join(broadcast(region), col("n_regionkey") === col("r_regionkey"))
           .select(col("n_nationkey"), col("n_name"))
-        val custA = GateCache.materialize("q5.custA", cust
-          .join(broadcast(asiaN), col("c_nationkey") === col("n_nationkey"))
-          .select(col("c_custkey"), col("n_nationkey")))
+        // semi, not inner: Catalyst sizes a semi at customer, not a product
+        val custA = cust
+          .join(broadcast(asiaN), col("c_nationkey") === col("n_nationkey"),
+            "left_semi")
+          .select(col("c_custkey"), col("c_nationkey").as("n_nationkey"))
         // r13 bloom-prefilter A/B, REJECTED with numbers: ordA is ~10%
         // selective over the 600M-row lineitem exchange, and Catalyst's
-        // runtime bloom can't fire here (the cached dims hide the
-        // selective filters from its scan-pattern match — verified with
-        // every threshold conf raised). A hand-planned probe-side bloom
-        // (org.apache.spark.util.sketch, fpp 0.01, driver-built from
-        // the cache+count) measured interleaved-in-one-JVM at sf100:
+        // runtime bloom did not fire on the then-cached dims. A
+        // hand-planned probe-side bloom (org.apache.spark.util.sketch,
+        // fpp 0.01, driver-built) measured interleaved-in-one-JVM at sf100:
         // bloomed 21.9/23.1 s vs plain 18.5/19.5 s — the probe's
         // random access into an 18 MB sketch duplicates the cost the
         // join's own hash probe pays anyway, so it only saves shuffle

@@ -48,29 +48,18 @@ object Relational3 extends QueryModule {
     // carries its IMPLIED single-side disjunction (the combined
     // predicate restricted to that side's columns — a sound weakening
     // Catalyst cannot derive across the join). The part-side
-    // disjunction keeps ~5% of part, which is what makes the
-    // size-checked path actually fire at scale. Catalyst estimates a
-    // Filter at its child's size (no CBO stats on raw parquet), so the
-    // planner would still see "600 MB at sf100" and plan a sort-merge
-    // — paying the full 600M-row fact shuffle before AQE's runtime
-    // stats could convert the join. Materializing the pruned dim
-    // (cache + count, one bounded part scan) replaces the guess with
-    // the TRUE cached size; the unhinted size check then plans the
-    // broadcast statically and the fact side never shuffles at all.
-    // A corpus where the pruned dim outgrows the threshold degrades
-    // back to the shuffle join — the decision stays size-checked, not
-    // forced. The full mixed predicate still runs post-join; the
-    // pre-filters only shrink what reaches it.
+    // disjunction keeps ~5% of part. The full mixed predicate still
+    // runs post-join; the pre-filters only shrink what reaches it.
     "q41_disjunctive" -> Q(
       (s, dir) => {
         val li = t(s, dir, "lineitem")
           .filter(col("l_quantity").between(1, 50))
-        val part = GateCache.materialize("q41.part", t(s, dir, "part")
+        val part = t(s, dir, "part")
           .filter(
             (col("p_brand") === "Brand#1" && col("p_size").between(1, 15)) ||
             (col("p_brand") === "Brand#2" && col("p_size").between(10, 30)) ||
             (col("p_brand") === "Brand#3" && col("p_size").between(20, 50)))
-          .select(col("p_partkey"), col("p_brand"), col("p_size")))
+          .select(col("p_partkey"), col("p_brand"), col("p_size"))
         li.join(part, col("l_partkey") === col("p_partkey"))
           .filter(
             (col("p_brand") === "Brand#1" && col("p_size").between(1, 15) &&

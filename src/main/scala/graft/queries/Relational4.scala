@@ -84,20 +84,13 @@ object Relational4 extends QueryModule {
         WHERE (o_orderkey * 2654435761) % 100 < 10""")),
 
     // ─── q51: multiset set operations (ALL variants) ───
-    // One pushed-filter scan feeds both branches of both set-ops: the
-    // naive form re-scanned lineitem FOUR times (a and b each feed
-    // intersectAll and exceptAll; exchange reuse cannot merge scans
-    // with different pushed filters). The union of the two branch
-    // predicates (l_orderkey <= 1500) is row-group-prunable and tiny,
-    // so it cache+count-materializes once and the set-ops run on the
-    // cached rows — at a 100 TB table, 4 scans -> 1 is the difference
-    // that matters (r12 audit: 0.87 -> 0.56 s isolated at sf100; the
-    // published 2.17 s / 3.6x row was leg-throttle noise).
+    // a and b are scanned once per set-op; each scan pushes its own
+    // l_orderkey range, so row-group pruning keeps it to its slice.
     "q51_setops_all" -> Q(
       (s, dir) => {
-        val base = GateCache.materialize("q51.base", t(s, dir, "lineitem")
+        val base = t(s, dir, "lineitem")
           .filter(col("l_orderkey") <= 1500)
-          .select(col("l_orderkey"), col("l_partkey")))
+          .select(col("l_orderkey"), col("l_partkey"))
         val a = base.filter(col("l_orderkey") <= 1000)
           .select(col("l_partkey"))
         val b = base.filter(col("l_orderkey").between(500, 1500))
@@ -374,10 +367,7 @@ object Relational4 extends QueryModule {
     // the whole fact output on custkey — a third corpus-scale
     // exchange — and benched 32.8 s vs DuckDB's 7.3 s at sf100.)
     // Both nation-tagged dims are corpus-proportional, so they are
-    // NOT force-broadcast: cache+count materialization (the
-    // q3/q5/q41/t10 pattern) shows the size check their true ~25 B/row
-    // footprint, planning static broadcasts that degrade to shuffles
-    // at the corpus scale where a dim outgrows the threshold.
+    // NOT force-broadcast: the size check decides.
     "q62_nation_pairs" -> Q(
       (s, dir) => {
         val nation = t(s, dir, "nation")
@@ -385,10 +375,10 @@ object Relational4 extends QueryModule {
         // int nation KEYS ride the corpus-scale exchanges; the ~12 B
         // name strings attach to the 1250-row aggregate at the end
         // (two 25-row broadcasts) — same trick as q5's restructure
-        val supN = GateCache.materialize("q62.supN", t(s, dir, "supplier")
-          .select(col("s_suppkey"), col("s_nationkey")))
-        val custN = GateCache.materialize("q62.custN", t(s, dir, "customer")
-          .select(col("c_custkey"), col("c_nationkey")))
+        val supN = t(s, dir, "supplier")
+          .select(col("s_suppkey"), col("s_nationkey"))
+        val custN = t(s, dir, "customer")
+          .select(col("c_custkey"), col("c_nationkey"))
         // shuffle_hash, not sort-merge: neither side's custkey order
         // is reusable downstream (the next join keys on orderkey), so
         // hashing the dim side beats sorting 150M orders rows.

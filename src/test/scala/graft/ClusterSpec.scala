@@ -45,10 +45,9 @@ class ClusterSpec extends AnyFunSuite {
 
   test("repeated d6 invocations do not accumulate cached RDDs") {
     // d6 persists no working set (its rooted table is recomputed per
-    // read; GateCache holds only size materializations), so re-running
-    // the gate must not pile up cached RDDs, and release must leave
-    // none behind. RDDs persisted before this test (e.g. the components
-    // test's localCheckpoints, reaped only on GC) are not d6's.
+    // read), so re-running the gate must not pile up cached RDDs or
+    // leave any behind. RDDs persisted before this test (e.g. the
+    // components test's localCheckpoints, reaped only on GC) are not d6's.
     val before = spark.sparkContext.getPersistentRDDs.keySet
     SparkEntry.queries("d6_dup_clusters")(spark, TestSpark.SF).collect()
     val after1 = spark.sparkContext.getPersistentRDDs.size
@@ -57,9 +56,8 @@ class ClusterSpec extends AnyFunSuite {
     val after3 = spark.sparkContext.getPersistentRDDs.size
     assert(after3 <= after1,
       s"cached RDDs grew across invocations: $after1 -> $after3")
-    graft.queries.GateCache.release(spark)
     val left = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
-    assert(left.isEmpty, s"d6 left persisted RDDs after release: $left")
+    assert(left.isEmpty, s"d6 left persisted RDDs behind: $left")
   }
 
   test("components converge on a long chain (pointer jumping)") {

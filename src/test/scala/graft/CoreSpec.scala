@@ -708,8 +708,7 @@ class DataTestsSpec extends AnyFunSuite {
   }
 }
 
-/** Clustered materializations: the whole-table range rewrite (one job,
-  * non-overlapping file ranges) and the partition-at-a-time form the
+/** Clustered materializations: the partition-at-a-time form the
   * sf100 compaction gate runs (scratch bounded by one partition).
   */
 class ClusteredWriteSpec extends AnyFunSuite {
@@ -718,26 +717,6 @@ class ClusteredWriteSpec extends AnyFunSuite {
   private def freshCatalog(name: String): Catalog = {
     val dir = Files.createTempDirectory(s"graft_test_$name")
     new Catalog(spark, dir.toString)
-  }
-
-  test("createTableClusteredBy: disjoint sorted ranges across files") {
-    val cat = freshCatalog("clustered")
-    import spark.implicits._
-    val df = (0 until 1000).map(i => ((i * 7919) % 1000, s"v$i"))
-      .toDF("k", "v")
-    cat.createTableClusteredBy("", "t", df, numFiles = 4, Seq("k"))
-    val perFile = cat.table("", "t")
-      .groupBy(input_file_name().as("f"))
-      .agg(min(col("k")).as("lo"), max(col("k")).as("hi"),
-        count(lit(1)).as("n"))
-      .collect().map(r => (r.getInt(1), r.getInt(2), r.getLong(3)))
-      .sortBy(_._1)
-    assert(perFile.length == 4, s"expected 4 files: ${perFile.toSeq}")
-    assert(perFile.map(_._3).sum == 1000)
-    perFile.sliding(2).foreach { case Array((_, hi1, _), (lo2, _, _)) =>
-      assert(hi1 <= lo2, s"file ranges overlap: ${perFile.toSeq}")
-    }
-    assert(cat.table("", "t").count() == 1000)
   }
 
   test("clusterPartitions: hive partitions, per-partition clustering, " +

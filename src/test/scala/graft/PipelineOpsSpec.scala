@@ -63,6 +63,13 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(joined.isEmpty, "replication changed a doc's rarity score")
   }
 
+  test("t10: an empty corpus gives no rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_t10e").toString
+    spark.read.parquet(s"${TestSpark.SF}/documents.parquet").limit(0)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    assert(SparkEntry.queries("t10_rarity")(spark, dir).collect().isEmpty)
+  }
+
   test("t10: keep flag discriminates on the corpus (both outcomes occur)") {
     val keeps = SparkEntry.queries("t10_rarity")(spark, TestSpark.SF)
       .groupBy(col("keep")).count().collect()

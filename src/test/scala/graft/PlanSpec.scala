@@ -60,42 +60,13 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("q41 joins the fact against a MATERIALIZED pruned dim, unshuffled") {
-    // the cache+count materialization is what lets the planner see the
-    // pruned dim's true size and plan the broadcast statically — the
-    // fact side must not shuffle on the join key
+  test("q41 joins the fact against a pruned dim, unshuffled") {
+    // the fact side must not shuffle on the join key
     val df = SparkEntry.queries("q41_disjunctive")(spark, TestSpark.SF)
     val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("InMemoryTableScan") || p.contains("InMemoryRelation"),
-      s"q41's pruned part side is not materialized:\n$p")
     assert(p.contains("BroadcastHashJoin"), s"expected a broadcast join:\n$p")
     assert(!p.contains("hashpartitioning(l_partkey"),
       s"q41 must not shuffle the fact side on the join key:\n$p")
-  }
-
-  test("GateCache holds size materializations only: no subtree persists") {
-    // the one materialization rule: a gate persists (and counts) a
-    // dimension only so the next join plans on its true size. The
-    // dedup/ANN keys read their multiply-referenced subtrees by
-    // recompute; the size-materializing keys read one cached relation
-    // per materialized dimension.
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    def cached(q: String): Int = {
-      val df = SparkEntry.queries(q)(spark, TestSpark.SF)
-      val rels = df.queryExecution.withCachedData.collect {
-        case r: InMemoryRelation => r.cacheBuilder
-      }
-      rels.distinct.size
-    }
-    try {
-      for (q <- Seq("d2_dedup_minhash", "d4_dedup_simhash", "d6_dup_clusters",
-          "d8_incr_dedup", "d11_semdedup", "s3_ann_ivf", "s4_knn_graph"))
-        assert(cached(q) == 0, s"$q plans with an InMemoryRelation")
-      for ((q, n) <- Seq("q3_join_agg" -> 1, "q5_multijoin" -> 1,
-          "q41_disjunctive" -> 1, "q51_setops_all" -> 1,
-          "q62_nation_pairs" -> 2, "d9_contamination" -> 1, "t10_rarity" -> 1))
-        assert(cached(q) == n, s"$q should plan with $n InMemoryRelation(s)")
-    } finally graft.queries.GateCache.release(spark)
   }
 
   test("q1 aggregates partially before the exchange (map-side combine)") {
@@ -348,15 +319,12 @@ class PlanSpec extends AnyFunSuite {
       s"d9 re-grew shingle string construction:\n$p")
     assert(p.contains("LeftSemi"), s"d9's bench probe must be semi:\n$p")
     // r12: text mode — no split() array may feed the shingler (the
-    // scanner tokenizes the UTF-8 bytes directly), and the bench
-    // distinct is cache+count-materialized so the semi probe plans as
-    // a BROADCAST on the true (benchmark-sized) set: the corpus side
-    // must never exchange on g (a shuffle semi at sf100 was two
-    // 250M-row exchange stages for a 4 MB realized bench domain).
+    // scanner tokenizes the UTF-8 bytes directly), and the semi probe
+    // plans as a BROADCAST: the corpus side must never exchange on g
+    // (a shuffle semi at sf100 was two 250M-row exchange stages for a
+    // 4 MB realized bench domain).
     assert(!p.contains("split("),
       s"d9 re-grew the split() array pass ahead of the shingler:\n$p")
-    assert(p.contains("InMemoryTableScan") || p.contains("Scan In-memory"),
-      s"d9's bench distinct must be cache-materialized:\n$p")
     val semiLine = p.linesIterator.find(_.contains("LeftSemi")).get
     assert(semiLine.contains("BroadcastHashJoin"),
       s"d9's semi probe must plan as a broadcast on the true bench " +

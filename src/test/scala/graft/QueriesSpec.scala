@@ -25,6 +25,12 @@ class QueriesSmokeSpec extends AnyFunSuite {
     test(s"$name runs and returns rows at sf0.001") {
       val df = SparkEntry.queries(name)(spark, TestSpark.SF)
       assert(df.count() > 0, s"$name returned 0 rows")
+      // no gate persists a working set: every join plans on Catalyst's
+      // own estimates and AQE's runtime sizes
+      val cached = df.queryExecution.withCachedData.collect {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+      }
+      assert(cached.isEmpty, s"$name plans with an InMemoryRelation")
     }
   }
 

@@ -14,6 +14,7 @@ graft.Bench. Strictly local benchmarking tooling.
 Usage: bench_duckdb.py <sfDir> <oracle_sql.json> [runs]
 """
 import json
+import os
 import statistics
 import sys
 import time
@@ -29,39 +30,23 @@ def main(sf_dir, oracle_path, runs=3):
         con.execute(
             f"create view {t} as select * from read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(oracle_path))
-    # GRAFT_EXCLUDE: comma-separated prefixes to skip, mirroring
-    # graft.Bench's SPARK_GRAFT_EXCLUDE for like-for-like runs
-    import os
-    excl = [p for p in os.environ.get("GRAFT_EXCLUDE", "").split(",") if p]
-    # GRAFT_ONLY mirrors SPARK_GRAFT_ONLY: restrict to these prefixes
-    only = [p for p in os.environ.get("GRAFT_ONLY", "").split(",") if p]
     # Gate-scale-only oracles: driver gates that verify approximate
     # operators by recomputing the EXACT answer quadratically (all-pairs
     # jaccard / all-pairs cosine over the full table). Correct and cheap
     # at the sf0.01 correctness gate; structurally infeasible as a
     # timing replay at protocol SFs, where the Spark side keeps running
     # them (they land in the no-oracle bucket of mk_baseline, like any
-    # Spark-only key). The authoritative list is declared per-Q in Scala
+    # Spark-only key). The one list is declared per-Q in Scala
     # (Q.quadraticOracle) and dumped by graft.Verify as oracle_meta.json
-    # next to oracle_sql.json — read it from there so a future quadratic
-    # gate cannot be silently missing from a replay-side copy. The
-    # hardcoded fallback only covers replaying a pre-r10 oracle dump.
-    import os.path
+    # next to oracle_sql.json.
     meta_path = os.path.join(os.path.dirname(oracle_path), "oracle_meta.json")
-    if os.path.exists(meta_path):
-        quadratic = set(json.load(open(meta_path))["quadratic_oracles"])
-    else:
-        print("bench_duckdb: no oracle_meta.json next to oracle dump; "
-              "falling back to the pre-r10 hardcoded quadratic list",
-              file=sys.stderr)
-        quadratic = {"d2_dedup_minhash", "d4_dedup_simhash",
-                     "d5b_embed_neardup_lsh", "d11_semdedup"}
+    if not os.path.exists(meta_path):
+        sys.exit(f"bench_duckdb: {meta_path} is missing; run graft.Verify "
+                 "to write it next to oracle_sql.json")
+    quadratic = set(json.load(open(meta_path))["quadratic_oracles"])
     if os.environ.get("GRAFT_INCLUDE_QUADRATIC") == "1":
         quadratic = set()
-    names = sorted(n for n in oracle
-                   if not any(n.startswith(p) for p in excl)
-                   and (not only or any(n.startswith(p) for p in only))
-                   and n not in quadratic)
+    names = sorted(n for n in oracle if n not in quadratic)
     for name in names:  # warm-up (OS page cache, duckdb readers)
         con.execute(oracle[name]).fetchall()
     samples = {n: [] for n in names}
