@@ -61,6 +61,20 @@ object Bench {
     }
   }
 
+  /** `s` as a JSON string literal: backslash, quote and every control
+    * character (< 0x20) escaped. A tab or CR in an oracle's SQL or a
+    * peer's command line would otherwise make the whole document
+    * unparseable. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val peersAtStart = liveGraftPeers()
@@ -132,7 +146,7 @@ object Bench {
       if (med(n) > 0) (xs.max - xs.min) / med(n) else 0.0
     }).max
     val qs = names.map(n =>
-        "\"" + n + "\":" + med.get(n).map(_.toString).getOrElse("null"))
+        jsonString(n) + ":" + med.get(n).map(_.toString).getOrElse("null"))
       .mkString("{", ",", "}")
     // Per-query spread ((max-min)/median across passes) on the full
     // line only: the r12 protocol auto-isolates high-spread leg rows
@@ -141,23 +155,20 @@ object Bench {
     val qspreads = ok.map { n =>
       val xs = samples.map(_(n))
       val sp = if (med(n) > 0) (xs.max - xs.min) / med(n) else 0.0
-      "\"" + n + "\":" + "%.3f".formatLocal(java.util.Locale.ROOT, sp)
+      jsonString(n) + ":" + "%.3f".formatLocal(java.util.Locale.ROOT, sp)
     }.mkString("{", ",", "}")
     // When anything failed the headline total is NOT comparable with
     // other rounds (the sum silently shrank), so report it as null and
     // expose the partial sum separately as total_ok + n_failed.
     val totalOk = med.values.sum
     val total = if (failed.isEmpty) totalOk.toString else "null"
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // Full-precision per-query map: its own line (local tooling reads
     // this; at 125 queries it is ~5 KB and cannot fit the driver's
     // 2000-char stdout tail window, which is why BENCH_r1..r8 all
     // carry "parsed": null).
     // contention stamp: peers sampled at start ∪ end (see liveGraftPeers)
     val peers = (peersAtStart ++ liveGraftPeers()).distinct
-    val peersJson = peers.map(p => "\"" + p.replace("\\", "\\\\")
-      .replace("\"", "\\\"") + "\"").mkString("[", ",", "]")
-    val fullLine = s"""{"metric":"queries_full","value":$total,"unit":"sec","queries":$qs,"qspreads":$qspreads,"sf":"$sfDir","runs":$Runs,"spread":$spread,"total_ok":$totalOk,"n_failed":${failed.size},"failed":$failedJson,"contended":${peers.size},"peers":$peersJson}"""
+    val fullLine = s"""{"metric":"queries_full","value":$total,"unit":"sec","queries":$qs,"qspreads":$qspreads,"sf":${jsonString(sfDir)},"runs":$Runs,"spread":$spread,"total_ok":$totalOk,"n_failed":${failed.size},"failed":${failed.map(jsonString).mkString("[", ",", "]")},"contended":${peers.size},"peers":${peers.map(jsonString).mkString("[", ",", "]")}}"""
     println(fullLine)
     val tail = renderTail(names, med, failed.toSeq, sfDir, Runs, spread,
       peers.size)
@@ -192,7 +203,7 @@ object Bench {
       contended: Int): Seq[String] = {
     def r2(d: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, d)
     def obj(keys: Seq[String]): String = keys.map(n =>
-      "\"" + n + "\":" + med.get(n).map(r2).getOrElse("null"))
+      jsonString(n) + ":" + med.get(n).map(r2).getOrElse("null"))
       .mkString("{", ",", "}")
     val chunks = names.foldLeft(Vector(Vector.empty[String])) { (cs, n) =>
       if (obj(cs.last :+ n).length > 1200) cs :+ Vector(n)
@@ -204,8 +215,8 @@ object Bench {
     val totalOk = med.values.sum
     val total = if (failed.isEmpty) r2(totalOk) else "null"
     val slowest = obj(med.keys.toSeq.sortBy(n => (-med(n), n)).take(5))
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val headline = s"""{"metric":"total","value":$total,"unit":"sec","slowest":$slowest,"n_queries":${names.size},"sf":"$sfDir","runs":$runs,"spread":${r2(spread)},"total_ok":${r2(totalOk)},"n_failed":${failed.size},"failed":$failedJson,"contended":$contended}"""
+    val failedJson = failed.map(jsonString).mkString("[", ",", "]")
+    val headline = s"""{"metric":"total","value":$total,"unit":"sec","slowest":$slowest,"n_queries":${names.size},"sf":${jsonString(sfDir)},"runs":$runs,"spread":${r2(spread)},"total_ok":${r2(totalOk)},"n_failed":${failed.size},"failed":$failedJson,"contended":$contended}"""
     parts :+ headline
   }
 }

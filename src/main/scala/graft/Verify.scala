@@ -22,27 +22,17 @@ object Verify {
       }
       graft.queries.Q.cleanScratch(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import Bench.jsonString
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Oracle metadata the replay tooling needs: which keys' oracles are
     // gate-scale-only (quadratic). Declared per-Q in Scala — the single
     // source of truth — so tools/bench_duckdb.py never maintains a
     // parallel hardcoded name list that silently goes stale.
     val quad = SparkEntry.quadraticOracles.toSeq.sorted
-      .map(q(_)).mkString("[", ",", "]")
+      .map(jsonString).mkString("[", ",", "]")
     Files.writeString(Paths.get(s"$outDir/oracle_meta.json"),
       s"""{"quadratic_oracles": $quad}""")
     spark.stop()

@@ -218,10 +218,12 @@ final class Catalog(val spark: SparkSession, val database: String) {
     * incremental). First call materializes `df` outright; later calls
     * keep every existing row whose key is absent from the increment
     * (one anti-join — the "delete"), union the increment (the
-    * "insert"), and swap atomically like any CTAS. Idempotent for a
-    * given batch. For date/id-partitioned facts where increments align
-    * with partitions, prefer [[insertOverwritePartitions]], which
-    * rewrites only the touched partitions.
+    * "insert"), and swap atomically like any CTAS. A NULL key is one
+    * key value and matches itself ([[joinOnKey]]), so the call is
+    * idempotent for a given batch, NULL-keyed rows included. For
+    * date/id-partitioned facts where increments align with
+    * partitions, prefer [[insertOverwritePartitions]], which rewrites
+    * only the touched partitions.
     */
   def createTableIncremental(schema: String, tableName: String,
       df: DataFrame, uniqueKey: Seq[String]): Unit = {
@@ -236,12 +238,10 @@ final class Catalog(val spark: SparkSession, val database: String) {
       // backfills NULL via unionByName(allowMissingColumns). Increment
       // columns the target never saw are appended after the existing
       // ones, so long-lived consumers keep their ordinals.
-      val existing = table(schema, tableName)
-      val (tgt, inc) = widenTo(existing, df)
-      val keys = inc.select(uniqueKey.map(col): _*).distinct()
-      val kept = tgt.join(keys, uniqueKey, "left_anti")
+      val (tgt, inc) = widenTo(table(schema, tableName), df)
       createTableAs(schema, tableName,
-        kept.unionByName(inc, allowMissingColumns = true))
+        joinOnKey(tgt, inc, uniqueKey, "left_anti")
+          .unionByName(inc, allowMissingColumns = true))
     }
   }
 
@@ -260,10 +260,13 @@ final class Catalog(val spark: SparkSession, val database: String) {
     * staying NULL otherwise — exactly what warehouse MERGE does for a
     * new column the UPDATE SET clause doesn't mention. Unmatched
     * increment keys insert, with target-only columns NULL-backfilled.
-    * The increment MUST be unique on `uniqueKey`: SQL MERGE (and every
-    * dbt warehouse adapter) errors when one target row matches several
-    * source rows, and silently fanning the target out would corrupt
-    * the table — so a duplicate-keyed increment fails loudly here.
+    * A NULL key is one key value: it matches the target's NULL key
+    * (`<=>`, as in [[joinOnKey]]) and updates it instead of inserting
+    * a second row. The increment MUST be unique on `uniqueKey`: SQL
+    * MERGE (and every dbt warehouse adapter) errors when one target
+    * row matches several source rows, and silently fanning the target
+    * out would corrupt the table — so a duplicate-keyed increment
+    * fails loudly here.
     * Schema drift evolves through the same [[widenTo]] lattice as
     * delete+insert. Scale shape: one key-partitioned shuffle join plus
     * the CTAS swap — identical to the delete+insert exchange (the
@@ -287,8 +290,7 @@ final class Catalog(val spark: SparkSession, val database: String) {
     if (!listRelations(schema).contains(tableName))
       createTableAs(schema, tableName, df)
     else {
-      val existing = table(schema, tableName)
-      val (tgt, inc) = widenTo(existing, df)
+      val (tgt, inc) = widenTo(table(schema, tableName), df)
       requireUniqueKey(inc, uniqueKey, s"merge increment for $schema.$tableName",
         "SQL MERGE forbids multiple source matches per target row")
       val upd =
@@ -298,8 +300,7 @@ final class Catalog(val spark: SparkSession, val database: String) {
       val matchFlag = "__graft_merge_matched"
       val tA = tgt.alias("t")
       val iA = inc.withColumn(matchFlag, lit(true)).alias("i")
-      val cond = uniqueKey.map(k => col(s"t.$k") === col(s"i.$k"))
-        .reduce(_ && _)
+      val cond = uniqueKey.map(k => col(s"t.$k") <=> col(s"i.$k")).reduce(_ && _)
       val updSet = upd.toSet
       // match alone fires the update unless a WHEN MATCHED AND
       // condition narrows it (expr over the t/i aliases)
@@ -318,10 +319,9 @@ final class Catalog(val spark: SparkSession, val database: String) {
                .otherwise(lit(null).cast(inc.schema(c).dataType))
            else lit(null).cast(inc.schema(c).dataType)).as(c)
         }: _*)
-      val inserts = inc.join(
-        tgt.select(uniqueKey.map(col): _*).distinct(), uniqueKey, "left_anti")
-      createTableAs(schema, tableName,
-        merged.unionByName(inserts, allowMissingColumns = true))
+      createTableAs(schema, tableName, merged.unionByName(
+        joinOnKey(inc, tgt, uniqueKey, "left_anti"),
+        allowMissingColumns = true))
     }
   }
 
@@ -336,6 +336,18 @@ final class Catalog(val spark: SparkSession, val database: String) {
     require(dup.isEmpty,
       s"$what has multiple rows per unique_key (${key.mkString(", ")}), " +
         s"e.g. ${dup.headOption.map(_.toString).getOrElse("")} — $why")
+  }
+
+  /** `l` joined to `r` on the `key` columns with a NULL key value
+    * matching NULL (`<=>`), the same key equality [[requireUniqueKey]]
+    * groups by; shaped like a using-join: `l`'s key columns first, then
+    * `l`'s other columns, then `r`'s other columns (none for a semi or
+    * anti join). */
+  private def joinOnKey(l: DataFrame, r: DataFrame, key: Seq[String],
+      how: String): DataFrame = {
+    val j = l.join(r, key.map(k => l(k) <=> r(k)).reduce(_ && _), how)
+    j.select(key.map(l(_)) ++ j.columns.filterNot(key.contains)
+      .map(c => j("`" + c.replace("`", "``") + "`")): _*)
   }
 
   /** Cast the columns `a` and `b` share to their widest common type,
@@ -443,8 +455,12 @@ final class Catalog(val spark: SparkSession, val database: String) {
     * (told by a match flag, so a NULL version still counts as open) or
     * its open version was just superseded. The source must be unique
     * on `key`: two rows for one key would close its version twice and
-    * open two. Key-equi-joins only, then the atomic CTAS swap — the
-    * history never self-joins on anything wider.
+    * open two. A NULL key is one key value and matches its own open
+    * version ([[joinOnKey]]), so it is versioned like any other key.
+    * Two key joins (open versions to the source, the source to the open
+    * versions), then the atomic CTAS swap — the history never
+    * self-joins on anything wider, and kept and closed versions are
+    * one projection of the first join.
     */
   private def scd2(schema: String, tableName: String, df: DataFrame,
       key: Seq[String], version: DataFrame => Column,
@@ -461,19 +477,19 @@ final class Catalog(val spark: SparkSession, val database: String) {
       val curV = open.select(key.map(col) :+ version(open).as("_cur") :+
         lit(true).as("_open"): _*)
       val superseded = coalesce(changed(col("_cur"), col("_new")), lit(false))
-      val joined = open.withColumn("_cur", version(open)).join(
+      // every open version, closed at `_at` where superseded
+      val prior = joinOnKey(open.withColumn("_cur", version(open)),
         df.select(key.map(col) :+ version(df).as("_new") :+ at(df).as("_at"): _*),
         key, "left_outer")
-      val kept = joined.filter(!superseded).drop("_cur", "_new", "_at")
-      val closed = joined.filter(superseded)
-        .withColumn("dbt_valid_to", col("_at")).drop("_cur", "_new", "_at")
-      val opens = df.join(curV, key, "left_outer")
+        .withColumn("dbt_valid_to", when(superseded, col("_at")))
+        .drop("_cur", "_new", "_at")
+      val opens = joinOnKey(df, curV, key, "left_outer")
         .withColumn("_new", version(df))
         .filter(col("_open").isNull || superseded)
         .drop("_cur", "_open", "_new")
       createTableAs(schema, tableName,
-        cur.filter(col("dbt_valid_to").isNotNull).unionByName(kept)
-          .unionByName(closed).unionByName(opened(opens)))
+        cur.filter(col("dbt_valid_to").isNotNull).unionByName(prior)
+          .unionByName(opened(opens)))
     }
   }
 

@@ -121,13 +121,13 @@ object LlmCluster extends QueryModule {
     // sorted distinct-word bag (two equivalence signals, neither
     // refines the other, so components are genuinely transitive:
     // A~B by prefix, B~C by bag ⇒ {A,B,C} one cluster). Components
-    // by iterative min-label propagation — Pregel-style, one
-    // hash-shuffle join + one combine-aggregated groupBy per round,
-    // O(component diameter) rounds (star edges keep diameters small).
-    // Each round persists its frontier and drops the previous one, so
-    // lineage and memory stay bounded; only the scalar changed-count
-    // reaches the driver. The DuckDB oracle computes the same closure
-    // with a recursive CTE.
+    // come from [[components]]: a collected union-find while the
+    // contracted graph has at most 2M edges, else min-label
+    // propagation with pointer jumping, each round cut from its
+    // lineage by an eager localCheckpoint, so the plan and pinned
+    // memory stay bounded; only the scalar changed-count reaches the
+    // driver. The DuckDB oracle computes the same closure with a
+    // recursive CTE.
     "d6_dup_clusters" -> Q(
       (s, dir) => {
         val docs = t(s, dir, "documents")

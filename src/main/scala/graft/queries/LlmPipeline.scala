@@ -221,7 +221,7 @@ object LlmPipeline extends QueryModule {
         // superset proof is unchanged). Ties at the threshold are
         // included by <=, and the |langs|-row stats join is a
         // constant-cardinality broadcast. Interleaved
-        // fresh-JVM A/B at sf100 (canary 20.6-22.7/32): this form
+        // fresh-JVM A/B at sf100 (32 cores): this form
         // 5.35/3.07 s vs the full window 8.07/7.69 s — off the weak
         // list (DuckDB 3.34 s → ~0.9-1.6x, was 2.6x).
         val docs = t(s, dir, "documents")

@@ -456,8 +456,7 @@ object LlmSim extends QueryModule {
     */
   private def verifyJaccard(cands: DataFrame, tri: DataFrame,
       thresh: Double): DataFrame = {
-    // All-inner shape (r15; D4Prof-adjudicated across three arms at
-    // sf0.1/sf10/sf100). thresh > 0 (required below) means a pair
+    // All-inner shape (r15; three arms measured at sf0.1/sf10/sf100). thresh > 0 (required below) means a pair
     // with ZERO shared shingles can never reach the output, so the
     // r8-r14 left_outer + coalesce(ni, 0) re-attach was dead
     // generality — and an expensive one: a left_outer cannot build

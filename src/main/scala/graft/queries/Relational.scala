@@ -195,7 +195,7 @@ object Relational extends QueryModule {
         // join's own hash probe pays anyway, so it only saves shuffle
         // I/O that was not the bottleneck (decomposition: liF subtree
         // 2.8 s + ordA subtree 3.4 s of 17.3 s; the residual is
-        // probe-bound, not exchange-bound). TailProf keeps the arms.
+        // probe-bound, not exchange-bound).
         val ordA = ord.select(col("o_orderkey"), col("o_custkey"))
           .join(custA, col("o_custkey") === col("c_custkey"))
           .select(col("o_orderkey"), col("n_nationkey"))

@@ -117,8 +117,7 @@ object StreamOps extends QueryModule {
             // key lives outside the relational modules. The scaled-
             // long split sum is bit-identical to the cast route
             // (DsumParitySpec) and works through the streaming state
-            // store like any sum (StreamEquivProf measures both
-            // batch-arm forms at sf100).
+            // store like any sum.
             graft.functions.Dnum.dsum(col("value"), 6).as("total_value"))
         drainToMemory(s, "graft_q39_sink", "complete", agg)
           .select(

@@ -43,4 +43,11 @@ class BenchTailSpec extends AnyFunSuite {
       assert(math.abs(got(n).asDouble - v) <= 0.005, n)
     }
   }
+
+  test("jsonString round-trips quotes, backslashes and control characters") {
+    // e.g. a peer's `python3 -c` DuckDB replay command line
+    val raw = "python3 -c \"import duckdb\tx\\y\nprint(1)\u0001\r\""
+    val doc = s"""{"peers":[${Bench.jsonString(raw)}]}"""
+    assert(new ObjectMapper().readTree(doc).get("peers").get(0).asText == raw)
+  }
 }

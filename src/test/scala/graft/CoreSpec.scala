@@ -505,6 +505,120 @@ class CatalogSpec extends AnyFunSuite {
       List((1L, "a", "2026-01-01 00:00:00", null)))
   }
 
+  /** A source holding a NULL-keyed row (payload `p`, `updated_at`
+    * `upd`) next to a non-NULL-keyed one. */
+  private def nullKeyed(p: String, upd: String) = {
+    import spark.implicits._
+    Seq((Option(1L), "a", "2026-01-01"), (Option.empty[Long], p, upd))
+      .toDF("k", "p", "updated_at")
+      .withColumn("updated_at", col("updated_at").cast("timestamp"))
+  }
+
+  /** Every row of `table`, its values comma-joined, sorted. */
+  private def rowsOf(cat: Catalog, table: String): List[String] =
+    cat.table("", table).collect().map(_.toSeq.mkString(",")).toList.sorted
+
+  test("incremental: a NULL key matches itself, a re-run is idempotent") {
+    val cat = freshCatalog("incr_null_key")
+    val src = nullKeyed("n", "2026-01-01")
+    cat.createTableIncremental("", "inn", src, Seq("k"))
+    cat.createTableIncremental("", "inn", src, Seq("k"))
+    assert(rowsOf(cat, "inn") == List("1,a,2026-01-01 00:00:00.0",
+      "null,n,2026-01-01 00:00:00.0"))
+    cat.createTableIncremental("", "inn", nullKeyed("n2", "2026-02-01"), Seq("k"))
+    assert(rowsOf(cat, "inn") == List("1,a,2026-01-01 00:00:00.0",
+      "null,n2,2026-02-01 00:00:00.0"))
+  }
+
+  test("merge: a NULL key matches itself, a re-run is idempotent") {
+    val cat = freshCatalog("merge_null_key")
+    val src = nullKeyed("n", "2026-01-01")
+    cat.createTableMerge("", "mn", src, Seq("k"))
+    cat.createTableMerge("", "mn", src, Seq("k"))
+    assert(rowsOf(cat, "mn") == List("1,a,2026-01-01 00:00:00.0",
+      "null,n,2026-01-01 00:00:00.0"))
+    cat.createTableMerge("", "mn", nullKeyed("n2", "2026-02-01"), Seq("k"))
+    assert(rowsOf(cat, "mn") == List("1,a,2026-01-01 00:00:00.0",
+      "null,n2,2026-02-01 00:00:00.0"))
+  }
+
+  test("snapshot: a NULL key keeps one open version and is versioned on change") {
+    val cat = freshCatalog("snap_null_key")
+    val src = nullKeyed("n", "2026-01-01")
+    cat.snapshot("", "sk", src, Seq("k"), "2026-01-01 00:00:00")
+    cat.snapshot("", "sk", src, Seq("k"), "2026-02-01 00:00:00")
+    assert(rowsOf(cat, "sk") == List(
+      "1,a,2026-01-01 00:00:00.0,2026-01-01 00:00:00.0,null",
+      "null,n,2026-01-01 00:00:00.0,2026-01-01 00:00:00.0,null"))
+    cat.snapshot("", "sk", nullKeyed("n2", "2026-01-01"), Seq("k"),
+      "2026-03-01 00:00:00")
+    assert(rowsOf(cat, "sk") == List(
+      "1,a,2026-01-01 00:00:00.0,2026-01-01 00:00:00.0,null",
+      "null,n,2026-01-01 00:00:00.0,2026-01-01 00:00:00.0,2026-03-01 00:00:00.0",
+      "null,n2,2026-01-01 00:00:00.0,2026-03-01 00:00:00.0,null"))
+  }
+
+  test("snapshotTimestamp: a NULL key keeps one open version and is versioned on change") {
+    val cat = freshCatalog("snap_ts_null_key")
+    val src = nullKeyed("n", "2026-01-01")
+    cat.snapshotTimestamp("", "stk", src, Seq("k"), "updated_at")
+    cat.snapshotTimestamp("", "stk", src, Seq("k"), "updated_at")
+    assert(rowsOf(cat, "stk") == List(
+      "1,a,2026-01-01 00:00:00.0,2026-01-01 00:00:00.0,null",
+      "null,n,2026-01-01 00:00:00.0,2026-01-01 00:00:00.0,null"))
+    cat.snapshotTimestamp("", "stk", nullKeyed("n2", "2026-02-01"), Seq("k"),
+      "updated_at")
+    assert(rowsOf(cat, "stk") == List(
+      "1,a,2026-01-01 00:00:00.0,2026-01-01 00:00:00.0,null",
+      "null,n,2026-01-01 00:00:00.0,2026-01-01 00:00:00.0,2026-02-01 00:00:00.0",
+      "null,n2,2026-02-01 00:00:00.0,2026-02-01 00:00:00.0,null"))
+  }
+
+  test("delete+insert and merge write plans hold no aggregate over the key") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // every node of `p`, through the AQE wrapper and its query stages
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val cat = freshCatalog("write_plans")
+    import spark.implicits._
+    val src = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+    cat.createTableIncremental("", "wi", src, Seq("k"))
+    cat.createTableMerge("", "wm", src, Seq("k"))
+    val inc = Seq((2L, "B"), (3L, "c")).toDF("k", "v")
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[Seq[SparkPlan]]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = {
+        val ns = nodes(qe.executedPlan)
+        // a keyed write joins; requireUniqueKey's collect is its own
+        // query, and the first calls' writes (which may still be on the
+        // listener bus) join nothing
+        if (ns.exists(_.isInstanceOf[DataWritingCommandExec]) &&
+            ns.exists(_.isInstanceOf[BaseJoinExec])) writes.add(ns)
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      cat.createTableIncremental("", "wi", inc, Seq("k"))
+      cat.createTableMerge("", "wm", inc, Seq("k"))
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (writes.size < 2 && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.size == 2, "one write plan per keyed-write call")
+    writes.forEach { ns =>
+      val aggs = ns.collect { case a: BaseAggregateExec => a.nodeName }
+      assert(aggs.isEmpty, s"write plan holds ${aggs.mkString(", ")}:\n${ns.head}")
+    }
+  }
+
   test("registerAll registers every schema's relations on a fresh Catalog") {
     val cat = freshCatalog("register_all")
     import spark.implicits._
