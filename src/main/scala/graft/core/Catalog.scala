@@ -235,13 +235,16 @@ final class Catalog(val spark: SparkSession, val database: String) {
       // incremental run calls): widen columns the two sides share to
       // their tightest common type (int→long, float→double, …) and let
       // either side carry columns the other lacks — the missing side
-      // backfills NULL via unionByName(allowMissingColumns). Increment
-      // columns the target never saw are appended after the existing
-      // ones, so long-lived consumers keep their ordinals.
+      // backfills NULL via unionByName(allowMissingColumns). The
+      // target's columns keep their order (the anti-join puts the key
+      // first) and increment columns the target never saw are appended
+      // after them, so long-lived consumers keep their ordinals.
       val (tgt, inc) = widenTo(table(schema, tableName), df)
-      createTableAs(schema, tableName,
-        joinOnKey(tgt, inc, uniqueKey, "left_anti")
-          .unionByName(inc, allowMissingColumns = true))
+      val rows = joinOnKey(tgt, inc, uniqueKey, "left_anti")
+        .unionByName(inc, allowMissingColumns = true)
+      createTableAs(schema, tableName, rows.select(
+        (tgt.columns.toSeq ++ rows.columns.drop(tgt.columns.length))
+          .map(byName(rows, _)): _*))
     }
   }
 
@@ -347,8 +350,13 @@ final class Catalog(val spark: SparkSession, val database: String) {
       how: String): DataFrame = {
     val j = l.join(r, key.map(k => l(k) <=> r(k)).reduce(_ && _), how)
     j.select(key.map(l(_)) ++ j.columns.filterNot(key.contains)
-      .map(c => j("`" + c.replace("`", "``") + "`")): _*)
+      .map(byName(j, _)): _*)
   }
+
+  /** Column `c` of `df`, taken by its literal name (dots and backticks
+    * quoted). */
+  private def byName(df: DataFrame, c: String): Column =
+    df("`" + c.replace("`", "``") + "`")
 
   /** Cast the columns `a` and `b` share to their widest common type,
     * leaving each side's private columns untouched. Fails loudly on

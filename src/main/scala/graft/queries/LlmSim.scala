@@ -446,13 +446,14 @@ object LlmSim extends QueryModule {
       ORDER BY a, b"""
 
   /** Exact trigram-jaccard verification of candidate pairs `(a, b)`:
-    * joins each pair's distinct STRING shingles (never the 30-bit
-    * hashes — a hash collision would silently shift the reported
-    * jaccard off the oracle grid) and keeps pairs at or above
-    * `thresh`. Cost is |candidates| × shingles-per-doc via two
-    * (doc, shingle) equi-joins — linear in the candidate count, the
-    * 100 TB-safe order of operations (exact verification never
-    * touches non-candidate pairs).
+    * joins each pair's distinct 128-bit trigram signatures `sh` (never
+    * the 30-bit `sh30`, whose collisions would shift the reported
+    * jaccard off the oracle grid; two signatures collide with ~2^-128
+    * chance, so the counts are the string-keyed oracle's) and keeps
+    * pairs at or above `thresh`. Cost is |candidates| ×
+    * shingles-per-doc via two (doc, shingle) equi-joins — linear in
+    * the candidate count, the 100 TB-safe order of operations (exact
+    * verification never touches non-candidate pairs).
     */
   private def verifyJaccard(cands: DataFrame, tri: DataFrame,
       thresh: Double): DataFrame = {
@@ -603,8 +604,8 @@ object LlmSim extends QueryModule {
   def queries: Map[String, Q] = Map(
     // ─── d2: MinHash + LSH near-dup candidates, exact-verified ───
     // Gate output = the exact-verified duplicate pairs (jaccard ≥ 0.5
-    // on string trigram shingles), which the driver's DuckDB oracle
-    // recomputes as the full all-pairs answer: banding/bucketing stays
+    // on word trigrams), which the driver's DuckDB oracle recomputes
+    // as the full all-pairs answer: banding/bucketing stays
     // engine-specific, but a full-recall candidate stage makes the
     // verified output EQUAL the exact duplicate list (r9; was
     // rows-only through r8).
@@ -627,31 +628,9 @@ object LlmSim extends QueryModule {
         val mh = tri.groupBy(col("doc_id")).agg(mhAggs.head, mhAggs.tail: _*)
         val mhArr = mh.select(col("doc_id"),
           array((0 until 16).map(i => col(s"mh_$i")): _*).as("sig"))
-        val cands = minhashCandidates(mhArr)
-        // Pre-filter floor = 2 matching minhashes of 16. With r=2
-        // banding every candidate pair already shares both minhashes
-        // of some band, so this floor drops NOTHING today — it is a
-        // guard for a future band-config change (r=1 banding would
-        // admit 1-match pairs), not a similarity screen. It must stay
-        // this loose: the gate's oracle is the exact all-pairs
-        // duplicate list, so any floor with a real miss probability
-        // for a true j ≥ 0.5 pair (e.g. ≥ 4/16, where
-        // P[Binom(16, .5) ≤ 3] ≈ 1.1e-2) is a latent gate divergence
-        // the moment a corpus has borderline pairs. Random band
-        // collisions are instead killed by the exact verify stage,
-        // whose input volume the sorted-neighborhood cap already
-        // bounds linearly (BandBoundSpec).
-        val est = cands
-          .join(mhArr.select(col("doc_id").as("a"), col("sig").as("sig_a")), "a")
-          .join(mhArr.select(col("doc_id").as("b"), col("sig").as("sig_b")), "b")
-          .withColumn("est_sim",
-            size(filter(zip_with(col("sig_a"), col("sig_b"),
-              (x, y) => x === y), m => m)).cast("double") / 16.0)
-          .filter(col("est_sim") >= 2.0 / 16.0)
-          .select(col("a"), col("b"))
         // exact-verify ONLY candidates (the 100 TB-safe order of
-        // operations), on string shingles — oracle-grid jaccard
-        verifyJaccard(est, tri, thresh = 0.5)
+        // operations): jaccard on trigram signatures, the oracle's grid
+        verifyJaccard(minhashCandidates(mhArr), tri, thresh = 0.5)
       },
       Some(dupPairsOracle), quadraticOracle = true),
 

@@ -129,9 +129,12 @@ object LlmText extends QueryModule {
     // A fixed-size sample keeps the gate O(1) in corpus size; d2 is
     // the scale path for the full corpus. doc_id < 750 is a no-op at
     // the driver's sf0.01 gate (doc_ids there stop at 499).
+    // Trigrams join as 16-byte signatures (`Q.shingles`): equal exactly
+    // when the word trigrams are, up to ~2^-128 per pair, so every
+    // count and jaccard is the string-keyed oracle's. A document with
+    // fewer than three words has no trigrams and pairs with nothing.
     "d3_ngram_jaccard" -> Q(
       (s, dir) => {
-        // word trigram shingles, distinct per doc
         val tri = Q.shingles(t(s, dir, "documents")
           .filter(col("doc_id") % 5 === 0 && col("doc_id") < 750))
         val sizes = tri.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
@@ -294,21 +297,19 @@ object LlmText extends QueryModule {
     // repetition signals large-scale curation pipelines gate on
     // (excessively repetitive documents are low-quality training
     // data). Everything is a bounded per-row array computation inside
-    // one projection — bigrams come from transform(sequence(...)) over
-    // the word array, not an explode — so there is no shuffle and at
-    // 100 TB the operator runs at scan speed like t1-t3. The two
-    // ratios are one IEEE divide + subtract on exact integer counts in
-    // both engines, so the oracle compare is bit-identical.
+    // one projection — bigrams are the 16-byte WordShingleSigs
+    // signatures of the text (equal exactly when the word bigrams are,
+    // up to ~2^-128 per pair; none below two words), not an explode —
+    // so there is no shuffle and at 100 TB the operator runs at scan
+    // speed like t1-t3. The two ratios are one IEEE divide + subtract
+    // on exact integer counts in both engines, so the oracle compare
+    // is bit-identical.
     "t8_repetition" -> Q(
       (s, dir) => {
         t(s, dir, "documents")
           .withColumn("words", split(norm(col("text")), " "))
           .withColumn("bigrams",
-            when(size(col("words")) >= 2,
-              transform(sequence(lit(0), size(col("words")) - 2),
-                i => concat(element_at(col("words"), i + 1), lit(" "),
-                  element_at(col("words"), i + 2))))
-              .otherwise(array().cast("array<string>")))
+            graft.functions.WordShingleSigs.of(lower(col("text")), 2))
           .select(col("doc_id"),
             size(col("words")).cast("long").as("n_words"),
             (lit(1.0) - size(array_distinct(col("words"))).cast("double") /

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions.{array_distinct, array_join,
   split, timestamp_micros, trim, xxhash64}
 import org.apache.spark.sql.types.LongType
 
+import graft.functions.WordShingleSigs
+
 /** One gated capability: a Spark query builder plus (optionally) the
   * equivalent ANSI SQL the driver runs in DuckDB as the oracle.
   *
@@ -104,16 +106,16 @@ object Q {
     s"md5(array_to_string(list_sort(list_distinct(string_split($nrm, ' '))), ' '))"
 
   /** Distinct word-trigram shingles `(doc_id, sh, sh30)` of each
-    * document's normalized text; `sh30` hashes the shingle into
-    * [0, 2^30). */
+    * document's text. `sh` is the trigram's 16-byte
+    * [[graft.functions.WordShingleSigs]] signature, over the words
+    * `split([[norm]](text), " ")` yields; two signatures are equal
+    * exactly when the trigrams are, up to a ~2^-128 chance per pair
+    * (both 64-bit lanes colliding). A document with fewer than three
+    * words has no trigrams, as in [[trigramOverlapSql]]. `sh30` hashes
+    * the signature into [0, 2^30). */
   def shingles(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-      split(norm(col("text")), " ").as("words"))
-      .select(col("doc_id"),
-        explode(expr(
-          """transform(sequence(0, size(words) - 3),
-               i -> concat_ws(' ', words[i], words[i+1], words[i+2]))"""))
-          .as("sh"))
+        explode(WordShingleSigs.of(lower(col("text")), 3)).as("sh"))
       .distinct()
       .withColumn("sh30", pmod(xxhash64(col("sh")), lit(1L << 30)))
 

@@ -53,4 +53,25 @@ class BandBoundSpec extends AnyFunSuite {
       assert(spurious == 0L, s"$spurious spurious background pairs")
     } finally cands.unpersist()
   }
+
+  test("every candidate shares both minhashes of some band, so 2 of 16") {
+    import spark.implicits._
+    // minhashes drawn from 4 values: random pairs often share single
+    // minhashes without sharing a band, the matches r=1 banding would
+    // admit and r=2 banding must not
+    val rnd = new scala.util.Random(7)
+    val mhArr = (0L until 300L)
+      .map(d => (d, Seq.fill(16)(rnd.nextInt(4).toLong))).toDF("doc_id", "sig")
+    val sig = mhArr.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val pairs = LlmSim.minhashCandidates(mhArr).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(pairs.nonEmpty)
+    for ((a, b) <- pairs) {
+      val (x, y) = (sig(a), sig(b))
+      assert((0 until 8).exists(j =>
+        x(2 * j) == y(2 * j) && x(2 * j + 1) == y(2 * j + 1)),
+        s"candidate ($a, $b) shares no band")
+      assert((0 until 16).count(i => x(i) == y(i)) >= 2)
+    }
+  }
 }

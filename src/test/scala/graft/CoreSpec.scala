@@ -336,6 +336,21 @@ class CatalogSpec extends AnyFunSuite {
       (3, 300L, Some("y"))))
   }
 
+  test("incremental keeps the target's column order when the key is not first") {
+    val cat = freshCatalog("incr_key_order")
+    import spark.implicits._
+    cat.createTableIncremental("", "t",
+      Seq(("a", 1), ("b", 2)).toDF("v", "k"), Seq("k"))
+    cat.createTableIncremental("", "t",
+      Seq(("B", 2), ("c", 3)).toDF("v", "k"), Seq("k"))
+    assert(cat.table("", "t").columns.toSeq == Seq("v", "k"))
+    // a drift column is appended after the target's columns
+    cat.createTableIncremental("", "t",
+      Seq((3, "C", "x")).toDF("k", "v", "w"), Seq("k"))
+    assert(cat.table("", "t").columns.toSeq == Seq("v", "k", "w"))
+    assert(rowsOf(cat, "t") == List("B,2,null", "C,3,x", "a,1,null"))
+  }
+
   test("incremental schema drift: decimal precision widens") {
     // the reference's expand_target_column_types case: decimal(12,2)
     // history + decimal(18,2) increment must evolve, not fail

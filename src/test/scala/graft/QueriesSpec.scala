@@ -52,6 +52,36 @@ class QueriesSmokeSpec extends AnyFunSuite {
     assert(sevens.getLong(1) == 1 && sevens.getLong(2) == 7L)
   }
 
+  test("d3/t8 on short documents: no shingles below n words, no exception") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_short").toString
+    // doc_ids are multiples of 5 so d3's sample keeps them all
+    Seq((0L, "the quick brown fox jumps"),
+        (5L, "The quick  brown fox sleeps"),
+        (10L, ""),
+        (15L, "hello"),
+        (20L, "hello world"),
+        (25L, "quick brown fox"))
+      .toDF("doc_id", "text")
+      .write.parquet(s"$dir/documents.parquet")
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val perDoc = graft.queries.Q.shingles(docs).groupBy("doc_id").count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(perDoc == Map(0L -> 3L, 5L -> 3L, 25L -> 1L), s"shingles: $perDoc")
+    // by hand: 0 and 5 share "the quick brown" and "quick brown fox" of
+    // 3 trigrams each; 25's one trigram is "quick brown fox"
+    val d3 = SparkEntry.queries("d3_ngram_jaccard")(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getDouble(5))).toSeq
+    assert(d3 == Seq((0L, 5L, 2L, 3L, 3L, 0.5), (0L, 25L, 1L, 3L, 1L, 1.0 / 3),
+      (5L, 25L, 1L, 3L, 1L, 1.0 / 3)), s"d3: $d3")
+    val t8 = SparkEntry.queries("t8_repetition")(spark, dir)
+      .filter(col("doc_id").isin(10L, 15L, 20L))
+      .select("doc_id", "dup_bigram_frac").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(t8 == Map(10L -> 0.0, 15L -> 0.0, 20L -> 0.0), s"t8: $t8")
+  }
+
   test("q14/q15 count 0 on an empty orders table, as count(*) does") {
     val dir = java.nio.file.Files.createTempDirectory("graft_q14").toString
     spark.read.parquet(s"${TestSpark.SF}/orders.parquet").limit(0)
