@@ -7,12 +7,14 @@ import org.apache.spark.sql.graftbridge.Bridge.exactly
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import WordBytes.{inSet, isWs, prepare}
+
 /** One-pass blocklist word counting for the t14 content filter:
   * `struct(n_words, n_flagged)` over the raw text against a
   * plan-time-constant lowercase-ASCII word set, as a codegen'd row
   * kernel (see [[Kernel]]).
   *
-  * Replaces `size(split(norm(text), " "))` +
+  * Replaces `size(Q.words(text))` +
   * `size(filter(words, w -> w IN (...)))` — a whitespace-collapsing
   * regexp_replace, a split allocation, and an interpreted lambda per
   * word (~10x vs the reference at sf10). Scan semantics are exactly
@@ -37,16 +39,6 @@ object BlockWordStats {
     StructField("n_words", LongType, nullable = false),
     StructField("n_flagged", LongType, nullable = false)))
 
-  def prepare(words: Seq[String]): Array[Array[Byte]] =
-    words.map(_.getBytes("UTF-8")).toArray
-
-  private def isWs(b: Int): Boolean =
-    b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' ||
-      b == '\r'
-
-  private def lowerAscii(b: Byte): Byte =
-    if (b >= 'A' && b <= 'Z') (b + 32).toByte else b
-
   /** Token runs + set membership in one compiled pass. Whitespace
     * detection is byte-level (the `\s` class is ASCII, and UTF-8
     * continuation/lead bytes are all >= 0x80, never ws).
@@ -62,19 +54,7 @@ object BlockWordStats {
         val start = i
         while (i < bytes.length && !isWs(bytes(i) & 0xFF)) i += 1
         nWords += 1
-        val len = i - start
-        var w = 0
-        var matched = false
-        while (!matched && w < set.length) {
-          val bw = set(w)
-          if (bw.length == len) {
-            var j = 0
-            while (j < len && lowerAscii(bytes(start + j)) == bw(j)) j += 1
-            matched = j == len
-          }
-          w += 1
-        }
-        if (matched) nFlagged += 1
+        if (inSet(bytes, start, i - start, set)) nFlagged += 1
       }
     }
     if (nWords == 0L) nWords = 1L

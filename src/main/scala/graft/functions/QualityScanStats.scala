@@ -7,6 +7,8 @@ import org.apache.spark.sql.graftbridge.Bridge.exactly
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import WordBytes.{inSet, isWs, lowerAscii, prepare}
+
 /** One-pass quality-scan counters for the t2 quality scorer:
   * `struct(n_chars, n_words, n_punct, n_stop, n_alpha, n_word_chars)`
   * over the raw text against a plan-time-constant lowercase-ASCII
@@ -21,16 +23,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * Field semantics, each matching the exact composition it replaces
   * (norm = [[graft.queries.Q.norm]] of the text):
   *   - n_chars      = length(text): UTF-8 char count of the raw text.
-  *   - n_words      = size(split(norm, " ")): maximal non-whitespace
-  *     runs (ASCII \s class; UTF-8 lead/continuation bytes are all
-  *     >= 0x80, never ws), with the empty-input edge preserved
+  *   - n_words      = size(Q.words(text)): maximal non-whitespace
+  *     runs ([[WordBytes.isWs]]), with the empty-input edge preserved
   *     (`split("", " ")` is `[""]` → floor 1) — the BlockWordStats
-  *     word-walk contract (BlockWordStats.scala:87).
+  *     word-walk contract.
   *   - n_punct      = length(text) - length(regexp_replace(text,
   *     "[.,;:!?]", "")): those six chars are ASCII, and no UTF-8
   *     multibyte char contains an ASCII byte, so the byte count IS
   *     the char count.
-  *   - n_stop       = size(filter(split(norm, " "), w => w IN set)):
+  *   - n_stop       = size(filter(Q.words(text), w => w IN set)):
   *     a word counts iff its ASCII-lowercased bytes equal a stopword
   *     (norm lowercases before membership; same corpus-ASCII caveat
   *     as BlockWordStats — no char lowercasing INTO [a-z] exists in
@@ -43,12 +44,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *     corpus, so chars survive norm unchanged; counted as UTF-8
   *     non-continuation bytes). Also = length(norm) - n_words + 1 —
   *     the t11 mean-word-length numerator.
-  *   - max_word_chars = array_max(transform(split(norm, " "),
+  *   - max_word_chars = array_max(transform(Q.words(text),
   *     w => length(w))): the longest word's char count, 0 on
   *     empty/whitespace-only input (split yields [""], length 0).
   *
-  * The corpus-ASCII caveat above is CHECKED, not just stated (ADVICE
-  * r13): CorpusInvariantSpec's data-quality gate asserts the documents
+  * The corpus-ASCII caveat above is CHECKED, not just stated:
+  * CorpusInvariantSpec's data-quality gate asserts the documents
   * corpus is pure single-byte ASCII at both gate scales, which
   * subsumes "no char case-folds into [a-z]" (U+212A KELVIN SIGN,
   * U+017F LATIN SMALL LETTER LONG S, U+0130 İ are all multibyte in
@@ -66,13 +67,6 @@ object QualityScanStats {
     StructField("n_alpha", LongType, nullable = false),
     StructField("n_word_chars", LongType, nullable = false),
     StructField("max_word_chars", LongType, nullable = false)))
-
-  private def isWs(b: Int): Boolean =
-    b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' ||
-      b == '\r'
-
-  private def lowerAscii(b: Byte): Byte =
-    if (b >= 'A' && b <= 'Z') (b + 32).toByte else b
 
   def compute(s: UTF8String, set: Array[Array[Byte]]): InternalRow = {
     val bytes = s.getBytes
@@ -109,21 +103,7 @@ object QualityScanStats {
       if (atEnd || isWs(b)) {
         if (runStart >= 0) {
           nWords += 1
-          val len = i - runStart
-          var w = 0
-          var matched = false
-          while (!matched && w < set.length) {
-            val sw = set(w)
-            if (sw.length == len) {
-              var j = 0
-              while (j < len && lowerAscii(bytes(runStart + j)) == sw(j)) {
-                j += 1
-              }
-              matched = j == len
-            }
-            w += 1
-          }
-          if (matched) nStop += 1
+          if (inSet(bytes, runStart, i - runStart, set)) nStop += 1
           if (runChars > maxWordChars) maxWordChars = runChars
           runChars = 0L
           runStart = -1
@@ -141,5 +121,5 @@ object QualityScanStats {
   /** Column-level API: `stopWords` must be lowercase ASCII. */
   def of(text: Column, stopWords: Seq[String]): Column =
     Kernel.call(this, "compute", Schema, Seq(text -> exactly(StringType)),
-      Seq(Literal.fromObject(BlockWordStats.prepare(stopWords))))
+      Seq(Literal.fromObject(prepare(stopWords))))
 }

@@ -7,6 +7,8 @@ import org.apache.spark.sql.graftbridge.Bridge.exactly
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import WordBytes.isWs
+
 /** One-pass token statistics for the t3 token-counting signal:
   * `struct(n_chars, ws_tokens, re_tokens)` over the raw text, as a
   * codegen'd row kernel (see [[Kernel]]).
@@ -17,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * quantities are defined by the regexes they replace, and the scan
   * reproduces those semantics exactly:
   *
-  *   - `ws_tokens` = `size(split(trim(text), "\\s+"))`: the number of
+  *   - `ws_tokens` = `Q.wsTokens(text)`: the number of
   *     maximal non-whitespace runs, where whitespace is Java's `\s`
   *     ASCII class `[ \t\n\x0B\f\r]` — with two split edges
   *     preserved: an empty trimmed string yields `[""]` (floor 1),
@@ -42,10 +44,6 @@ object TokenCounts {
     StructField("n_chars", LongType, nullable = false),
     StructField("ws_tokens", LongType, nullable = false),
     StructField("re_tokens", LongType, nullable = false)))
-
-  private def isWs(cp: Int): Boolean =
-    cp == ' ' || cp == '\t' || cp == '\n' || cp == 0x0B || cp == '\f' ||
-      cp == '\r'
 
   private def isLetter(cp: Int): Boolean =
     (cp >= 'A' && cp <= 'Z') || (cp >= 'a' && cp <= 'z')
@@ -89,7 +87,7 @@ object TokenCounts {
         }
       }
     }
-    // Mirror size(split(trim(text), "\s+")) exactly. trim strips only
+    // Mirror Q.wsTokens(text) exactly. trim strips only
     // ASCII 0x20 at the edges; split (limit -1) keeps BOTH a leading
     // and a trailing empty token when the trimmed string starts/ends
     // with non-space whitespace, and split("", ...) is [""].

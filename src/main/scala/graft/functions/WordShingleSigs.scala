@@ -7,6 +7,8 @@ import org.apache.spark.sql.graftbridge.Bridge.exactly
 import org.apache.spark.sql.types.{ArrayType, BinaryType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import WordBytes.isWs
+
 /** All n-word shingle signatures of a word array, as 16-byte binary
   * keys — the join/exchange currency of the contamination check (d9).
   *
@@ -35,12 +37,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * `size(words) >= 5` pre-filter of the form it replaces becomes a
   * no-op under explode.
   *
-  * TEXT MODE (r12): a `string` input is tokenized directly from its
-  * UTF-8 bytes — maximal runs of non-`\s` bytes are the words, exactly
-  * the word list `split(lower-ed text collapsed by regexp_replace +
-  * trim), " ")` produces (Java's `\s` class is 6 ASCII chars; a UTF-8
-  * continuation byte can never read as whitespace, so the byte scan is
-  * code-point-safe; non-ASCII whitespace is NOT `\s`, matching). This
+  * TEXT MODE: a `string` input is tokenized directly from its UTF-8
+  * bytes — maximal runs of non-`\s` bytes ([[WordBytes.isWs]]) are the
+  * words, exactly the word list [[graft.queries.Q.words]] yields for a
+  * lowercase text. This
   * skips the regex pass, the trimmed copy, and the per-word
   * UTF8String array that the split() form materializes per document —
   * the TokenCounts/PiiScrub move, applied to d9's normalize+shingle
@@ -127,15 +127,11 @@ object WordShingleSigs {
     combine(ha, hb, m, n)
   }
 
-  private def isWsByte(b: Int): Boolean =
-    b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' ||
-      b == '\r'
-
   /** Text mode: tokenize maximal non-`\s` byte runs and hash each run
     * in place — no word strings, no regex pass, no transient array.
     * Word-for-word identical lane hashes to the array [[compute]] over
-    * `split(trim(regexp_replace(text, "\s+", " ")), " ")` whenever the
-    * text contains at least one non-whitespace byte. When it does not,
+    * `Q.words(text)` of a lowercase text whenever the text contains at
+    * least one non-whitespace byte. When it does not,
     * the split form yields the `[""]` singleton (one empty word) while
     * text mode yields zero words — indistinguishable for n ≥ 2 (both
     * sides emit the empty sig array); only a degenerate n=1 caller on
@@ -150,11 +146,11 @@ object WordShingleSigs {
     var m = 0
     var i = 0
     while (i < len) {
-      if (isWsByte(bytes(i) & 0xFF)) i += 1
+      if (isWs(bytes(i) & 0xFF)) i += 1
       else {
         var a = OffsetA
         var b = OffsetB
-        while (i < len && !isWsByte(bytes(i) & 0xFF)) {
+        while (i < len && !isWs(bytes(i) & 0xFF)) {
           val v = bytes(i) & 0xFFL
           a = (a ^ v) * FnvPrime
           b = (b ^ (v + 0x9EL)) * FnvPrime

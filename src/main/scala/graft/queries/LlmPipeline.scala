@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * filtering when a corpus is turned into training batches).
   */
 object LlmPipeline extends QueryModule {
-  import Q.{t, norm, normSql}
+  import Q.{t, norm, normSql, words, wordsSql, wsTokens, wsTokensSql}
 
   def queries: Map[String, Q] = Map(
     // ─── t6: sequence packing (concatenate-and-chop) ───
@@ -26,7 +26,7 @@ object LlmPipeline extends QueryModule {
           .rowsBetween(Window.unboundedPreceding, -1)
         t(s, dir, "documents")
           .select(col("doc_id"), col("source"),
-            size(split(trim(col("text")), "\\s+")).cast("long").as("ntok"))
+            wsTokens(col("text")).cast("long").as("ntok"))
           .select(col("source"), col("ntok"),
             floor(coalesce(sum(col("ntok")).over(w), lit(0L)) / 2048.0)
               .as("pack_id"))
@@ -34,9 +34,9 @@ object LlmPipeline extends QueryModule {
           .agg(count(lit(1)).as("n_docs"), sum(col("ntok")).as("tok_sum"))
           .orderBy(col("source"), col("pack_id"))
       },
-      Some("""WITH toks AS (
+      Some(s"""WITH toks AS (
           SELECT doc_id, source,
-            len(string_split_regex(trim(text), '\s+')) AS ntok
+            ${wsTokensSql("text")} AS ntok
           FROM documents),
         packed AS (
           SELECT source, ntok,
@@ -134,9 +134,9 @@ object LlmPipeline extends QueryModule {
         // 16-byte keys instead of ~40-byte 5-gram strings (t10/t18's
         // exchange rule). The bench branch's doc_id filter pushes
         // below the normalize+hash projection, so the corpus-side
-        // subtree is the only full normalize+hash pass (the r11 fix
-        // for the 309 s full-plan row the r10 action surfaced).
-        // r12: text mode — the scanner tokenizes whitespace runs from
+        // subtree is the only full normalize+hash pass (without it the
+        // full-plan row read 309 s).
+        // Text mode: the scanner tokenizes whitespace runs from
         // the UTF-8 bytes directly, so the regexp_replace pass, the
         // trimmed copy and the per-doc array<string> materialization
         // are all gone (the TokenCounts move); only lower() remains
@@ -163,8 +163,7 @@ object LlmPipeline extends QueryModule {
       },
       Some(s"""WITH w AS (
           SELECT doc_id,
-            string_split($normSql,
-              ' ') AS words
+            $wordsSql AS words
           FROM documents),
         sh AS (
           SELECT doc_id,
@@ -338,7 +337,7 @@ object LlmPipeline extends QueryModule {
         // go loudly red against the string-keyed oracle rather than
         // silently skew.
         val toks = docs.select(col("doc_id"),
-          explode(split(norm(col("text")), " ")).as("w"))
+          explode(words(col("text"))).as("w"))
           .select(col("doc_id"), xxhash64(col("w")).as("w"))
         val wf = toks.groupBy(col("w")).agg(count(lit(1)).as("wf"))
         // the corpus token total is Σwf: a one-row aggregate in the same
@@ -356,7 +355,7 @@ object LlmPipeline extends QueryModule {
       },
       Some(s"""WITH toks AS (
           SELECT doc_id,
-            unnest(string_split($normSql, ' ')) AS w
+            unnest($wordsSql) AS w
           FROM documents),
         wf AS (SELECT w, count(*) AS wf FROM toks GROUP BY w),
         total AS (SELECT count(*) AS n FROM toks)
@@ -386,7 +385,7 @@ object LlmPipeline extends QueryModule {
       (s, dir) => {
         val per = t(s, dir, "documents")
           .select(col("source"),
-            size(split(trim(col("text")), "\\s+")).cast("long").as("ntok"))
+            wsTokens(col("text")).cast("long").as("ntok"))
           .groupBy(col("source"))
           .agg(count(lit(1)).as("n_docs"), sum(col("ntok")).as("tok_sum"))
         val tot = per.agg(sum(col("tok_sum")).as("total"),
@@ -401,9 +400,9 @@ object LlmPipeline extends QueryModule {
           .withColumn("sample_rate", least(lit(1.0), col("weight")))
           .orderBy(col("source"))
       },
-      Some("""WITH toks AS (
+      Some(s"""WITH toks AS (
           SELECT source,
-            len(string_split_regex(trim(text), '\s+')) AS ntok
+            ${wsTokensSql("text")} AS ntok
           FROM documents),
         per AS (
           SELECT source, count(*) AS n_docs,

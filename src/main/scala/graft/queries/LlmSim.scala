@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.DecimalType
   * single codegen'd projection (array folds, no UDFs, no shuffle).
   */
 object LlmSim extends QueryModule {
-  import Q.{t, norm, normSql, shingles}
+  import Q.{t, norm, normSql, shingles, words, wordsSql}
   import graft.functions.FloatVecDot.dot
 
   // ── deterministic coefficient tables (seeded LCG, no RNG at plan time) ──
@@ -352,7 +352,7 @@ object LlmSim extends QueryModule {
     val SPREAD = 0x000000FF000000FFL // lanes k and k+4 → 32-bit slots
     val hashed = docs
       .select(col("doc_id"),
-        posexplode(split(norm(col("text")), " ")).as(Seq("pos", "w")))
+        posexplode(words(col("text"))).as(Seq("pos", "w")))
       .select(col("doc_id"), (col("pos") / 127).cast("int").as("chk"),
         xxhash64(col("w")).as("wh"))
     val lvl1Aggs = count(lit(1)).as("cn") +: (0 until 8).map { j =>
@@ -410,11 +410,11 @@ object LlmSim extends QueryModule {
       posexplode(array((0 until 8).map { j =>
         xxhash64(col("sig")(2 * j), col("sig")(2 * j + 1))
       }: _*)).as(Seq("band", "bh")))
-    // next-8 pairing as lead() arrays in one window pass (r15; s4's
-    // trick, same rewrite as d4's exact buckets): the old form
-    // exploded 8 rank probes per row and equi-joined them back on
-    // (band, bh, rn) — a second exchange+sort of 8n rows for pairs
-    // the window already sees. Same pair set.
+    // next-8 pairing as lead() arrays in one window pass (s4's
+    // trick, as in d4's exact buckets): exploding 8 rank probes per
+    // row and equi-joining them back on (band, bh, rn) would pay a
+    // second exchange+sort of 8n rows for pairs the window already
+    // sees.
     val wb = Window.partitionBy(col("band"), col("bh"))
       .orderBy(col("doc_id"))
     nextInBucket(bands, wb, 8, col("doc_id"), "b", col("doc_id").as("a"))
@@ -436,13 +436,11 @@ object LlmSim extends QueryModule {
         SELECT min(doc_id) AS doc_id, arg_min(text, doc_id) AS text
         FROM documents
         GROUP BY md5($normSql)),
-      docs AS (SELECT doc_id, string_split($normSql, ' ') AS words
+      docs AS (SELECT doc_id, $wordsSql AS words
         FROM reps),
       ${Q.trigramOverlapSql}
-      SELECT a, b, cast(ni as double) / (sa.n + sb.n - ni) AS jaccard
-      FROM inter JOIN sizes sa ON sa.doc_id = a
-                 JOIN sizes sb ON sb.doc_id = b
-      WHERE cast(ni as double) / (sa.n + sb.n - ni) >= 0.5
+      SELECT a, b, jaccard FROM jac
+      WHERE jaccard >= 0.5
       ORDER BY a, b"""
 
   /** Exact trigram-jaccard verification of candidate pairs `(a, b)`:
@@ -457,14 +455,13 @@ object LlmSim extends QueryModule {
     */
   private def verifyJaccard(cands: DataFrame, tri: DataFrame,
       thresh: Double): DataFrame = {
-    // All-inner shape (r15; three arms measured at sf0.1/sf10/sf100). thresh > 0 (required below) means a pair
-    // with ZERO shared shingles can never reach the output, so the
-    // r8-r14 left_outer + coalesce(ni, 0) re-attach was dead
-    // generality — and an expensive one: a left_outer cannot build
-    // its left side, so the whole CANDIDATE DAG (bands/buckets,
-    // windows, distinct) executed a second time as the streamed side.
-    // With every join inner, `cands` executes once and its broadcast
-    // is reused. Two rejected variants, both measured:
+    // Every join is inner, so `cands` executes once and its broadcast
+    // is reused; that drops a pair with ZERO shared shingles, which
+    // can never reach the output when thresh > 0 (required below). A
+    // left_outer join that re-attached such pairs cannot build its
+    // left side, so the whole candidate DAG (bands/buckets, windows,
+    // distinct) executed a second time as the streamed side. Two
+    // rejected variants, both measured:
     //   - carrying per-doc sizes on the shingle rows via a window
     //     count (tri 2x instead of 4x): the two full-row
     //     Exchange+Sorts the window needs cost MORE than the two
@@ -473,22 +470,16 @@ object LlmSim extends QueryModule {
     //   - semi-filtering the shingle stream to candidate docs before
     //     the distinct: the extra materialization wave + raw-stream
     //     probe lost at sf0.1 (d2 1.9 → 4.5 s) with no sf100 payback.
-    // Same counts, same jaccard arithmetic, same output set as r8.
     require(thresh > 0,
       "verifyJaccard: inner-join form drops zero-intersection pairs, " +
         "which is only equivalent for a strictly positive threshold")
-    val sizes = tri.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val inter = cands
       .join(tri.select(col("doc_id").as("a"), col("sh")), "a")
       .join(tri.select(col("doc_id").as("b"), col("sh")), Seq("b", "sh"))
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("ni"))
-    inter
-      .join(sizes.select(col("doc_id").as("a"), col("n").as("na")), "a")
-      .join(sizes.select(col("doc_id").as("b"), col("n").as("nb")), "b")
-      .select(col("a"), col("b"),
-        (col("ni").cast("double") /
-          (col("na") + col("nb") - col("ni"))).as("jaccard"))
+    Q.jaccard(inter, tri)
+      .select(col("a"), col("b"), col("jaccard"))
       .filter(col("jaccard") >= thresh)
       .orderBy(col("a"), col("b"))
   }
@@ -607,8 +598,7 @@ object LlmSim extends QueryModule {
     // on word trigrams), which the driver's DuckDB oracle recomputes
     // as the full all-pairs answer: banding/bucketing stays
     // engine-specific, but a full-recall candidate stage makes the
-    // verified output EQUAL the exact duplicate list (r9; was
-    // rows-only through r8).
+    // verified output EQUAL the exact duplicate list.
     "d2_dedup_minhash" -> Q(
       (s, dir) => {
         // Exact duplicates are collapsed FIRST (one md5 hash-shuffle,
@@ -664,10 +654,10 @@ object LlmSim extends QueryModule {
         val wb = Window.partitionBy(col("chunk"), col("cval"))
           .orderBy(col("doc_id"))
         // next-8 pairing as lead() arrays in the SAME window pass that
-        // ranks the bucket (r15; s4's trick): the old probe form
-        // exploded 8 rank probes per row and equi-joined them back on
-        // (chunk, cval, rn) — a second full exchange+sort of 8n rows
-        // the window operator already had in hand. Same pair set.
+        // ranks the bucket (s4's trick): exploding 8 rank probes per
+        // row and equi-joining them back on (chunk, cval, rn) would
+        // pay a second full exchange+sort of 8n rows the window
+        // operator already has in hand.
         val ranked = chunks.withColumn("rn", row_number().over(wb))
         val exactBucket = nextInBucket(ranked, wb, 8,
             struct(col("doc_id"), col("simhash")), "nb",
@@ -698,14 +688,11 @@ object LlmSim extends QueryModule {
         // signature-close candidates, then the exact trigram-jaccard
         // pass (same oracle grid as d2) confirms them: the gate output
         // is the exact duplicate list, reached through the simhash
-        // index
-        // r15: hamming-filter FIRST (cheap, narrows), dedup ONCE on the
-        // projected 16-byte id pair. The old form paid a distinct
-        // exchange on (a, b, sim_a, sim_b) BEFORE the filter and a
-        // second one after the projection — and the first could not
-        // even merge a pair found by both probes (flipped attaches
-        // sims pre-swap, so the same (a,b) carried swapped sim
-        // columns). One exchange instead of two, same final set.
+        // index. The filter runs FIRST (cheap, narrows) and the one
+        // distinct runs on the projected 16-byte id pair: a distinct
+        // on (a, b, sim_a, sim_b) could not merge a pair both probes
+        // find (flipped attaches the sims before the swap, so the same
+        // (a, b) carries swapped sim columns).
         val cands = exactBucket.unionByName(flipped)
           .filter(bit_count(col("sim_a").bitwiseXOR(col("sim_b"))) <= 12)
           .select(col("a"), col("b")).distinct()

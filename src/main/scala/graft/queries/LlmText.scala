@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * arrays stay inside one projection so nothing materializes wide.
   */
 object LlmText extends QueryModule {
-  import Q.{t, norm, normSql, bagSig, bagSigSql}
+  import Q.{t, norm, normSql, bagSig, bagSigSql, words, wordsSql}
 
   /** Deterministic per-language stopword lists (from the synthetic
     * corpus vocabulary) for the language-ID heuristic.
@@ -23,6 +23,34 @@ object LlmText extends QueryModule {
     "es" -> Seq("batch", "stream", "spark", "group"))
 
   private val stoplist = Seq("the", "data", "row", "line", "key", "value")
+
+  /** Chunk width and stride of the retrieval chunker (t13, d10):
+    * 64-word chunks every 48 words, so neighbours overlap by 16. */
+  private val ChunkWords = 64
+  private val ChunkStride = 48
+
+  /** The overlapping chunks of each document's [[Q.words]]: for k = 0
+    * to (n_words - 1) / 48, chunk k is words k·48 to k·48 + 63 (the
+    * last chunks run short), as one `(…documents columns, words, k,
+    * chunk)` row each. A text without a word still has its one empty
+    * word, so one chunk. */
+  private def chunks(docs: DataFrame): DataFrame = docs
+    .withColumn("words", words(col("text")))
+    .withColumn("k", explode(sequence(lit(0),
+      floor((size(col("words")) - 1) / ChunkStride).cast("int"))))
+    .withColumn("chunk",
+      slice(col("words"), col("k") * ChunkStride + 1, lit(ChunkWords)))
+
+  /** DuckDB rendering of [[chunks]] over `documents`: CTEs ending in
+    * `chunked (doc_id, chunk_idx, start_word, chunk)`. */
+  private val chunksSql = s"""d AS (
+          SELECT doc_id, $wordsSql AS w FROM documents),
+        chunked AS (
+          SELECT doc_id, k AS chunk_idx, k * $ChunkStride AS start_word,
+            list_slice(w, k * $ChunkStride + 1,
+              k * $ChunkStride + $ChunkWords) AS chunk
+          FROM d, unnest(generate_series(0,
+            (len(w) - 1) // $ChunkStride)) AS t(k))"""
 
   def queries: Map[String, Q] = Map(
     // ─── d1: exact dedup via content fingerprints ───
@@ -137,35 +165,25 @@ object LlmText extends QueryModule {
       (s, dir) => {
         val tri = Q.shingles(t(s, dir, "documents")
           .filter(col("doc_id") % 5 === 0 && col("doc_id") < 750))
-        val sizes = tri.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
         val inter = tri.as("x").join(tri.as("y"),
             col("x.sh") === col("y.sh") && col("x.doc_id") < col("y.doc_id"))
           .groupBy(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
           .agg(count(lit(1)).as("ni"))
-        inter.join(sizes.as("sa"), col("a") === col("sa.doc_id"))
-          .join(sizes.as("sb"), col("b") === col("sb.doc_id"))
-          .select(col("a"), col("b"), col("ni"),
-            col("sa.n").as("na"), col("sb.n").as("nb"),
-            (col("ni").cast("double") /
-              (col("sa.n") + col("sb.n") - col("ni"))).as("jaccard"))
-          .orderBy(col("a"), col("b"))
+        Q.jaccard(inter, tri).orderBy(col("a"), col("b"))
       },
       Some(s"""WITH docs AS (
-          SELECT doc_id, string_split($normSql, ' ') AS words
+          SELECT doc_id, $wordsSql AS words
           FROM documents WHERE doc_id % 5 = 0 AND doc_id < 750),
         ${Q.trigramOverlapSql}
-        SELECT a, b, ni, sa.n AS na, sb.n AS nb,
-          cast(ni as double) / (sa.n + sb.n - ni) AS jaccard
-        FROM inter JOIN sizes sa ON sa.doc_id = a
-                   JOIN sizes sb ON sb.doc_id = b
+        SELECT a, b, ni, na, nb, jaccard FROM jac
         ORDER BY a, b""")),
 
     // ─── t1: language-ID heuristic (stopword scoring) ───
     "t1_langid" -> Q(
       (s, dir) => {
-        // Native per-language word-set counting since r13 (the t2/t14
-        // class): the interpreted filter-lambda ran 4x over every
-        // document's split array (14.2 s at sf100); BlockWordStats'
+        // Native per-language word-set counting (the t2/t14 class): an
+        // interpreted filter-lambda over every document's split array,
+        // 4x, took 14.2 s at sf100; BlockWordStats'
         // compiled walk has identical run+membership semantics per its
         // contract, one walk per language.
         val scored = langWords.foldLeft(t(s, dir, "documents")) {
@@ -188,7 +206,7 @@ object LlmText extends QueryModule {
       Some {
         val scoreCols = langWords.map { case (l, ws) =>
           val lst = ws.map(w => s"'$w'").mkString(", ")
-          s"len(list_filter(string_split($normSql, ' '), x -> x IN ($lst))) AS score_$l"
+          s"len(list_filter($wordsSql, x -> x IN ($lst))) AS score_$l"
         }.mkString(",\n          ")
         s"""WITH scored AS (
           SELECT doc_id, lang,
@@ -205,11 +223,10 @@ object LlmText extends QueryModule {
       }),
 
     // ─── t2: quality scoring ───
-    // Native one-pass QualityScanStats since r13: the previous form
-    // ran three corpus-wide regexp_replace passes, a split allocation,
-    // and an interpreted filter-lambda with per-word isInCollection —
-    // the t16 class the r11 ports missed because t2's 2.16x sat under
-    // the isolate threshold (28 s at sf100). Every counter the ratios
+    // Native one-pass QualityScanStats: the composition it replaces
+    // runs three corpus-wide regexp_replace passes, a split allocation,
+    // and an interpreted filter-lambda with per-word isInCollection
+    // (the t16 class; 28 s at sf100). Every counter the ratios
     // derive from comes out of one compiled byte walk; semantics
     // pinned field-by-field in the expression's scaladoc + spec.
     "t2_quality" -> Q(
@@ -241,7 +258,7 @@ object LlmText extends QueryModule {
         val lst = stoplist.map(w => s"'$w'").mkString(", ")
         s"""WITH base AS (
           SELECT doc_id, text, $normSql AS nrm,
-            string_split($normSql, ' ') AS words
+            $wordsSql AS words
           FROM documents)
         SELECT doc_id,
           length(text) AS n_chars,
@@ -266,8 +283,8 @@ object LlmText extends QueryModule {
       }),
 
     // ─── t3: token counting (whitespace + BPE-ish regex) ───
-    // Native one-pass TokenCounts since r11: the previous form
-    // materialized two split arrays plus regexp_extract_all's full
+    // Native one-pass TokenCounts: the composition it replaces
+    // materializes two split arrays plus regexp_extract_all's full
     // match list just to count it (8.4 s / 13x at sf10 under the
     // full-plan action; 0.9 s native). Counted semantics identical —
     // see the expression's scaladoc for the regex-to-scan mapping.
@@ -283,12 +300,12 @@ object LlmText extends QueryModule {
               .as("chars_per_token"))
           .orderBy(col("doc_id"))
       },
-      Some("""SELECT doc_id,
-          len(string_split_regex(trim(text), '\s+')) AS ws_tokens,
-          len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))
+      Some(s"""SELECT doc_id,
+          ${Q.wsTokensSql("text")} AS ws_tokens,
+          len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))
             AS re_tokens,
           cast(length(text) as double)
-            / len(string_split_regex(trim(text), '\s+')) AS chars_per_token
+            / ${Q.wsTokensSql("text")} AS chars_per_token
         FROM documents
         ORDER BY doc_id""")),
 
@@ -307,7 +324,7 @@ object LlmText extends QueryModule {
     "t8_repetition" -> Q(
       (s, dir) => {
         t(s, dir, "documents")
-          .withColumn("words", split(norm(col("text")), " "))
+          .withColumn("words", words(col("text")))
           .withColumn("bigrams",
             graft.functions.WordShingleSigs.of(lower(col("text")), 2))
           .select(col("doc_id"),
@@ -323,7 +340,7 @@ object LlmText extends QueryModule {
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH base AS (
-          SELECT doc_id, string_split($normSql, ' ') AS words
+          SELECT doc_id, $wordsSql AS words
           FROM documents),
         big AS (
           SELECT doc_id, words,
@@ -372,7 +389,7 @@ object LlmText extends QueryModule {
         // hot values (8-word spans are near-unique), so the window's
         // per-key partitioning is skew-safe.
         val sp = t(s, dir, "documents")
-          .withColumn("words", split(norm(col("text")), " "))
+          .withColumn("words", words(col("text")))
           .filter(size(col("words")) >= 8)
           .select(col("doc_id"),
             explode(transform(
@@ -391,7 +408,7 @@ object LlmText extends QueryModule {
           .orderBy(col("doc_id"))
       },
       Some(s"""WITH w AS (
-          SELECT doc_id, string_split($normSql, ' ') AS words
+          SELECT doc_id, $wordsSql AS words
           FROM documents),
         sp AS (
           SELECT doc_id,
@@ -422,8 +439,8 @@ object LlmText extends QueryModule {
     "t11_gopher" -> Q(
       (s, dir) => {
         val stops = Seq("the", "a", "of", "and", "to", "in")
-        // Native one-pass scan since r13 (the t2 class): the previous
-        // form ran norm+split plus TWO interpreted lambdas (filter +
+        // Native one-pass scan (the t2 class) in place of norm+split
+        // plus TWO interpreted lambdas (filter +
         // transform/array_max) per document. QualityScanStats'
         // n_word_chars IS length(nrm) - n_words + 1 (norm joins the
         // words with single spaces), and max_word_chars is the
@@ -451,7 +468,7 @@ object LlmText extends QueryModule {
       },
       Some(s"""WITH base AS (
           SELECT doc_id, $normSql AS nrm,
-            string_split($normSql, ' ') AS words
+            $wordsSql AS words
           FROM documents),
         m AS (
           SELECT doc_id,
@@ -486,7 +503,7 @@ object LlmText extends QueryModule {
     "t4_fingerprint" -> Q(
       (s, dir) => {
         t(s, dir, "documents")
-          .withColumn("words", split(norm(col("text")), " "))
+          .withColumn("words", words(col("text")))
           .filter(size(col("words")) >= 2)
           .select(col("doc_id"),
             graft.functions.RollingFingerprint.of(col("words"))
@@ -496,12 +513,12 @@ object LlmText extends QueryModule {
       },
       Some(s"""SELECT doc_id,
           list_reduce(
-            list_transform(string_split($normSql, ' '),
+            list_transform($wordsSql,
               w -> cast(('0x' || substr(md5(w), 1, 8)) as bigint)),
             (a, b) -> (a * 31 + b) % 1000000007) AS fingerprint,
-          len(string_split($normSql, ' ')) AS n_words
+          len($wordsSql) AS n_words
         FROM documents
-        WHERE len(string_split($normSql, ' ')) >= 2
+        WHERE len($wordsSql) >= 2
         ORDER BY doc_id""")),
 
     // ─── t13: overlapping document chunking (RAG / context-window
@@ -515,28 +532,19 @@ object LlmText extends QueryModule {
     // (what a downstream embedder or chunk-level dedup keys on).
     "t13_chunk_overlap" -> Q(
       (s, dir) => {
-        val W = 64
-        val H = 48
-        t(s, dir, "documents")
-          .withColumn("words", split(norm(col("text")), " "))
-          .withColumn("k", explode(sequence(lit(0),
-            floor((size(col("words")) - 1) / H).cast("int"))))
-          .withColumn("chunk", slice(col("words"), col("k") * H + 1, lit(W)))
+        chunks(t(s, dir, "documents"))
           .select(col("doc_id"),
             col("k").cast("long").as("chunk_idx"),
-            (col("k") * H).cast("long").as("start_word"),
+            (col("k") * ChunkStride).cast("long").as("start_word"),
             size(col("chunk")).cast("long").as("n_words"),
             md5(array_join(col("chunk"), " ")).as("chunk_sig"))
           .orderBy(col("doc_id"), col("chunk_idx"))
       },
-      Some(s"""WITH d AS (
-          SELECT doc_id, string_split($normSql, ' ') AS w FROM documents)
-        SELECT doc_id, k AS chunk_idx, k * 48 AS start_word,
-          cast(len(list_slice(w, k * 48 + 1, k * 48 + 64)) as bigint)
-            AS n_words,
-          md5(array_to_string(list_slice(w, k * 48 + 1, k * 48 + 64), ' '))
-            AS chunk_sig
-        FROM d, unnest(generate_series(0, (len(w) - 1) // 48)) AS t(k)
+      Some(s"""WITH $chunksSql
+        SELECT doc_id, chunk_idx, start_word,
+          cast(len(chunk) as bigint) AS n_words,
+          md5(array_to_string(chunk, ' ')) AS chunk_sig
+        FROM chunked
         ORDER BY doc_id, chunk_idx""")),
 
     // ─── d10: chunk-granular dedup (t13 chunks × d1 group-min) ───
@@ -554,18 +562,10 @@ object LlmText extends QueryModule {
     "d10_chunk_dedup" -> Q(
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
-        val W = 64
-        val H = 48
-        val chunks = t(s, dir, "documents")
-          .withColumn("words", split(norm(col("text")), " "))
-          .withColumn("k", explode(sequence(lit(0),
-            floor((size(col("words")) - 1) / H).cast("int"))))
-          .select(col("doc_id"), col("k").cast("long").as("chunk_idx"),
-            md5(array_join(
-              slice(col("words"), col("k") * H + 1, lit(W)), " "))
-              .as("sig"))
         val wSig = Window.partitionBy(col("sig"))
-        chunks
+        chunks(t(s, dir, "documents"))
+          .select(col("doc_id"), col("k").cast("long").as("chunk_idx"),
+            md5(array_join(col("chunk"), " ")).as("sig"))
           .withColumn("keep_doc", min(col("doc_id")).over(wSig))
           .withColumn("keep_idx", min(when(
             col("doc_id") === col("keep_doc"), col("chunk_idx"))).over(wSig))
@@ -576,14 +576,10 @@ object LlmText extends QueryModule {
               .as("n_dup_chunks"))
           .orderBy(col("doc_id"))
       },
-      Some(s"""WITH chunks AS (
-          SELECT doc_id, k AS chunk_idx,
-            md5(array_to_string(list_slice(
-              string_split($normSql, ' '), k * 48 + 1, k * 48 + 64), ' '))
-              AS sig
-          FROM documents,
-            unnest(generate_series(0,
-              (len(string_split($normSql, ' ')) - 1) // 48)) AS t(k)),
+      Some(s"""WITH $chunksSql,
+        chunks AS (
+          SELECT doc_id, chunk_idx, md5(array_to_string(chunk, ' ')) AS sig
+          FROM chunked),
         keep AS (
           SELECT sig, min(doc_id) AS keep_doc FROM chunks GROUP BY sig),
         keep2 AS (
@@ -608,8 +604,8 @@ object LlmText extends QueryModule {
     // bit-identical. At 100 TB a real blocklist (thousands of terms)
     // becomes a broadcast set or an Aho-Corasick expression — the
     // plan shape (narrow scan, no exchange) is already the right one.
-    // Native one-pass BlockWordStats since r11: the previous form
-    // paid a whitespace-collapsing regexp_replace, a split allocation,
+    // Native one-pass BlockWordStats: the composition it replaces
+    // pays a whitespace-collapsing regexp_replace, a split allocation,
     // and an interpreted per-word lambda (6.4 s / 10x at sf10 under
     // the full-plan action). Same run/membership semantics — see the
     // expression's scaladoc.
@@ -629,8 +625,8 @@ object LlmText extends QueryModule {
       },
       Some(s"""WITH m AS (
           SELECT doc_id,
-            len(string_split($normSql, ' ')) AS n_words,
-            len(list_filter(string_split($normSql, ' '),
+            len($wordsSql) AS n_words,
+            len(list_filter($wordsSql,
               w -> w IN ('merge', 'hash', 'stream'))) AS n_flagged
           FROM documents)
         SELECT doc_id, n_words, n_flagged,

@@ -3,8 +3,8 @@ package graft.queries
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{array_distinct, array_join,
-  array_sort, col, explode, expr, lit, lower, md5, pmod, regexp_replace,
-  split, timestamp_micros, trim, xxhash64}
+  array_sort, col, count, explode, expr, lit, lower, md5, pmod,
+  regexp_replace, size, split, timestamp_micros, trim, xxhash64}
 import org.apache.spark.sql.types.LongType
 
 import graft.functions.WordShingleSigs
@@ -96,6 +96,29 @@ object Q {
   /** DuckDB rendering of [[norm]] over the `text` column. */
   val normSql = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
 
+  /** The words of a text: [[norm]] split on single spaces, so the
+    * maximal runs of non-`\s` characters, lowercased. Every word count,
+    * word key, span and chunk reads this list, and the native word
+    * scanners in [[graft.functions]] count the same runs. A text
+    * without a non-whitespace character has one empty word (`[""]`),
+    * so a word count never reads 0. */
+  def words(c: Column): Column = split(norm(c), " ")
+
+  /** DuckDB rendering of [[words]] over the `text` column. */
+  val wordsSql = s"string_split($normSql, ' ')"
+
+  /** Whitespace-token count: the `\s+`-separated pieces of the text
+    * with its leading and trailing spaces trimmed. Unlike [[words]] it
+    * neither lowercases nor collapses: `trim` strips only spaces, so a
+    * leading or trailing tab or newline adds an empty token, and a
+    * blank text counts 1. [[graft.functions.TokenCounts]] computes the
+    * same count in its fused pass. */
+  def wsTokens(c: Column): Column = size(split(trim(c), "\\s+"))
+
+  /** DuckDB rendering of [[wsTokens]] over the column named `c`. */
+  def wsTokensSql(c: String): String =
+    s"len(string_split_regex(trim($c), '\\s+'))"
+
   /** Bag signature of a normalized text: md5 of its sorted distinct
     * words, so reordered or repeated content signs alike. */
   def bagSig(nrm: Column): Column =
@@ -107,8 +130,8 @@ object Q {
 
   /** Distinct word-trigram shingles `(doc_id, sh, sh30)` of each
     * document's text. `sh` is the trigram's 16-byte
-    * [[graft.functions.WordShingleSigs]] signature, over the words
-    * `split([[norm]](text), " ")` yields; two signatures are equal
+    * [[graft.functions.WordShingleSigs]] signature, over the
+    * [[words]] of the text; two signatures are equal
     * exactly when the trigrams are, up to a ~2^-128 chance per pair
     * (both 64-bit lanes colliding). A document with fewer than three
     * words has no trigrams, as in [[trigramOverlapSql]]. `sh30` hashes
@@ -119,10 +142,28 @@ object Q {
       .distinct()
       .withColumn("sh30", pmod(xxhash64(col("sh")), lit(1L << 30)))
 
+  /** Trigram jaccard of the pairs in `inter (a, b, ni)`, where `ni`
+    * counts the distinct shingles the pair shares, over the distinct
+    * shingles `tri (doc_id, sh)` of each side: `(a, b, ni, na, nb,
+    * jaccard)` with jaccard = ni / (na + nb - ni), one IEEE divide of
+    * exact counts. A pair missing from `inter` shares nothing and is
+    * not reported. The `jac` CTE of [[trigramOverlapSql]] is its
+    * DuckDB rendering. */
+  def jaccard(inter: DataFrame, tri: DataFrame): DataFrame = {
+    val sizes = tri.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    inter
+      .join(sizes.select(col("doc_id").as("a"), col("n").as("na")), "a")
+      .join(sizes.select(col("doc_id").as("b"), col("n").as("nb")), "b")
+      .select(col("a"), col("b"), col("ni"), col("na"), col("nb"),
+        (col("ni").cast("double") /
+          (col("na") + col("nb") - col("ni"))).as("jaccard"))
+  }
+
   /** DuckDB rendering of [[shingles]] plus their all-pairs overlap, as
     * CTEs over a caller-defined `docs (doc_id, words)`: `tri (doc_id,
-    * sh)` distinct trigrams, `sizes (doc_id, n)` and `inter (a, b, ni)`
-    * the shared-trigram count of every overlapping pair a < b. */
+    * sh)` distinct trigrams, `sizes (doc_id, n)`, `inter (a, b, ni)`
+    * the shared-trigram count of every overlapping pair a < b, and
+    * `jac (a, b, ni, na, nb, jaccard)`, the rendering of [[jaccard]]. */
   val trigramOverlapSql =
     """toks AS (SELECT doc_id, generate_subscripts(words, 1) AS pos,
                  unnest(words) AS w FROM docs),
@@ -133,7 +174,11 @@ object Q {
       sizes AS (SELECT doc_id, count(*) AS n FROM tri GROUP BY doc_id),
       inter AS (SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS ni
                 FROM tri x JOIN tri y ON x.sh = y.sh AND x.doc_id < y.doc_id
-                GROUP BY 1, 2)"""
+                GROUP BY 1, 2),
+      jac AS (SELECT a, b, ni, sa.n AS na, sb.n AS nb,
+                cast(ni as double) / (sa.n + sb.n - ni) AS jaccard
+              FROM inter JOIN sizes sa ON sa.doc_id = a
+                         JOIN sizes sb ON sb.doc_id = b)"""
 
   /** DuckDB rendering of [[graft.functions.FloatVecDot.dot]] over two
     * double components: each product rounded onto the decimal(18,15)

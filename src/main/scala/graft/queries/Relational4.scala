@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.DecimalType
   * set-ops, deterministic sampling, null-ordering semantics.
   */
 object Relational4 extends QueryModule {
-  import Q.t
+  import Q.{t, wsTokens, wsTokensSql}
 
   def queries: Map[String, Q] = Map(
     // ─── q48: ordered string aggregation + collect_set ───
@@ -314,14 +314,14 @@ object Relational4 extends QueryModule {
         nasty.select(col("id"),
             length(col("txt")).cast("long").as("txt_len"),
             upper(col("txt")).as("txt_up"),
-            size(split(trim(col("txt")), "\\s+")).cast("long").as("n_words"),
+            wsTokens(col("txt")).cast("long").as("n_words"),
             try_variant_get(try_parse_json(col("js")), "$.k", "long").as("k"),
             size(col("arr")).cast("long").as("arr_n"),
             try_element_at(col("arr"), lit(1)).as("first_el"),
             md5(coalesce(col("txt"), lit("<null>"))).as("fp"))
           .orderBy(col("id"))
       },
-      Some("""WITH nasty AS (
+      Some(s"""WITH nasty AS (
           SELECT cast(n_nationkey as bigint) AS id,
             CASE WHEN n_nationkey % 5 = 0 THEN NULL
                  WHEN n_nationkey % 5 = 1 THEN ''
@@ -344,10 +344,10 @@ object Relational4 extends QueryModule {
         SELECT id,
           cast(length(txt) as bigint) AS txt_len,
           upper(txt) AS txt_up,
-          cast(len(string_split_regex(trim(txt), '\s+')) as bigint)
+          cast(${wsTokensSql("txt")} as bigint)
             AS n_words,
           CASE WHEN json_valid(js)
-               THEN cast(json_extract_string(js, '$.k') as bigint) END AS k,
+               THEN cast(json_extract_string(js, '$$.k') as bigint) END AS k,
           cast(len(arr) as bigint) AS arr_n,
           arr[1] AS first_el,
           md5(coalesce(txt, '<null>')) AS fp

@@ -12,7 +12,8 @@ import org.apache.spark.sql.types.DecimalType
   * declarative DataFrame programs with the scale shape annotated.
   */
 object Relational5 extends QueryModule {
-  import Q.{t, events, dsumSql, norm, normSql}
+  import Q.{t, events, dsumSql, norm, normSql, words, wordsSql, wsTokens,
+    wsTokensSql}
   import graft.functions.Dnum.dsum
 
   // BM25's query terms and Okapi parameters, on both engines
@@ -28,7 +29,7 @@ object Relational5 extends QueryModule {
       dir: String): org.apache.spark.sql.DataFrame = {
     val docs = t(s, dir, "documents")
       .select(col("doc_id"),
-        split(norm(col("text")), " ").as("words"))
+        words(col("text")).as("words"))
     val len = docs.select(col("doc_id"),
       size(col("words")).cast("double").as("dl"))
     val stats = len.agg(
@@ -57,7 +58,7 @@ object Relational5 extends QueryModule {
   /** DuckDB rendering of [[bm25Scores]]: CTEs ending in `bm (doc_id,
     * bm25)`. */
   private val bm25Sql = s"""d AS (
-          SELECT doc_id, string_split($normSql, ' ') AS words
+          SELECT doc_id, $wordsSql AS words
           FROM documents),
         len AS (
           SELECT doc_id, cast(len(words) as double) AS dl FROM d),
@@ -174,7 +175,7 @@ object Relational5 extends QueryModule {
       (s, dir) => {
         val docs = t(s, dir, "documents")
           .select(col("doc_id"),
-            split(norm(col("text")), " ").as("words"))
+            words(col("text")).as("words"))
         // ONE token-stream explode: tf and the term string come out of
         // the same aggregate (min(term) rides as map-side-collapsed
         // payload — the exchange still PARTITIONS on the 16-byte
@@ -207,8 +208,7 @@ object Relational5 extends QueryModule {
       },
       Some(s"""WITH d AS (
           SELECT doc_id,
-            string_split($normSql,
-              ' ') AS words
+            $wordsSql AS words
           FROM documents),
         pairs AS (
           SELECT doc_id, w AS term, cast(count(*) as double) AS tf
@@ -246,7 +246,7 @@ object Relational5 extends QueryModule {
           col("doc_id"), col("lang"),
           md5(norm(col("text")))
             .as("sig"),
-          size(split(trim(col("text")), "\\s+")).cast("long").as("toks"),
+          wsTokens(col("text")).cast("long").as("toks"),
           (length(regexp_replace(lower(col("text")), "[^a-z]", ""))
             .cast("double") / greatest(length(col("text")), lit(1))
             .cast("double")).as("alpha"))
@@ -267,7 +267,7 @@ object Relational5 extends QueryModule {
       },
       Some(s"""SELECT count(*) AS n_docs,
           count(distinct md5($normSql)) AS n_unique,
-          cast(sum(len(string_split_regex(trim(text), '\\s+')))
+          cast(sum(${wsTokensSql("text")})
             as bigint) AS total_tokens,
           count(distinct lang) AS n_langs,
           round((count(*) - count(distinct md5($normSql)))::double
@@ -276,7 +276,7 @@ object Relational5 extends QueryModule {
               length(regexp_replace(lower(text), '[^a-z]', '', 'g'))::double
                 / greatest(length(text), 1) as decimal(18,9))) as double)
             / count(*), 6) AS mean_alpha,
-          round(sum(CASE WHEN len(string_split_regex(trim(text), '\\s+'))
+          round(sum(CASE WHEN ${wsTokensSql("text")}
               BETWEEN 5 AND 5000 THEN 1 ELSE 0 END)::double
             / count(*), 6) AS len_pass_rate
         FROM documents"""),

@@ -82,6 +82,31 @@ class QueriesSmokeSpec extends AnyFunSuite {
     assert(t8 == Map(10L -> 0.0, 15L -> 0.0, 20L -> 0.0), s"t8: $t8")
   }
 
+  test("t13/d10 chunk edge documents: empty, 1, 48, 49, 64 and 65 words") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_chunks").toString
+    def doc(n: Int) = (1 to n).map(i => s"w$i").mkString(" ")
+    Seq((1L, ""), (2L, doc(1)), (3L, doc(48)), (4L, doc(49)), (5L, doc(64)),
+        (6L, doc(65)))
+      .toDF("doc_id", "text")
+      .write.parquet(s"$dir/documents.parquet")
+    // by hand: chunk k holds words k*48+1 .. k*48+64 for k = 0 ..
+    // (n_words - 1) / 48; the empty text is one empty word, so one chunk
+    val t13 = SparkEntry.queries("t13_chunk_overlap")(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toSeq
+    assert(t13 == Seq((1L, 0L, 0L, 1L), (2L, 0L, 0L, 1L), (3L, 0L, 0L, 48L),
+      (4L, 0L, 0L, 49L), (4L, 1L, 48L, 1L), (5L, 0L, 0L, 64L),
+      (5L, 1L, 48L, 16L), (6L, 0L, 0L, 64L), (6L, 1L, 48L, 17L)),
+      s"t13: $t13")
+    // (doc_id, n_chunks, n_dup_chunks): doc 6's first chunk is words
+    // 1-64, the same chunk as doc 5's first, which survives
+    val d10 = SparkEntry.queries("d10_chunk_dedup")(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(d10 == Seq((1L, 1L, 0L), (2L, 1L, 0L), (3L, 1L, 0L), (4L, 2L, 0L),
+      (5L, 2L, 0L), (6L, 2L, 1L)), s"d10: $d10")
+  }
+
   test("q14/q15 count 0 on an empty orders table, as count(*) does") {
     val dir = java.nio.file.Files.createTempDirectory("graft_q14").toString
     spark.read.parquet(s"${TestSpark.SF}/orders.parquet").limit(0)

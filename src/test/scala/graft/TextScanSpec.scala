@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{BlockWordStats, QualityScanStats, TokenCounts}
+import graft.functions.{BlockWordStats, QualityScanStats, TokenCounts,
+  WordShingleSigs}
+import graft.queries.Q
 
 /** The codegen'd TokenCounts / BlockWordStats scans must be
   * result-identical to the regex/split/HOF compositions they replaced
@@ -174,5 +176,39 @@ class TextScanSpec extends AnyFunSuite {
     // known values: "MERGE Hash stream hashx merge." flags 3 of 5
     // (hashx doesn't match; "merge." doesn't match — punctuation)
     assert(c(3).getLong(1) == 5L && c(3).getLong(2) == 3L)
+  }
+
+  test("every word counter counts Q.words, ws_tokens counts Q.wsTokens") {
+    import spark.implicits._
+    // the edge-case strings above, plus \u000B, \f and a non-ASCII
+    // space (U+00A0, not \s, so inside a word)
+    val texts = Seq("", "   ", "a1b .. x9", "MERGE Hash stream hashx merge.",
+      "héllo wörld 漢字 merge", "\tmerge\n\nhash\r stream ", "a b\t", "\t",
+      "\t\n", "a\t ", " \t merge \n", "The data, ROW; the!! key?",
+      "\tdata\n\nvalue\r x ", "x\u000By\fz\u00A0w")
+    val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("id", "s")
+      .select(col("id"),
+        BlockWordStats.of(col("s"), block).getField("n_words"),
+        QualityScanStats.of(col("s"), stops).getField("n_words"),
+        size(WordShingleSigs.of(lower(col("s")), 1)),
+        size(Q.words(col("s"))),
+        TokenCounts.of(col("s")).getField("ws_tokens"),
+        Q.wsTokens(col("s")))
+      .orderBy(col("id")).collect()
+    assert(rows.length == texts.length)
+    rows.foreach { r =>
+      val text = texts(r.getLong(0).toInt)
+      val n = r.getInt(4)
+      assert(r.getLong(1) == n && r.getLong(2) == n,
+        s"n_words vs size(Q.words) on ${text.toSeq}: $r")
+      // a text without a non-whitespace byte is Q.words' one empty word:
+      // the counters floor at 1, the shingler has no word to sign
+      val blank = text.forall(c => " \t\n\u000B\f\r".contains(c))
+      if (blank) assert(n == 1 && r.getInt(3) == 0, s"blank ${text.toSeq}: $r")
+      else assert(r.getInt(3) == n, s"1-shingles on ${text.toSeq}: $r")
+      assert(r.getLong(5) == r.getInt(6), s"ws_tokens on ${text.toSeq}: $r")
+    }
+    assert(rows.last.getInt(4) == 3, "x, y, z\u00A0w")
   }
 }

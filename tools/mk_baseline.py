@@ -1,13 +1,9 @@
 #!/usr/bin/env python3
 """Render BASELINE.md from graft.Bench / bench_duckdb.py JSON outputs.
 
-Usage: mk_baseline.py sf1=<spark.json>,<duck.json>[,<isolated.json>]
-       [sf10=...] > BASELINE.md
+Usage: mk_baseline.py sf1=<spark.json>,<duck.json> [sf10=...] > BASELINE.md
 Local tooling; keeps the baseline document mechanically in sync with
-the measured numbers. The optional third path per SF is the
-isolate_flagged.py output (fresh-JVM 3-run medians for keys whose leg
-row was flagged as a likely throttle artifact); flagged keys then show
-BOTH columns.
+the measured numbers.
 """
 import json
 import sys
@@ -60,16 +56,6 @@ Round-12 protocol notes:
   logged, so the RATIO columns stay meaningful under host
   throttling; absolute seconds are only comparable across rounds
   when the canary trail says quiet.
-- NEW r12: after each leg pair an auto-isolate pass
-  (tools/isolate_flagged.py) re-measures every flagged key (leg
-  spread > 2 at >= 1 s, ratio > 3x at >= 2 s, or force-listed —
-  force-listed keys are isolated only when the leg median is
-  >= 1 s, so a sub-second forced key keeps its leg-only row) in
-  its own fresh JVM — untimed warm-up + 3-run median, same
-  full-plan action. Flagged rows publish BOTH columns; the leg row
-  is never replaced. r11 evidence: q1 27.1 s leg vs 5.4 s isolated,
-  q58 5.75 vs 1.25, q4 15.2 vs 4.8, m1 9.0 vs 1.55 — single-leg
-  medians misgraded plans up to 5x under host throttle.
 - Four driver gates (d2, d4, d5b, d11) verify approximate
   operators by recomputing the exact answer QUADRATICALLY in the
   oracle; they are correctness-gate-only (sf0.01) and excluded from
@@ -80,21 +66,16 @@ Round-12 protocol notes:
 Round-13 leg provenance:
 - The sf100 / sf100c / sf10 leg pairs are the r12 protocol run's own
   output (archived under bench_legs/r12/ with its canary trail): that
-  run completed those legs on r12-final code but was cut off mid-way
-  through the sf10 isolate pass and never reached sf1/sf0.1. r13
-  measured the two missing legs and the dropped sf10 isolate keys
-  with the identical method (tools/run_baseline_r13.sh,
-  /tmp/baseline_r13 + bench_legs/r13).
+  run completed those legs on r12-final code but was cut off before
+  it reached sf1/sf0.1. r13 measured the two missing legs with the
+  identical method
+  (tools/run_baseline_r13.sh, bench_legs/r13).
 - Keys changed in r13: q62 + q25 (scaled-long aggregates), q9 + q3
   (post-limit date formatting), q27 (Expand-free split aggregates),
   t1 + t2 + t11 (native word-set scans), and four c_ gate
-  verification sums. Their sf100/sf10 LEG cells (and t-keys' sf1
-  cells) are pre-change; their ISOLATED cells are fresh-JVM
-  post-change re-measurements (tools/merge_iso_r13.py names each
-  override) — for changed keys read the isolated column only.
-  sf0.1 legs ran after the first change batch; the isolate method is
-  ONE fresh JVM per key (a same-JVM 5-key batch re-check measured
-  q27 20.8 vs 15.6 isolated — cross-key JVM pollution is real).
+  verification sums. Their sf100/sf10 cells (and t-keys' sf1
+  cells) are pre-change; sf0.1 legs ran after the first change
+  batch.
 - q61_stream_join is PERMANENTLY annotated structurally
   non-comparable: the oracle is a batch join replay while the Spark
   side runs a real stateful stream-stream join (r10 RocksDB, r12
@@ -119,8 +100,7 @@ def classify(name):
     return "read"
 
 
-def section(sf, spark, duck, isolated=None):
-    isolated = isolated or {}
+def section(sf, spark, duck):
     # a failed query reports null on its side — keep it out of every
     # sum (it would crash or silently shrink the total) and call it out
     nulled = sorted(q for q in set(spark["queries"]) | set(duck["queries"])
@@ -167,32 +147,12 @@ def section(sf, spark, duck, isolated=None):
                f"{duck.get('spread', 0):.2f}. Failed queries: "
                f"{spark.get('failed', [])}.\n")
     out.append(f"\n## {sf}: per-query medians (seconds)\n")
-    if isolated:
-        out.append(
-            "Flagged keys (leg spread > 2 at >= 1 s, or ratio > 3x at\n"
-            ">= 2 s) carry an `isolated` column: a fresh-JVM warm 3-run\n"
-            "median taken right after the leg (tools/isolate_flagged.py).\n"
-            "The leg column is never replaced — when the two disagree\n"
-            "the leg row was a throttle artifact and the isolated column\n"
-            "is the plan's honest grade.\n")
-        out.append("| query | Spark | isolated | DuckDB | ratio | "
-                   "iso-ratio | category |")
-        out.append("|---|---|---|---|---|---|---|")
-        for q in common:
-            sp, du = spark["queries"][q], duck["queries"][q]
-            iso = isolated.get(q)
-            iso_s = f"{iso:.3f}" if iso is not None else ""
-            iso_r = f"{iso / max(du, 1e-9):.2f}x" if iso is not None else ""
-            out.append(f"| {q} | {sp:.3f} | {iso_s} | {du:.3f} | "
-                       f"{sp / max(du, 1e-9):.2f}x | {iso_r} "
-                       f"| {classify(q)} |")
-    else:
-        out.append("| query | Spark | DuckDB | ratio | category |")
-        out.append("|---|---|---|---|---|")
-        for q in common:
-            sp, du = spark["queries"][q], duck["queries"][q]
-            out.append(f"| {q} | {sp:.3f} | {du:.3f} "
-                       f"| {sp / max(du, 1e-9):.2f}x | {classify(q)} |")
+    out.append("| query | Spark | DuckDB | ratio | category |")
+    out.append("|---|---|---|---|---|")
+    for q in common:
+        sp, du = spark["queries"][q], duck["queries"][q]
+        out.append(f"| {q} | {sp:.3f} | {du:.3f} "
+                   f"| {sp / max(du, 1e-9):.2f}x | {classify(q)} |")
     return "\n".join(out)
 
 
@@ -200,10 +160,8 @@ def main(args):
     print(HEADER)
     for arg in args:
         sf, paths = arg.split("=")
-        parts = paths.split(",")
-        spark_p, duck_p = parts[0], parts[1]
-        iso = load(parts[2]) if len(parts) > 2 else None
-        print(section(sf, load(spark_p), load(duck_p), iso))
+        spark_p, duck_p = paths.split(",")
+        print(section(sf, load(spark_p), load(duck_p)))
 
 
 if __name__ == "__main__":
