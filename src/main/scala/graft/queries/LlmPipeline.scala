@@ -268,23 +268,21 @@ object LlmPipeline extends QueryModule {
     // Cap every source/domain at the K best documents (quality proxy:
     // n_chars desc, doc_id tiebreak) — the per-domain cap real corpus
     // pipelines apply so no single crawl domain dominates the training
-    // mixture. Runs on the native TopKIdsByScore aggregate
-    // (ObjectHashAggregate, real PARTIAL mode): each map task reduces
-    // its slice to ≤ K (score, id) pairs per source before the
-    // shuffle, so at 100 TB only |sources|·K tiny buffers cross the
-    // wire — no per-source window sort, and a pathologically hot
-    // domain costs K entries per map partition, not a skewed sort
+    // mixture. row_number() ≤ K plans as a Partial WindowGroupLimit
+    // below the exchange: each map task sorts its slice and cuts it to
+    // ≤ K rows per source before the shuffle, so a pathologically hot
+    // domain costs K rows per map partition, not a skewed sort
     // partition.
     "t9_domain_cap" -> Q(
       (s, dir) => {
-        import graft.functions.TopKIdsByScore.topkIds
+        val w = Window.partitionBy(col("source"))
+          .orderBy(col("n_chars").desc_nulls_last,
+            col("doc_id").asc_nulls_last)
         t(s, dir, "documents")
-          .groupBy(col("source"))
-          .agg(topkIds(col("n_chars").cast("double"), col("doc_id"), 10)
-            .as("ids"))
-          .select(col("source"), posexplode(col("ids")).as(Seq("pos", "doc_id")))
+          .select(col("source"), col("doc_id"), row_number().over(w).as("rn"))
+          .filter(col("rn") <= 10)
           .select(col("source"), col("doc_id"),
-            (col("pos") + 1).cast("long").as("rank"))
+            col("rn").cast("long").as("rank"))
           .orderBy(col("source"), col("rank"))
       },
       Some("""SELECT source, doc_id, rank FROM (

@@ -345,7 +345,10 @@ object LlmSim extends QueryModule {
     * HashAggregates — higher-order array folds would run interpreted
     * and re-evaluate the hash per fold; level 1's map-side combine
     * does the bulk reduction, so level 2's 33 buffers only ever see
-    * one row per 127 words.
+    * one row per 127 words. One level of 64 plain long sums per doc
+    * gives the same simhash with one exchange fewer, but does 8x the
+    * per-word aggregate updates: on 4 cores it read 34% slower over
+    * 50,000 documents (0.90 → 1.21 s median, 8 alternating runs).
     */
   private[graft] def simhash64(docs: DataFrame): DataFrame = {
     val LANES8 = 0x0101010101010101L
@@ -626,7 +629,7 @@ object LlmSim extends QueryModule {
 
     // ─── d4: SimHash near-dup (64-bit, 16-bit-chunk banding) ───
     // Signatures come from [[simhash64]] (two-level exact packed-lane
-    // majority counters, loud failure past 65,535 words); banding +
+    // majority counters, loud failure past 2^31 words); banding +
     // sorted-neighborhood candidate generation below.
     "d4_dedup_simhash" -> Q(
       (s, dir) => {

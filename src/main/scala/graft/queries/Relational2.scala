@@ -234,8 +234,8 @@ object Relational2 extends QueryModule {
     // ─── q26: exact interpolated percentiles ───
     "q26_percentiles" -> Q(
       (s, dir) => {
-        // ONE percentile buffer, not four (r15): exact percentile is a
-        // TypedImperativeAggregate whose buffer holds the whole
+        // ONE percentile buffer, not four (r15): exact percentile is an
+        // object aggregate whose buffer holds the whole
         // per-group value-count map — four separate aggregate
         // expressions (p25/p50/p75 + median, which IS
         // percentile(0.5)) built, merged, and serialized four

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
 
@@ -161,23 +162,23 @@ object Relational3 extends QueryModule {
         ) ON o_orderkey = bo_orderkey
         ORDER BY o_orderkey""")),
 
-    // ─── q46: per-group top-k via a native TypedImperativeAggregate ───
-    // ObjectHashAggregate with a real PARTIAL mode: every map task
-    // reduces its slice of the corpus to ≤ k pairs per group before
-    // the shuffle, so only |groups|·k tiny buffers per partition cross
-    // the wire — no window (whole-partition sort), no salt level, no
-    // per-row encoder decode (rounds 5-6 paid one or the other; the
-    // native update reads the two fields off the unsafe row).
+    // ─── q46: per-group top-k via row_number() ≤ k ───
+    // Spark plans the rank filter as a WindowGroupLimit in Partial mode
+    // below the exchange: every map task sorts its slice and cuts it to
+    // ≤ k rows per group before the shuffle, so only |groups|·k rows
+    // per partition cross the wire. The order is the oracle's: score
+    // desc, id asc, NULLs of either ranked last.
     "q46_topk_agg" -> Q(
       (s, dir) => {
-        import graft.functions.TopKIdsByScore.topkIds
+        val w = Window.partitionBy(col("c_nationkey"))
+          .orderBy(col("c_acctbal").desc_nulls_last,
+            col("c_custkey").asc_nulls_last)
         t(s, dir, "customer")
-          .groupBy(col("c_nationkey").cast("long").as("nationkey"))
-          .agg(topkIds(col("c_acctbal"), col("c_custkey"), 3).as("ids"))
-          .select(col("nationkey"),
-            posexplode(col("ids")).as(Seq("pos", "custkey")))
-          .select(col("nationkey"), col("custkey"),
-            (col("pos") + 1).cast("long").as("rank"))
+          .select(col("c_nationkey"), col("c_custkey"),
+            row_number().over(w).as("rn"))
+          .filter(col("rn") <= 3)
+          .select(col("c_nationkey").cast("long").as("nationkey"),
+            col("c_custkey").as("custkey"), col("rn").cast("long").as("rank"))
           .orderBy(col("nationkey"), col("rank"))
       },
       Some("""SELECT cast(c_nationkey as bigint) AS nationkey,

@@ -235,11 +235,12 @@ object Relational5 extends QueryModule {
     // size, token volume, exact-duplicate rate, language mix, and
     // quality pass-rate — as ONE job. Scale shape: a single narrow
     // scan feeds (a) a global aggregate whose partial states are a
-    // handful of counters, and (b) an exact distinct-count of the
-    // normalized-text signature (two-phase aggregate on the 16-byte
-    // md5 — d1's exchange shape, the only shuffle that grows with the
-    // corpus). Ratio means go through exact decimal sums (the q1/dsum
-    // convention) so aggregation order cannot split the hash.
+    // handful of counters and the language set, and (b) an exact
+    // distinct-count of the normalized-text signature (two-phase
+    // aggregate on the 16-byte md5 — d1's exchange shape, the only
+    // shuffle that grows with the corpus). Ratio means go through
+    // exact decimal sums (the q1/dsum convention) so aggregation
+    // order cannot split the hash.
     "t19_corpus_report" -> Q(
       (s, dir) => {
         val d = t(s, dir, "documents").select(
@@ -254,7 +255,10 @@ object Relational5 extends QueryModule {
           count(lit(1)).as("n_docs"),
           count_distinct(col("sig")).as("n_unique"),
           sum(col("toks")).as("total_tokens"),
-          count_distinct(col("lang")).as("n_langs"),
+          // a set, not a second count_distinct: with one distinct
+          // column Spark plans no Expand, whose grouping-column order
+          // varies between JVMs (the language set is tiny)
+          size(collect_set(col("lang"))).cast("long").as("n_langs"),
           round((count(lit(1)) - count_distinct(col("sig")))
             .cast("double") / count(lit(1)), 6).as("dup_rate"),
           // scale 9 exceeds lsumDec's exact-division cap (<= 6), so

@@ -8,7 +8,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
   GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.StructType
 
 import graft.queries.{Q, QueryModule}
 
@@ -68,13 +67,14 @@ object StreamOps extends QueryModule {
   }
 
   /** The one streaming file source: the parquet files under `dir`
-    * matching `glob`, read with `schema`, at most `maxFilesPerTrigger`
-    * files per micro-batch (None: everything available in one). Event
-    * streams go through [[Q.eventTs]], like the batch events read. */
-  private def source(s: SparkSession, dir: String, schema: StructType,
-      glob: String, maxFilesPerTrigger: Option[Int]): DataFrame = {
+    * matching `glob`, with the schema those files carry, at most
+    * `maxFilesPerTrigger` files per micro-batch (None: everything
+    * available in one). Event streams go through [[Q.eventTs]], like
+    * the batch events read. */
+  private def source(s: SparkSession, dir: String, glob: String,
+      maxFilesPerTrigger: Option[Int]): DataFrame = {
     val reader = s.readStream
-      .schema(schema)
+      .schema(s.read.option("pathGlobFilter", glob).parquet(dir).schema)
       .option("pathGlobFilter", glob)
     maxFilesPerTrigger.foreach(m =>
       reader.option("maxFilesPerTrigger", m.toString))
@@ -105,8 +105,7 @@ object StreamOps extends QueryModule {
   def queries: Map[String, Q] = Map(
     "q39_stream_window" -> Q(
       (s, dir) => {
-        val schema = s.read.parquet(s"$dir/events.parquet").schema
-        val agg = Q.eventTs(source(s, dir, schema, "events.parquet",
+        val agg = Q.eventTs(source(s, dir, "events.parquet",
             maxFilesPerTrigger = None))
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -138,8 +137,7 @@ object StreamOps extends QueryModule {
     "q45_stream_sessionize" -> Q(
       (s, dir) => {
         import s.implicits._
-        val schema = s.read.parquet(s"$dir/events.parquet").schema
-        val ev = Q.eventTs(source(s, dir, schema, "events.parquet",
+        val ev = Q.eventTs(source(s, dir, "events.parquet",
             maxFilesPerTrigger = None))
           .filter(col("user_id") <= 50)
           .select(col("user_id"), col("event_id"),
@@ -187,8 +185,7 @@ object StreamOps extends QueryModule {
     // survivor-invariant: the distinct-signature count, replayed as
     // batch SQL by the oracle.
     "q59_stream_dedup" -> Q(
-      (s, dir) => dedupDistinctSignatures(
-        s, dir, s"$dir/documents.parquet", "documents.parquet",
+      (s, dir) => dedupDistinctSignatures(s, dir, "documents.parquet",
         maxFilesPerTrigger = None, queryName = "graft_q59_sink"),
       Some(s"""SELECT count(distinct ${Q.bagSigSql(Q.normSql)}) AS n_unique
         FROM documents""")),
@@ -204,8 +201,8 @@ object StreamOps extends QueryModule {
     // design). Inner append-mode join; the batch-equivalent SQL is
     // the oracle, so the streamed answer must match batch exactly.
     "q61_stream_join" -> Q(
-      (s, dir) => clickPurchaseJoin(s, dir, s"$dir/events.parquet",
-        glob = "events.parquet", maxFilesPerTrigger = None,
+      (s, dir) => clickPurchaseJoin(s, dir, glob = "events.parquet",
+        maxFilesPerTrigger = None,
         watermark = "1 hour", queryName = "graft_q61_sink"),
       Some("""SELECT c.user_id, c.event_id AS click_id,
           p.event_id AS purchase_id,
@@ -229,8 +226,8 @@ object StreamOps extends QueryModule {
     // merge joins that against the state table on its key — state
     // stays key-cardinality-sized, never corpus-sized.
     "q67_stream_merge" -> Q(
-      (s, dir) => latestStateMerge(s, dir, s"$dir/events.parquet",
-        glob = "events.parquet", maxFilesPerTrigger = None,
+      (s, dir) => latestStateMerge(s, dir, glob = "events.parquet",
+        maxFilesPerTrigger = None,
         queryName = "graft_q67_sink", scratchName = "smerge"),
       Some("""SELECT user_id, epoch_us(ts) AS ts_us, event_id,
           event_type, value
@@ -251,11 +248,10 @@ object StreamOps extends QueryModule {
     * the result independent of file→batch assignment (proven under
     * one-file-per-trigger replay in StreamMergeSpec).
     */
-  def latestStateMerge(s: SparkSession, dir: String, schemaFrom: String,
-      glob: String, maxFilesPerTrigger: Option[Int], queryName: String,
+  def latestStateMerge(s: SparkSession, dir: String, glob: String,
+      maxFilesPerTrigger: Option[Int], queryName: String,
       scratchName: String): DataFrame = {
-    val schema = s.read.parquet(schemaFrom).schema
-    val ev = Q.eventTs(source(s, dir, schema, glob, maxFilesPerTrigger))
+    val ev = Q.eventTs(source(s, dir, glob, maxFilesPerTrigger))
     val cat = new graft.core.Catalog(s, Q.scratch(s, scratchName))
     cat.dropRelation("", "user_last") // deterministic across reruns
     drain(s, queryName, ev.writeStream
@@ -290,12 +286,10 @@ object StreamOps extends QueryModule {
     * micro-batch really joins a purchase arriving batches later —
     * the cross-batch state path the single-file drain can't reach.
     */
-  def clickPurchaseJoin(s: SparkSession, dir: String, schemaFrom: String,
-      glob: String, maxFilesPerTrigger: Option[Int], watermark: String,
+  def clickPurchaseJoin(s: SparkSession, dir: String, glob: String,
+      maxFilesPerTrigger: Option[Int], watermark: String,
       queryName: String, sinkDir: Option[String] = None): DataFrame = {
-    val schema = s.read.parquet(schemaFrom).schema
-    def src: DataFrame =
-      Q.eventTs(source(s, dir, schema, glob, maxFilesPerTrigger))
+    def src: DataFrame = Q.eventTs(source(s, dir, glob, maxFilesPerTrigger))
     val clicks = src.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"),
         col("event_id").as("click_id"), col("ts").as("c_ts"))
@@ -338,11 +332,9 @@ object StreamOps extends QueryModule {
     * static file the gate drains is otherwise one micro-batch, which
     * would leave the state-eviction path untested.
     */
-  def dedupDistinctSignatures(s: SparkSession, dir: String,
-      schemaFrom: String, glob: String, maxFilesPerTrigger: Option[Int],
-      queryName: String): DataFrame = {
-    val docs = source(s, dir, s.read.parquet(schemaFrom).schema, glob,
-      maxFilesPerTrigger)
+  def dedupDistinctSignatures(s: SparkSession, dir: String, glob: String,
+      maxFilesPerTrigger: Option[Int], queryName: String): DataFrame = {
+    val docs = source(s, dir, glob, maxFilesPerTrigger)
     val keyed = docs
       .withColumn("nrm", Q.norm(col("text")))
       .withColumn("bag_sig", Q.bagSig(col("nrm")))

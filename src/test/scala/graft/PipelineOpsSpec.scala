@@ -37,13 +37,11 @@ class PipelineOpsSpec extends AnyFunSuite {
       .exceptAll(expected.select(col("source"), col("doc_id"))).isEmpty)
   }
 
-  test("t9: plan is a partial-mode object-hash aggregate, not a window sort") {
+  test("t9: plan cuts each source to K rows with a Partial WindowGroupLimit below the shuffle") {
     val plan = SparkEntry.queries("t9_domain_cap")(spark, TestSpark.SF)
       .queryExecution.executedPlan.toString
-    assert(plan.contains("ObjectHashAggregate"),
-      "t9 must run on the native TypedImperativeAggregate top-k")
-    assert(!plan.contains("Window"),
-      "t9 must not fall back to a per-source window sort")
+    assert(TopKNativeSpec.partialLimitBelowShuffle(plan),
+      s"t9 must cut each map task's slice before the shuffle:\n$plan")
   }
 
   test("t10: score is replication-invariant (2x corpus, same per-doc score)") {

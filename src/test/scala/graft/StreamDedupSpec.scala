@@ -31,7 +31,7 @@ class StreamDedupSpec extends AnyFunSuite {
         " ")).as("sig"))
       .distinct().count()
 
-    val got = StreamOps.dedupDistinctSignatures(spark, tmp, tmp,
+    val got = StreamOps.dedupDistinctSignatures(spark, tmp,
         glob = "*.parquet", maxFilesPerTrigger = Some(1),
         queryName = "graft_q59_mb_sink")
       .collect()(0).getLong(0)

@@ -40,7 +40,7 @@ class StreamJoinSpec extends AnyFunSuite {
       .select(col("user_id"), col("click_id"), col("purchase_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
-    val got = StreamOps.clickPurchaseJoin(spark, tmp, tmp,
+    val got = StreamOps.clickPurchaseJoin(spark, tmp,
         glob = "*.parquet", maxFilesPerTrigger = Some(1),
         watermark = "40 days", queryName = "graft_q61_mb_sink")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -56,7 +56,7 @@ class StreamJoinSpec extends AnyFunSuite {
     // real pipeline ships with. The read-back must match batch too.
     val sink = java.nio.file.Files.createTempDirectory("graft_q61_fs")
       .toString
-    val gotFile = StreamOps.clickPurchaseJoin(spark, tmp, tmp,
+    val gotFile = StreamOps.clickPurchaseJoin(spark, tmp,
         glob = "*.parquet", maxFilesPerTrigger = Some(1),
         watermark = "40 days", queryName = "graft_q61_fs_sink",
         sinkDir = Some(sink))

@@ -84,7 +84,7 @@ class StreamMergeSpec extends AnyFunSuite {
       .select(col("user_id"), col("st.event_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-    val got = StreamOps.latestStateMerge(spark, tmp, tmp,
+    val got = StreamOps.latestStateMerge(spark, tmp,
         glob = "*.parquet", maxFilesPerTrigger = Some(1),
         queryName = "graft_q67_mb_sink", scratchName = "smerge_spec")
       .select(col("user_id"), col("event_id"))
