@@ -37,7 +37,7 @@ class PipelineOpsSpec extends AnyFunSuite {
       .exceptAll(expected.select(col("source"), col("doc_id"))).isEmpty)
   }
 
-  test("t9: plan cuts each source to K rows with a Partial WindowGroupLimit below the shuffle") {
+  test("t9: plan has a Partial WindowGroupLimit below the shuffle") {
     val plan = SparkEntry.queries("t9_domain_cap")(spark, TestSpark.SF)
       .queryExecution.executedPlan.toString
     assert(TopKNativeSpec.partialLimitBelowShuffle(plan),
