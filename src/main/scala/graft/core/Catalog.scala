@@ -520,23 +520,6 @@ final class Catalog(val spark: SparkSession, val database: String) {
     register(schema, tableName)
   }
 
-  /** Run `body` with `spark.sql.files.maxRecordsPerFile` pinned, then
-    * restore the previous value. The shuffle-free way to control
-    * output file sizing: repartition(n) before a write costs a full
-    * exchange of the table; chopping each write task's output does
-    * not. (The conf is session-scoped, hence the save/restore.)
-    */
-  def withMaxRecordsPerFile[A](records: Long)(body: => A): A = {
-    val key = "spark.sql.files.maxRecordsPerFile"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, records.toString)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   /** Compact a relation to `numFiles` part files — the maintenance op
     * a 100 TB deployment runs after many small incremental writes (the
     * small-files problem). Same atomic tmp+rename swap as CTAS.
@@ -562,84 +545,30 @@ final class Catalog(val spark: SparkSession, val database: String) {
       else table(schema, tableName)
         .repartitionByRange(numFiles, clusterCols.map(col): _*))
 
-  /** Partition-at-a-time clustered rewrite: materialize `df`
-    * hive-partitioned on `partCol`, each partition range-clustered on
-    * `clusterCols`, one partition per write job. This is how a 100 TB
-    * table actually gets compacted/clustered: the whole-table route,
-    * [[compact]] with `clusterCols`, shuffles the full table in one job
-    * (transient shuffle + tmp footprint ≈ 2-3× the table — it was the
-    * one engine gate the sf100 protocol could not fit on local disk),
-    * while here the transient scratch is bounded by ONE partition's
-    * footprint regardless of table size, partitions already in place
-    * are untouched on a re-run crash (dynamic overwrite), and the
-    * partition column prunes downstream scans on top of the row-group
-    * stats. The partition values are collected driver-side — guarded,
-    * since a high-cardinality partCol would mean one job per value.
+  /** Clustered rewrite: materialize `df` hive-partitioned on
+    * `partCol`, each partition range-clustered on `clusterCols` in
+    * about `numFilesPerPart` files, so a scan filtering on `partCol`
+    * prunes directories and one filtering on the cluster columns
+    * prunes files. One range shuffle on `partCol +: clusterCols`
+    * feeds one dynamic-overwrite write job
+    * ([[insertOverwritePartitions]]), whose own sort on `partCol`
+    * groups each task's rows by partition. As in [[compact]], rows are
+    * not sorted within a file: a sort on `partCol +: clusterCols`
+    * cannot radix-sort and, `partCol` being nearly constant per task,
+    * falls back to full-row compares (15–30% more write-stage task
+    * time on c_compact_cluster at sf1, 4 cores). NULL partition values
+    * land in Spark's hive-default directory, and a failed job leaves
+    * every existing partition as it was. Counting the distinct
+    * partition values costs one more job.
     */
   def clusterPartitions(schema: String, tableName: String, df: DataFrame,
       partCol: String, numFilesPerPart: Int,
       clusterCols: Seq[String]): Unit = {
-    createSchema(schema)
-    val parts = df.select(col(partCol)).distinct().limit(513).collect()
-      .map(_.get(0))
-    require(parts.length <= 512,
-      s"clusterPartitions('$partCol') has >512 distinct values — " +
-        "pick a coarser partition key or cluster whole-table with " +
-        "compact(…, clusterCols)")
-    val cols = clusterCols.map(c => col(c))
-    val path = relationPath(schema, tableName).toString
-    // A NULL partition value is one more partition, routed to Spark's
-    // hive-default partition directory exactly as a plain partitioned
-    // write would place it. It needs its own predicate: the equality
-    // filter below is null-safe-FALSE for null rows, which would
-    // silently drop them from the rewritten table (and sortBy(toString)
-    // on a null part value would NPE before that).
-    val (nullPart, realParts) = parts.partition(_ == null)
-    val jobs: Seq[Column] =
-      realParts.sortBy(_.toString).toSeq.map(v => col(partCol) === lit(v)) ++
-        (if (nullPart.nonEmpty) Seq(col(partCol).isNull) else Nil)
-    // r15 (guide §2.6 "overlap independent jobs"): the per-partition
-    // rewrites are independent — distinct partition values, and each
-    // dynamic-overwrite job stages under its own .spark-staging-<UUID>
-    // dir — but running them strictly sequentially left most cores
-    // idle through every job's range-exchange tail (each job only has
-    // numFilesPerPart output tasks). The pool width is 3 because r15
-    // measured it (c_compact_cluster gate at sf0.1, same-window 3-run
-    // median: 10.04 s sequential → 6.43 s with 3 jobs in flight), and
-    // 3 keeps transient scratch bounded by three partitions' footprint
-    // — still O(1) in table size. The crash property is unchanged:
-    // completed partitions stay in place and a re-run overwrites only
-    // what it recomputes.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      3.min(jobs.size.max(1)))
-    try {
-      val ec = scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val writes = jobs.map { pred =>
-        scala.concurrent.Future {
-          df.filter(pred)
-            .repartitionByRange(numFilesPerPart, cols: _*)
-            .sortWithinPartitions(cols: _*)
-            .write.mode(SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partCol)
-            .parquet(path)
-        }(ec)
-      }
-      try
-        writes.foreach(f => scala.concurrent.Await.result(
-          f, scala.concurrent.duration.Duration.Inf))
-      catch { case e: Throwable =>
-        // failure barrier (ADVICE r15): without it the exception
-        // propagates (skipping register) while queued/running writes
-        // keep mutating the table path in background threads, racing
-        // any caller cleanup or retry. shutdownNow cancels the
-        // un-started jobs; the await drains the in-flight ones.
-        pool.shutdownNow()
-        pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES)
-        throw e
-      }
-    } finally pool.shutdown()
-    register(schema, tableName)
+    val nValues = df.select(col(partCol)).distinct().count()
+    insertOverwritePartitions(schema, tableName,
+      df.repartitionByRange((numFilesPerPart * nValues).toInt.max(1),
+        (partCol +: clusterCols).map(col): _*),
+      Seq(partCol))
   }
 
   /** CSV seed ingestion (reference: impl.py load_dataframe +

@@ -7,12 +7,14 @@ import org.apache.spark.sql.graftbridge.Bridge.exactly
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import WordBytes.{inSet, isWs, lowerAscii, prepare}
+import WordBytes.{inSet, isWs, prepare}
 
 /** One-pass quality-scan counters for the t2 quality scorer:
   * `struct(n_chars, n_words, n_punct, n_stop, n_alpha, n_word_chars)`
   * over the raw text against a plan-time-constant lowercase-ASCII
-  * stopword set, as a codegen'd row kernel (see [[Kernel]]).
+  * stopword set, as a codegen'd row kernel (see [[Kernel]]). t1's
+  * per-language scores and t14's blocklist hits are the same `n_stop`
+  * walk over their own word sets.
   *
   * Replaces the t16-class interpreted pipeline the r11 ports left
   * behind in t2 (three corpus-wide regexp_replace passes, a split
@@ -25,17 +27,17 @@ import WordBytes.{inSet, isWs, lowerAscii, prepare}
   *   - n_chars      = length(text): UTF-8 char count of the raw text.
   *   - n_words      = size(Q.words(text)): maximal non-whitespace
   *     runs ([[WordBytes.isWs]]), with the empty-input edge preserved
-  *     (`split("", " ")` is `[""]` → floor 1) — the BlockWordStats
-  *     word-walk contract.
+  *     (`split("", " ")` is `[""]` → floor 1).
   *   - n_punct      = length(text) - length(regexp_replace(text,
   *     "[.,;:!?]", "")): those six chars are ASCII, and no UTF-8
   *     multibyte char contains an ASCII byte, so the byte count IS
   *     the char count.
   *   - n_stop       = size(filter(Q.words(text), w => w IN set)):
   *     a word counts iff its ASCII-lowercased bytes equal a stopword
-  *     (norm lowercases before membership; same corpus-ASCII caveat
-  *     as BlockWordStats — no char lowercasing INTO [a-z] exists in
-  *     the corpus).
+  *     (norm lowercases before membership; a Unicode char whose
+  *     lowercase maps INTO [a-z], e.g. U+017F "long s", would be
+  *     folded by Spark's `lower` and not here — no such char exists
+  *     in the corpus).
   *   - n_alpha      = length(regexp_replace(lower(text), "[^a-z]",
   *     "")): chars of lower(text) in [a-z] = raw ASCII letters under
   *     the same caveat.
@@ -68,6 +70,21 @@ object QualityScanStats {
     StructField("n_word_chars", LongType, nullable = false),
     StructField("max_word_chars", LongType, nullable = false)))
 
+  /** Per-byte class bits: the first byte of a UTF-8 char, a `\s`
+    * byte ([[WordBytes.isWs]]), one of `.,;:!?`, an ASCII letter. All
+    * but the first are ASCII, and continuation bytes are >= 0x80, so
+    * byte classes are char classes. */
+  private final val CharStart = 1
+  private final val Ws = 2
+  private final val Punct = 4
+  private final val Alpha = 8
+  private val Classes: Array[Int] = Array.tabulate(256) { b =>
+    (if ((b & 0xC0) != 0x80) CharStart else 0) |
+      (if (isWs(b)) Ws else 0) |
+      (if (".,;:!?".contains(b.toChar)) Punct else 0) |
+      (if ((b >= 'A' && b <= 'Z') || (b >= 'a' && b <= 'z')) Alpha else 0)
+  }
+
   def compute(s: UTF8String, set: Array[Array[Byte]]): InternalRow = {
     val bytes = s.getBytes
     var nChars = 0L
@@ -81,35 +98,25 @@ object QualityScanStats {
     var runStart = -1
     var i = 0
     // one pass, one trailing virtual-whitespace step to close a run.
-    // Per-byte classes are all ASCII (continuation bytes >= 0x80), so
-    // byte tests are char tests; n_word_chars counts non-ws chars —
-    // norm's collapse keeps every non-ws char 1:1, so that IS
-    // length(replace(norm, " ", "")).
+    // n_word_chars counts non-ws chars — norm's collapse keeps every
+    // non-ws char 1:1, so that IS length(replace(norm, " ", "")).
     while (i <= bytes.length) {
-      val atEnd = i == bytes.length
-      val b = if (atEnd) ' ' else bytes(i) & 0xFF
-      if (!atEnd) {
-        val isChar = (b & 0xC0) != 0x80
-        if (isChar) nChars += 1
-        if (b == '.' || b == ',' || b == ';' || b == ':' || b == '!' ||
-          b == '?') nPunct += 1
-        val lb = lowerAscii(bytes(i)) & 0xFF
-        if (lb >= 'a' && lb <= 'z') nAlpha += 1
-        if (isChar && !isWs(b)) {
-          nWordChars += 1
-          runChars += 1
-        }
-      }
-      if (atEnd || isWs(b)) {
+      val c = if (i == bytes.length) Ws else Classes(bytes(i) & 0xFF)
+      nChars += c & CharStart
+      nPunct += (c >> 2) & 1
+      nAlpha += (c >> 3) & 1
+      if ((c & Ws) != 0) {
         if (runStart >= 0) {
           nWords += 1
           if (inSet(bytes, runStart, i - runStart, set)) nStop += 1
+          nWordChars += runChars
           if (runChars > maxWordChars) maxWordChars = runChars
           runChars = 0L
           runStart = -1
         }
-      } else if (runStart < 0) {
-        runStart = i
+      } else {
+        if (runStart < 0) runStart = i
+        runChars += c & CharStart
       }
       i += 1
     }

@@ -1,7 +1,7 @@
 package graft.functions
 
-/** The byte tests the word-scanning kernels ([[BlockWordStats]],
-  * [[QualityScanStats]], [[TokenCounts]], [[WordShingleSigs]]) share,
+/** The byte tests the word-scanning kernels ([[QualityScanStats]],
+  * [[TokenCounts]], [[WordShingleSigs]]) share,
   * so they split text into the same words as
   * [[graft.queries.Q.words]]: a word is a maximal run of non-`\s`
   * bytes.

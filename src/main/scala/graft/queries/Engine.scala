@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -101,35 +101,29 @@ object Engine extends QueryModule {
         // core here; on a cluster, pick total-bytes/target-file-size):
         // compacting 60M rows into 4 files would leave 7/8 of the
         // cores idle through two full rewrites. Fragmentation is
-        // produced by chopping the write (maxRecordsPerFile), NOT by a
-        // repartition: the setup is not what the gate measures, and at
-        // sf100 that third full-table shuffle's transient files were
-        // ~13 GB of the disk budget per pass.
-        // r16: l_shipyear is materialized INTO li_frag (one int column)
-        // instead of derived per rewrite job, and the compaction pass —
-        // which already pays a full shuffle — range-clusters on ship
-        // date (guide §6). Effect: each of clusterPartitions' per-year
-        // jobs filters on a PHYSICAL column whose per-file min/max is
-        // now tight, so parquet row-group pruning reads ~1/7 of the
-        // table per job instead of scanning all 32 files seven times
-        // (the r15 plan's dominant read volume; only year-boundary
-        // files are read twice). Same rows, same 32-file assert, same
-        // clustered output, same final aggregate.
+        // produced by chopping the write with the writer's own
+        // maxRecordsPerFile option, NOT by a repartition (the setup is
+        // not what the gate measures, and a third full-table shuffle's
+        // transient files were ~13 GB of the disk budget per pass at
+        // sf100) and NOT by the session conf, which every concurrent
+        // write on the session would pick up.
+        // l_shipyear is materialized INTO li_frag (one int column), so
+        // the rewrite partitions on a stored column; the compaction
+        // pass, which already pays a full shuffle, range-clusters on
+        // ship date (guide §6).
         val li = t(s, dir, "lineitem")
           .withColumn("l_shipyear", year(col("l_shipdate")))
         val nRows = li.count()
-        cat.withMaxRecordsPerFile((nRows / 96 + 1).max(1L)) {
-          cat.createTableAs("", "li_frag", li)
-        }
+        li.write.mode(SaveMode.Overwrite)
+          .option("maxRecordsPerFile", (nRows / 96 + 1).max(1L))
+          .parquet(cat.relationPath("", "li_frag").toString)
         cat.compact("", "li_frag", 32, clusterCols = Seq("l_shipdate"))
         assert(cat.fs.listStatus(cat.relationPath("", "li_frag"))
           .count(_.getPath.getName.endsWith(".parquet")) == 32,
           "compaction must leave 32 part files")
-        // r9: partition-at-a-time clustering (ship YEAR partitions,
-        // range-clustered on ship date inside each) instead of the
-        // whole-table one-job rewrite — transient scratch is bounded
-        // by one partition, which is what let this gate finally run
-        // at sf100 (the whole-table form needed ~65 GB scratch).
+        // ship YEAR partitions, range-clustered on ship date inside
+        // each, written in one job: a filter on the year prunes
+        // directories, one on the date prunes files.
         cat.clusterPartitions("", "li_clustered",
           cat.table("", "li_frag"),
           partCol = "l_shipyear", numFilesPerPart = 8,

@@ -183,14 +183,14 @@ object LlmText extends QueryModule {
       (s, dir) => {
         // Native per-language word-set counting (the t2/t14 class): an
         // interpreted filter-lambda over every document's split array,
-        // 4x, took 14.2 s at sf100; BlockWordStats'
-        // compiled walk has identical run+membership semantics per its
+        // 4x, took 14.2 s at sf100; QualityScanStats' compiled walk
+        // counts the same words in the set (`n_stop`) per its
         // contract, one walk per language.
         val scored = langWords.foldLeft(t(s, dir, "documents")) {
           case (df, (l, ws)) =>
             df.withColumn(s"score_$l",
-              graft.functions.BlockWordStats.of(col("text"), ws)
-                .getField("n_flagged"))
+              graft.functions.QualityScanStats.of(col("text"), ws)
+                .getField("n_stop"))
         }
         scored.select(col("doc_id"), col("lang"),
             col("score_en"), col("score_de"), col("score_fr"), col("score_es"),
@@ -604,20 +604,21 @@ object LlmText extends QueryModule {
     // bit-identical. At 100 TB a real blocklist (thousands of terms)
     // becomes a broadcast set or an Aho-Corasick expression — the
     // plan shape (narrow scan, no exchange) is already the right one.
-    // Native one-pass BlockWordStats: the composition it replaces
-    // pays a whitespace-collapsing regexp_replace, a split allocation,
-    // and an interpreted per-word lambda (6.4 s / 10x at sf10 under
-    // the full-plan action). Same run/membership semantics — see the
-    // expression's scaladoc.
+    // Native one-pass QualityScanStats walk, the blocklist as its word
+    // set: the composition it replaces pays a whitespace-collapsing
+    // regexp_replace, a split allocation, and an interpreted per-word
+    // lambda (6.4 s / 10x at sf10 under the full-plan action). Same
+    // run/membership semantics (`n_words`, `n_stop`) — see the
+    // kernel's scaladoc.
     "t14_blocklist" -> Q(
       (s, dir) => {
         val block = Seq("merge", "hash", "stream")
         t(s, dir, "documents")
           .select(col("doc_id"),
-            graft.functions.BlockWordStats.of(col("text"), block).as("bs"))
+            graft.functions.QualityScanStats.of(col("text"), block).as("bs"))
           .select(col("doc_id"),
             col("bs.n_words").as("n_words"),
-            col("bs.n_flagged").as("n_flagged"))
+            col("bs.n_stop").as("n_flagged"))
           .withColumn("flag_frac",
             col("n_flagged").cast("double") / col("n_words").cast("double"))
           .withColumn("keep", col("flag_frac") <= 0.05)

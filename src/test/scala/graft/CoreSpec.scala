@@ -2,8 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 import graft.core.{Catalog, DataTests, Materialization, Model, ModelRunner}
 
@@ -837,8 +840,8 @@ class DataTestsSpec extends AnyFunSuite {
   }
 }
 
-/** Clustered materializations: the partition-at-a-time form the
-  * sf100 compaction gate runs (scratch bounded by one partition).
+/** Clustered materializations: the one-write partitioned form the
+  * compaction gate runs.
   */
 class ClusteredWriteSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -848,8 +851,8 @@ class ClusteredWriteSpec extends AnyFunSuite {
     new Catalog(spark, dir.toString)
   }
 
-  test("clusterPartitions: hive partitions, per-partition clustering, " +
-      "content parity, cardinality guard") {
+  test("clusterPartitions: hive layout, per-partition clustering, " +
+      "content parity") {
     val cat = freshCatalog("clusterpart")
     import spark.implicits._
     val df = (0 until 900).map(i => (i % 3, (i * 7919) % 1000, s"v$i"))
@@ -872,12 +875,45 @@ class ClusteredWriteSpec extends AnyFunSuite {
       .map(_.getString(0))
     assert(scanned.nonEmpty && scanned.forall(_.contains("p=1")),
       s"partition filter must prune to p=1 files: ${scanned.toSeq}")
-    // high-cardinality partition key fails loudly instead of looping
-    val wide = (0 until 600).map(i => (i, i)).toDF("p", "k")
-    val e = intercept[IllegalArgumentException] {
-      cat.clusterPartitions("", "bad", wide, "p", 1, Seq("k"))
+  }
+
+  test("clusterPartitions runs as many jobs for 6 partition values as " +
+      "for 3") {
+    val cat = freshCatalog("clusterjobs")
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(started.add)
     }
-    assert(e.getMessage.contains(">512"))
+    def jobs(nValues: Int): Int = {
+      val group = s"cluster-$nValues"
+      val df = (0 until 600).map(i => (i % nValues, (i * 7919) % 1000))
+        .toDF("p", "k")
+      sc.setJobGroup(group, "clusterPartitions job count")
+      try cat.clusterPartitions("", s"t$nValues", df, partCol = "p",
+        numFilesPerPart = 2, clusterCols = Seq("k"))
+      finally sc.clearJobGroup()
+      // the listener bus delivers in order: once a later job's start
+      // has arrived, so has every start of the group's jobs
+      sc.setJobGroup(s"$group-done", "listener flush")
+      try spark.range(1).count()
+      finally sc.clearJobGroup()
+      eventually(timeout(Span(30, Seconds))) {
+        assert(started.contains(s"$group-done"))
+      }
+      started.toArray.count(_ == group)
+    }
+    sc.addSparkListener(listener)
+    val (three, six) =
+      try (jobs(3), jobs(6))
+      finally sc.removeSparkListener(listener)
+    assert(three > 0 && three == six,
+      s"jobs with 3 partition values: $three, with 6: $six — a per-value " +
+        "write job is back")
   }
 
   test("clusterPartitions: NULL partition values route to the hive " +

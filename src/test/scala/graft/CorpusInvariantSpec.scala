@@ -31,7 +31,7 @@ class CorpusInvariantSpec extends AnyFunSuite {
         s"$sf/documents.parquet: $bad rows are null or multibyte — " +
           "the byte-offset oracles (m2/d8/t5) assume ASCII non-null " +
           "text, and the native scanners' ASCII-lowercase semantics " +
-          "(QualityScanStats/BlockWordStats n_stop/n_alpha) assume no " +
+          "(QualityScanStats n_stop/n_alpha) assume no " +
           "char case-folds into [a-z]; every such char (U+212A, " +
           "U+017F, U+0130) is multibyte, so this assertion covers both")
     }

@@ -3,13 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{BlockWordStats, QualityScanStats, TokenCounts,
-  WordShingleSigs}
+import graft.functions.{QualityScanStats, TokenCounts, WordShingleSigs}
 import graft.queries.Q
 
-/** The codegen'd TokenCounts / BlockWordStats scans must be
+/** The codegen'd TokenCounts / QualityScanStats scans must be
   * result-identical to the regex/split/HOF compositions they replaced
-  * in t3 / t14.
+  * in t3 / t14 (and t2).
   */
 class TextScanSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -41,9 +40,9 @@ class TextScanSpec extends AnyFunSuite {
           .cast("long").as("n_flagged"))
 
   private def t14Native(df: org.apache.spark.sql.DataFrame) =
-    df.select(col("id"), BlockWordStats.of(col("s"), block).as("bs"))
+    df.select(col("id"), QualityScanStats.of(col("s"), block).as("bs"))
       .select(col("id"), col("bs.n_words").as("n_words"),
-        col("bs.n_flagged").as("n_flagged"))
+        col("bs.n_stop").as("n_flagged"))
 
   private def docs = spark.read
     .parquet(s"${TestSpark.SF}/documents.parquet")
@@ -57,11 +56,11 @@ class TextScanSpec extends AnyFunSuite {
     assert(matched == n, s"TokenCounts must agree on all $n docs")
   }
 
-  test("BlockWordStats parity with the split+filter form on the corpus") {
+  test("t14 word-set counts match the split+filter form on the corpus") {
     val n = docs.count()
     val matched = t14Native(docs)
       .join(t14Interp(docs), Seq("id", "n_words", "n_flagged")).count()
-    assert(matched == n, s"BlockWordStats must agree on all $n docs")
+    assert(matched == n, s"t14's word-set counts must agree on all $n docs")
   }
 
   /** The pre-r13 t2 counter arm, verbatim (ratios derive from these). */
@@ -170,7 +169,7 @@ class TextScanSpec extends AnyFunSuite {
     }
     // null input -> null structs
     val nulls = df.filter(col("id") === 7)
-      .select(TokenCounts.of(col("s")), BlockWordStats.of(col("s"), block))
+      .select(TokenCounts.of(col("s")), QualityScanStats.of(col("s"), block))
       .collect()(0)
     assert(nulls.isNullAt(0) && nulls.isNullAt(1))
     // known values: "MERGE Hash stream hashx merge." flags 3 of 5
@@ -189,7 +188,7 @@ class TextScanSpec extends AnyFunSuite {
     val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("id", "s")
       .select(col("id"),
-        BlockWordStats.of(col("s"), block).getField("n_words"),
+        QualityScanStats.of(col("s"), block).getField("n_words"),
         QualityScanStats.of(col("s"), stops).getField("n_words"),
         size(WordShingleSigs.of(lower(col("s")), 1)),
         size(Q.words(col("s"))),
